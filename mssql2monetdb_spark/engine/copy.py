@@ -16,6 +16,13 @@ Cross-cutting semantics kept: watermark trigger skip (exit code 2), empty-
 source guard aborting the whole run before any load, truncate/drop/create
 flags, temp-table CTAS promotion, state persisted only after full success.
 
+One run resolves each file-source table once: ``do_copy`` keeps a per-run
+dict of resolved frames that the trigger probe, the extract, query-mode view
+registration and the ``count_query`` all share. The run therefore pins each
+source's file listing at its first read — rows that land mid-run are left
+for the next tick, whose probe sees them — and pays one schema inference per
+source instead of one per read. The next run resolves afresh.
+
 Exit codes: 0 = loaded, 1 = error, 2 = no new data
 (``CopyTool.java:66-68,95-106``).
 """
@@ -69,7 +76,7 @@ class CopyEngine:
             self.warehouse = JdbcWarehouse(spark, spec.sink)
 
     # -- trigger (PHASE 0, CopyTool.java:332-477) ------------------------
-    def _probe_job(self, job: CopyJob):
+    def _probe_job(self, job: CopyJob, resolved: dict[str, DataFrame] | None = None):
         src = self.spec.sources[job.source]
         table = job.trigger_table or job.from_table
         if src.format == "jdbc" and table:
@@ -115,12 +122,15 @@ class CopyEngine:
             source=job.source,
             from_table=table,
         )
-        df = read_source(self.spark, src, trigger_job)
+        df = read_source(self.spark, src, trigger_job, resolved)
         return probe_max(df, job.trigger_column)
 
-    def check_for_new_data(self) -> dict[str, object]:
+    def check_for_new_data(
+        self, resolved: dict[str, DataFrame] | None = None
+    ) -> dict[str, object]:
         """Return {job_id: probe} for triggered jobs; raise NoNewDataError
-        when every triggered job is unchanged (and at least one exists)."""
+        when every triggered job is unchanged (and at least one exists).
+        ``resolved`` is the run's memo of resolved source frames."""
         probes: dict[str, object] = {}
         triggered = [j for j in self.spec.jobs.values() if j.trigger_column]
         if not triggered:
@@ -129,7 +139,7 @@ class CopyEngine:
         for job in triggered:
             state = self.store.load(self.checksum, job.job_id)
             try:
-                probe = self._probe_job(job)
+                probe = self._probe_job(job, resolved)
             except Exception:
                 log.warning("trigger probe failed for %s — failing open", job.job_id, exc_info=True)
                 probe = None
@@ -142,9 +152,9 @@ class CopyEngine:
         return probes
 
     # -- empty guard (CopyTool.java:192-197) -----------------------------
-    def _extract(self, job: CopyJob) -> DataFrame:
+    def _extract(self, job: CopyJob, resolved: dict[str, DataFrame] | None = None) -> DataFrame:
         src = self.spec.sources[job.source]
-        df = read_source(self.spark, src, job)
+        df = read_source(self.spark, src, job, resolved)
         return normalized_dataframe(df, auto_trim=job.auto_trim)
 
     def _zorder_cluster(self, df: DataFrame, cols: tuple[str, ...]) -> DataFrame:
@@ -172,7 +182,9 @@ class CopyEngine:
         num_files = max(1, df.rdd.getNumPartitions())
         return cluster_by_zorder(df, specs, num_files=num_files)
 
-    def count_source(self, job: CopyJob, df: DataFrame) -> int:
+    def count_source(
+        self, job: CopyJob, df: DataFrame, resolved: dict[str, DataFrame] | None = None
+    ) -> int:
         """Pre-scan count (op #4, ``CopyTool.java:643-649``): the declared
         ``count_query`` (evaluated natively — reference ships it to the
         source DB, ``CopyTable.java:300-308``) when present, else df.count().
@@ -180,15 +192,18 @@ class CopyEngine:
         The job's own source views are re-registered immediately before the
         SQL runs: bare temp views are session-global, so another query-mode
         job (or a published view of the same name) could otherwise shadow
-        the relation the count targets.
+        the relation the count targets. With the run's ``resolved`` memo the
+        re-registration reuses the frames the extract resolved.
         """
         if job.count_query:
-            register_source_views(self.spark, self.spec.sources[job.source])
+            register_source_views(self.spark, self.spec.sources[job.source], resolved)
             row = self.spark.sql(job.count_query).collect()[0]
             return int(row[0])
         return df.count()
 
-    def assert_non_empty(self, frames: dict[str, DataFrame]) -> dict[str, int]:
+    def assert_non_empty(
+        self, frames: dict[str, DataFrame], resolved: dict[str, DataFrame] | None = None
+    ) -> dict[str, int]:
         """Pre-load count of every source; abort the whole run on any empty
         source unless that job allows it. The count doubles as the
         progress/validation count."""
@@ -196,7 +211,7 @@ class CopyEngine:
         empty: list[str] = []
         for job_id, df in frames.items():
             job = self.spec.jobs[job_id]
-            n = self.count_source(job, df)
+            n = self.count_source(job, df, resolved)
             counts[job_id] = n
             if n == 0 and not job.allow_empty:
                 empty.append(job_id)
@@ -238,11 +253,12 @@ class CopyEngine:
                 published[job.job_id] = physical
             return published
 
-        probes = self.check_for_new_data()
+        resolved: dict[str, DataFrame] = {}  # this run's source frames, by path
+        probes = self.check_for_new_data(resolved)
 
         # PHASE 1: extract all (plans built lazily; counts force the scans)
-        frames = {job_id: self._extract(job) for job_id, job in self.spec.jobs.items()}
-        self.assert_non_empty(frames)
+        frames = {job_id: self._extract(job, resolved) for job_id, job in self.spec.jobs.items()}
+        self.assert_non_empty(frames, resolved)
 
         # PHASE 2: load all (each job writes a new version; drop/truncate
         # flags mirror reference ops #12/#15)
@@ -260,32 +276,41 @@ class CopyEngine:
                 # fully replaces); kept as an explicit empty-write for
                 # non-versioned parity when fast view switching is off
                 pass
+            # the published version, read once: the incremental snapshot
+            # and the schema the new version evolves from
+            current = self.catalog.current_version(job.schema_name, job.to_table)
+            current_df = (
+                self.catalog.read_version(self.spark, job.schema_name, current)
+                if current is not None
+                else None
+            )
             # incremental append (trigger-filtered delta + published snapshot):
             # only rows strictly newer than the persisted watermark are read
             # from the source — the filter pushes down to the source scan —
             # and the new version is snapshot+delta (the reference re-copies
-            # the full table every run; this is the Spark-first upgrade)
+            # the full table every run; this is the Spark-first upgrade).
+            # Rows newer than this run's probe are left out as well: the
+            # probe is the watermark saved on success, so the next tick
+            # loads them — loading them now would load them twice. File
+            # sources already pin their listing at the probe; this bound
+            # covers sources that cannot, such as JDBC tables.
             reads_current = False
             if job.incremental:
+                trigger = F.col(job.trigger_column)
+                probe = probes.get(job_id)
+                if probe is not None:
+                    df = df.filter(trigger.isNull() | (trigger <= F.lit(probe.value)))
                 state = self.store.load(self.checksum, job.job_id)
-                cur = self.catalog.current_version(job.schema_name, job.to_table)
-                if state is not None and cur is not None:
-                    delta = df.filter(F.col(job.trigger_column) > F.lit(state.value))
-                    snapshot = self.spark.read.parquet(
-                        self.catalog.version_dir(job.schema_name, cur)
-                    )
-                    df = snapshot.unionByName(delta, allowMissingColumns=True)
+                if state is not None and current_df is not None:
+                    delta = df.filter(trigger > F.lit(state.value))
+                    df = current_df.unionByName(delta, allowMissingColumns=True)
                     reads_current = True
 
             # schema verify + evolve (op #14): widen the new version to the
             # union of the published schema and the incoming one so the view
             # never loses columns; incompatible retyping fails loudly
-            current = self.catalog.current_version(job.schema_name, job.to_table)
-            if current is not None:
-                published_schema = self.spark.read.parquet(
-                    self.catalog.version_dir(job.schema_name, current)
-                ).schema
-                df = evolve_to_union(df, published_schema)
+            if current_df is not None:
+                df = evolve_to_union(df, current_df.schema)
             if job.zorder_by:
                 df = self._zorder_cluster(df, job.zorder_by)
             target = job.to_table if job.use_fast_view_switching else f"tmp_{job.to_table}"
@@ -417,10 +442,11 @@ class CopyEngine:
                 published[job.job_id] = versions[0].lower()
             return published
 
-        probes = self.check_for_new_data()
+        resolved: dict[str, DataFrame] = {}  # this run's source frames, by path
+        probes = self.check_for_new_data(resolved)
 
-        frames = {job_id: self._extract(job) for job_id, job in self.spec.jobs.items()}
-        counts = self.assert_non_empty(frames)
+        frames = {job_id: self._extract(job, resolved) for job_id, job in self.spec.jobs.items()}
+        counts = self.assert_non_empty(frames, resolved)
 
         loaded: dict[str, str] = {}
         for job_id, df in frames.items():

@@ -13,6 +13,18 @@ durability and (b) ``createOrReplaceTempView`` in the live session catalog —
 both single atomic operations, so readers always see a complete version.
 At cluster scale the same protocol works on any object store that gives
 atomic single-object PUT (the manifest), with no table-lock during load.
+
+Schema sidecar: an unpartitioned ``write_version`` records the written
+frame's ``schema.json()`` as ``_SCHEMA.json`` at the version root, through
+``fs.write_atomic`` and after the parquet write has committed. When the
+file is present, ``read_version`` reads with that schema and runs no
+footer-reading inference job; when it is absent it infers as before. It is
+absent for partitioned writes (their partition-column types come from the
+directory names), for ``write_version_incremental`` versions, for versions
+written by older code, and after a crash between the data write and the
+schema write. Spark's file listing skips names starting with ``_``, so the
+sidecar is never read as data. ``mode("overwrite")`` replaces a version
+directory whole, so a sidecar never outlives the data it describes.
 """
 
 from __future__ import annotations
@@ -24,6 +36,7 @@ from dataclasses import dataclass, field
 from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from .fs import LocalFS
 
@@ -31,6 +44,8 @@ LOAD_DATE_FORMAT = "%Y_%m_%d_%H_%M_%S"  # yyyy_MM_dd_HH_mm_ss (CopyTool.java:216
 #: version suffix regex — parity with CopyTool.java:64 (_20%...)
 VERSION_RE = re.compile(r"_(20\d{2}_\d{2}_\d{2}_\d{2}_\d{2}_\d{2})$")
 RETAIN_VERSIONS = 2  # current + 1 backup (CopyTool.java:575-580)
+#: the written schema of an unpartitioned version (module docstring)
+SCHEMA_FILE = "_SCHEMA.json"
 
 
 def physical_name(table: str, load_date: datetime) -> str:
@@ -139,8 +154,12 @@ class VersionedCatalog:
         30-day events publish at sf0.1.) Callers that manage their own
         distribution (``compact()``'s ``target_files`` repartition) pass
         ``distribute=False`` so the rebalance doesn't re-shuffle over it.
+
+        An unpartitioned write also records its schema in ``_SCHEMA.json``
+        (module docstring), so reading the version back needs no inference.
         """
         physical = physical_name(table, load_date)
+        out_dir = self.version_dir(schema, physical)
         out = df
         if partition_by and distribute:
             out = out.hint("rebalance", *partition_by)
@@ -149,7 +168,9 @@ class VersionedCatalog:
         writer = out.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.parquet(self.version_dir(schema, physical))
+        writer.parquet(out_dir)
+        if not partition_by:
+            self.fs.write_atomic(os.path.join(out_dir, SCHEMA_FILE), out.schema.json())
         return physical
 
     def write_version_incremental(
@@ -304,10 +325,15 @@ class VersionedCatalog:
         """Read one physical version, stitching in carried-by-reference
         partitions (``carry_mode="manifest"``): the owned partition dirs
         plus ONE grouped partition-discovering scan per referenced host
-        version. Versions with no manifest read as a plain parquet dir."""
+        version. Versions with no manifest read as a plain parquet dir,
+        with the schema recorded in ``_SCHEMA.json`` when there is one."""
         d = self.version_dir(schema, physical)
         carried = self._carried_refs(schema, physical)
-        own = spark.read.parquet(d)
+        schema_path = os.path.join(d, SCHEMA_FILE)
+        reader = spark.read
+        if self.fs.exists(schema_path):
+            reader = reader.schema(StructType.fromJson(json.loads(self.fs.read_text(schema_path))))
+        own = reader.parquet(d)
         if not carried:
             return own
         by_host: dict[str, list[str]] = {}

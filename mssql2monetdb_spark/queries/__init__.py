@@ -35,8 +35,9 @@ from . import lifecycle  # noqa: E402,F401
 #     before the 7 exact-DECIMAL partial aggregates (queries/relational.py;
 #     DECIMAL sums are order-insensitive by construction).
 # Infra changes shared by every query this round (catalog.load_table
-# resolution memo) are covered by full 230-query drives recorded in
-# OPTIMIZATION_r12.md, per the round-11 precedent for session-wide confs.
+# resolution memo) are covered by the 50/50 window in CORRECTNESS_r12.json
+# and by the tier-1 suite, which loads every fixture through the memo;
+# tests/test_caches.py pins the memo's hits and its rewrite invalidation.
 # The remaining slots drain NEXT_WINDOW_QUEUE in verdict-age order
 # (r7-aged block first) — after this window no verdict is older than r8,
 # the round-10 directive's target.

@@ -25,7 +25,12 @@ CSV_OPTIONS = {
 }
 
 
-def read_source(spark: SparkSession, source: SourceSpec, job: CopyJob) -> DataFrame:
+def read_source(
+    spark: SparkSession,
+    source: SourceSpec,
+    job: CopyJob,
+    resolved: dict[str, DataFrame] | None = None,
+) -> DataFrame:
     """Extract phase: produce the source DataFrame for a copy job.
 
     File sources: table mode reads ``<path>/<table>.parquet`` (or csv) with
@@ -34,6 +39,9 @@ def read_source(spark: SparkSession, source: SourceSpec, job: CopyJob) -> DataFr
     (the reference ships it verbatim to the source DB —
     ``CopyToolConfig.java:856-867``; we ARE the query engine).
     JDBC sources: partitioned reads via the options builder in ``jdbc.py``.
+
+    ``resolved`` is a per-run memo of table-file path -> DataFrame (see
+    :func:`_read_table_file`); ``None`` resolves every path afresh.
     """
     mode, payload = job.select_source()
     if source.format == "jdbc":
@@ -41,44 +49,64 @@ def read_source(spark: SparkSession, source: SourceSpec, job: CopyJob) -> DataFr
 
     if mode == "table":
         table, columns = payload
-        df = _read_table_file(spark, source, table)
+        df = _read_table_file(spark, source, table, resolved)
         if columns:
             df = df.select(*columns)  # projection pushdown (CopyTable.java:314-322)
         return df
 
     # query mode: register all tables present in the source dir, then spark.sql
-    register_source_views(spark, source)
+    register_source_views(spark, source, resolved)
     return spark.sql(payload)
 
 
-def _read_table_file(spark: SparkSession, source: SourceSpec, table: str) -> DataFrame:
+def _read_table_file(
+    spark: SparkSession,
+    source: SourceSpec,
+    table: str,
+    resolved: dict[str, DataFrame] | None = None,
+) -> DataFrame:
+    """Resolve one table file. Resolving lists the files and infers the
+    schema — for parquet a footer-reading Spark job. With ``resolved`` the
+    first resolution of a path is kept and returned on every later call,
+    so one copy run lists and infers each source once and all of its reads
+    (trigger probe, extract, view registration) see the same files."""
     path = os.path.join(source.path, f"{table}.{source.format}")
+    if resolved is not None and path in resolved:
+        return resolved[path]
     if source.format == "csv":
-        return spark.read.options(**CSV_OPTIONS, inferSchema="true").csv(path)
-    if source.format == "json":
-        return spark.read.json(path)  # JSON-lines
-    if source.format == "orc":
-        return spark.read.orc(path)
-    return spark.read.parquet(path)
+        df = spark.read.options(**CSV_OPTIONS, inferSchema="true").csv(path)
+    elif source.format == "json":
+        df = spark.read.json(path)  # JSON-lines
+    elif source.format == "orc":
+        df = spark.read.orc(path)
+    else:
+        df = spark.read.parquet(path)
+    if resolved is not None:
+        resolved[path] = df
+    return df
 
 
-def register_source_views(spark: SparkSession, source: SourceSpec) -> None:
+def register_source_views(
+    spark: SparkSession,
+    source: SourceSpec,
+    resolved: dict[str, DataFrame] | None = None,
+) -> None:
     """(Re-)register every table file in a file source dir as a temp view.
 
     Temp views are session-global and bare-named (the job SQL references bare
     table names, reference ``CopyToolConfig.java:856-867``), so two query-mode
     sources with same-named tables shadow each other. Any SQL evaluated
     against a source (extract query, count_query) must call this immediately
-    beforehand so the views it sees are *this* source's.
+    beforehand so the views it sees are *this* source's. ``resolved`` is
+    passed to :func:`_read_table_file`.
     """
     if source.format == "jdbc":
         return
     suffix = f".{source.format}"
     for fname in sorted(os.listdir(source.path)):
         if fname.endswith(suffix):
-            _read_table_file(spark, source, fname[: -len(suffix)]).createOrReplaceTempView(
-                fname[: -len(suffix)]
-            )
+            table = fname[: -len(suffix)]
+            _read_table_file(spark, source, table, resolved).createOrReplaceTempView(table)
 
 
 def write_csv_compat(df: DataFrame, path: str) -> None:

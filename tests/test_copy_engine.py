@@ -720,6 +720,18 @@ def test_versioned_catalog_on_hadoop_fs(spark, tmp_path):
     assert cat.current_version("default", "t") == p1
     assert cat.table_at(spark, "default", "t").count() == 2
 
+    # unpartitioned write: the _SCHEMA.json sidecar goes through the store
+    # (a POSIX open() of a file:// URI would fail) and the read uses it
+    from mssql2monetdb_spark.engine.publish import SCHEMA_FILE
+
+    pu = cat.write_version(df1, "default", "u", datetime(2024, 6, 1))
+    sidecar = f"{cat.version_dir('default', pu)}/{SCHEMA_FILE}"
+    assert cat.fs.exists(sidecar)
+    assert cat.fs.read_text(sidecar) == df1.schema.json()
+    cat.publish(spark, "default", "u", pu)
+    assert sorted(cat.table_at(spark, "default", "u").collect()) == sorted(df1.collect())
+    cat.drop_table(spark, "default", "u")
+
     # incremental carry, auto mode: HadoopFS.link raises -> copies
     df2 = spark.createDataFrame([(3, "c", 1)], "k bigint, s string, b int")
     p2 = cat.write_version_incremental(
@@ -793,3 +805,231 @@ def test_hadoop_fs_write_atomic_falls_back_without_abstract_fs(spark, tmp_path):
         hfs._jvm = real_jvm
     assert hfs.read_text(f"{uri}/m.json") == '{"v": 2}'
     assert not hfs.exists(f"{uri}/m.json.tmp")
+
+
+def _append_rows(spark, path, lo, hi):
+    spark.range(lo, hi).selectExpr("id AS seq", "id * 2 AS v").write.mode("append").parquet(path)
+
+
+def test_rows_landing_after_the_probe_load_once(spark, tmp_path, monkeypatch):
+    """Rows appended between the trigger probe and the extract belong to
+    the NEXT tick: this tick saves the probe as its watermark, so loading
+    them now would load them again next tick (duplicate rows)."""
+    src = str(tmp_path / "src" / "ev.parquet")
+    _append_rows(spark, src, 0, 10)
+    spec = load_spec(
+        {
+            "warehouse_dir": str(tmp_path / "wh"),
+            "state_dir": str(tmp_path / "state"),
+            "sources": {"_default": {"format": "parquet", "path": str(tmp_path / "src")}},
+            "tables": {"ev": {"from_table": "ev", "trigger": {"column": "seq"}, "incremental": True}},
+        }
+    )
+    engine = CopyEngine(spark, spec)
+    assert engine.run(load_date=datetime(2024, 1, 1)) == EXIT_OK
+
+    _append_rows(spark, src, 10, 15)
+    probe_only = engine.check_for_new_data
+
+    def probe_then_append(*args, **kwargs):
+        probes = probe_only(*args, **kwargs)
+        _append_rows(spark, src, 15, 20)  # lands after the probe
+        return probes
+
+    monkeypatch.setattr(engine, "check_for_new_data", probe_then_append)
+    assert engine.run(load_date=datetime(2024, 1, 2)) == EXIT_OK
+    assert engine.sql("SELECT COUNT(*) AS n FROM ev").collect()[0]["n"] == 15
+    monkeypatch.undo()
+    assert engine.run(load_date=datetime(2024, 1, 3)) == EXIT_OK
+    row = engine.sql("SELECT COUNT(*) AS n, COUNT(DISTINCT seq) AS k FROM ev").collect()[0]
+    assert (row["n"], row["k"]) == (20, 20)
+
+
+def test_jdbc_rows_landing_after_the_probe_load_once(spark, tmp_path, monkeypatch):
+    """The same race on a JDBC source, which has no file listing to pin:
+    the delta is bounded above by the probe."""
+    from mssql2monetdb_spark.sources.jdbc import driver_connection
+
+    options = {
+        "url": f"jdbc:derby:{tmp_path}/evdb;create=true",
+        "driver": "org.apache.derby.jdbc.EmbeddedDriver",
+    }
+
+    def insert(lo, hi):
+        conn = driver_connection(spark, options)
+        try:
+            st = conn.createStatement()
+            st.execute(
+                'INSERT INTO ev ("seq", "v") VALUES '
+                + ", ".join(f"({i}, {2 * i})" for i in range(lo, hi))
+            )
+            st.close()
+        finally:
+            conn.close()
+
+    conn = driver_connection(spark, options)
+    try:
+        st = conn.createStatement()
+        st.execute('CREATE TABLE ev ("seq" BIGINT, "v" BIGINT)')
+        st.close()
+    finally:
+        conn.close()
+    insert(0, 10)
+    spec = load_spec(
+        {
+            "warehouse_dir": str(tmp_path / "wh"),
+            "state_dir": str(tmp_path / "state"),
+            "sources": {"derby": {"format": "jdbc", "options": options}},
+            "tables": {
+                "ev": {
+                    "source": "derby",
+                    "from_table": "ev",
+                    "trigger": {"column": "seq"},
+                    "incremental": True,
+                }
+            },
+        }
+    )
+    engine = CopyEngine(spark, spec)
+    assert engine.run(load_date=datetime(2024, 1, 1)) == EXIT_OK
+
+    insert(10, 15)
+    probe_only = engine.check_for_new_data
+
+    def probe_then_insert(*args, **kwargs):
+        probes = probe_only(*args, **kwargs)
+        insert(15, 20)  # committed after the probe
+        return probes
+
+    monkeypatch.setattr(engine, "check_for_new_data", probe_then_insert)
+    assert engine.run(load_date=datetime(2024, 1, 2)) == EXIT_OK
+    assert engine.sql("SELECT COUNT(*) AS n FROM ev").collect()[0]["n"] == 15
+    monkeypatch.undo()
+    assert engine.run(load_date=datetime(2024, 1, 3)) == EXIT_OK
+    row = engine.sql("SELECT COUNT(*) AS n, COUNT(DISTINCT seq) AS k FROM ev").collect()[0]
+    assert (row["n"], row["k"]) == (20, 20)
+
+
+def _typed_frame(spark):
+    """Every column kind the schema sidecar must round-trip: a
+    non-nullable key, decimal, timestamp, struct, array, map and a column
+    carrying field metadata."""
+    import pyspark.sql.functions as F
+
+    return spark.range(0, 40, numPartitions=4).select(
+        "id",
+        F.col("id").cast("decimal(18,2)").alias("amount"),
+        F.timestamp_seconds(F.col("id") * 3600).alias("ts"),
+        F.struct(F.col("id").alias("a"), F.lit("x").alias("b")).alias("st"),
+        F.array(F.col("id"), F.col("id") + 1).alias("arr"),
+        F.create_map(F.lit("k"), F.col("id")).alias("m"),
+        (F.col("id") % 3).alias("grp", metadata={"comment": "bucket"}),
+    )
+
+
+def test_recorded_schema_matches_inference(spark, tmp_path):
+    """``read_version`` with the ``_SCHEMA.json`` sidecar must give exactly
+    the schema (and rows) that footer inference gives, for plain, sorted and
+    z-ordered writes; a version without the sidecar still reads; partitioned
+    writes record none."""
+    import os
+
+    from mssql2monetdb_spark.engine.publish import SCHEMA_FILE
+    from mssql2monetdb_spark.engine.zorder import ZCol, cluster_by_zorder
+
+    cat = VersionedCatalog(str(tmp_path / "wh"))
+    df = _typed_frame(spark)
+    want_rows = sorted(df.collect())
+    zordered = cluster_by_zorder(df, [ZCol("id", 0, 39)], num_files=2)
+    writes = {
+        "plain": cat.write_version(df, "default", "plain", datetime(2024, 1, 1)),
+        "sorted": cat.write_version(df, "default", "srt", datetime(2024, 1, 1), sort_by=["grp", "id"]),
+        "zorder": cat.write_version(zordered, "default", "zo", datetime(2024, 1, 1)),
+    }
+    for kind, physical in writes.items():
+        d = cat.version_dir("default", physical)
+        assert os.path.exists(os.path.join(d, SCHEMA_FILE)), kind
+        inferred = spark.read.parquet(d).schema
+        got = cat.read_version(spark, "default", physical)
+        assert got.schema == inferred, kind
+        assert got.schema["grp"].metadata == {"comment": "bucket"}, kind
+        assert sorted(got.collect()) == want_rows, kind
+
+    # no sidecar (older code, or a crash before the schema write): inference
+    d = cat.version_dir("default", writes["plain"])
+    os.remove(os.path.join(d, SCHEMA_FILE))
+    got = cat.read_version(spark, "default", writes["plain"])
+    assert got.schema == spark.read.parquet(d).schema
+    assert sorted(got.collect()) == want_rows
+
+    part = cat.write_version(df, "default", "part", datetime(2024, 1, 1), partition_by=["grp"])
+    d = cat.version_dir("default", part)
+    assert not os.path.exists(os.path.join(d, SCHEMA_FILE))
+    assert cat.read_version(spark, "default", part).count() == 40
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store lags
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_resolution_saving_in_spark_jobs_and_reads(spark, tmp_path, monkeypatch):
+    """Pins the saving as counts: reading a version with a recorded schema
+    starts no Spark job, and one copy run resolves each source path once
+    across the trigger probe, the extracts, query-mode view registration
+    and the count_query's re-registration."""
+    import collections
+    import os
+    import uuid
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from mssql2monetdb_spark.engine.publish import SCHEMA_FILE
+
+    cat = VersionedCatalog(str(tmp_path / "cat"))
+    physical = cat.write_version(_typed_frame(spark), "default", "t", datetime(2024, 1, 1))
+    read = lambda: cat.read_version(spark, "default", physical)  # noqa: E731
+    assert _jobs_in_group(spark, f"recorded-{uuid.uuid4()}", read) == []
+    os.remove(os.path.join(cat.version_dir("default", physical), SCHEMA_FILE))
+    assert len(_jobs_in_group(spark, f"inferred-{uuid.uuid4()}", read)) >= 1
+
+    src = tmp_path / "src"
+    spark.range(0, 30).selectExpr("id AS k", "id % 5 AS g").write.parquet(str(src / "t.parquet"))
+    spark.range(0, 5).selectExpr("id AS g", "CAST(id AS STRING) AS name").write.parquet(
+        str(src / "u.parquet")
+    )
+    spec = load_spec(
+        {
+            "warehouse_dir": str(tmp_path / "wh"),
+            "state_dir": str(tmp_path / "state"),
+            "sources": {"_default": {"format": "parquet", "path": str(src)}},
+            "tables": {
+                "t_job": {"from_table": "t", "trigger": {"column": "k"}},
+                "q_job": {
+                    "from_table": None,
+                    "from_query": "SELECT u.name, COUNT(*) AS n FROM t JOIN u ON t.g = u.g GROUP BY u.name",
+                    "count_query": "SELECT COUNT(DISTINCT g) FROM t",
+                    "to_table": "by_name",
+                },
+            },
+        }
+    )
+    calls = collections.Counter()
+    real_parquet = DataFrameReader.parquet
+
+    def counting_parquet(self, *paths, **options):
+        calls.update(p for p in paths if p.startswith(str(src)))
+        return real_parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counting_parquet)
+    engine = CopyEngine(spark, spec)
+    engine.do_copy(load_date=datetime(2024, 1, 1))
+    assert calls == {str(src / "t.parquet"): 1, str(src / "u.parquet"): 1}
+    assert engine.sql("SELECT SUM(n) AS s FROM by_name").collect()[0]["s"] == 30
