@@ -82,7 +82,9 @@ class CopyJob:
     count_query: str | None = None
     to_table: str = ""
     schema_name: str = "default"
-    # reference flags (CopyTable.java:29-72)
+    # reference flags (CopyTable.java:29-72); truncate is implicit in the
+    # versioned publish (each new version fully replaces the last), so the
+    # engine reads it nowhere
     truncate: bool = False
     drop: bool = False
     create: bool = True
@@ -276,23 +278,23 @@ def load_spec(spec: dict | str, env: dict[str, str] | None = None) -> JobSpec:
                     f"table {job_id!r}: a jdbc sink always publishes via the "
                     "versioned view switch (Derby has no CTAS-with-data)"
                 )
-        # schema-qualified sink targets (round 10): each job publishes into
-        # its own warehouse schema (reference MonetDBTable.java:12-25;
-        # identifiers schema-qualified per MonetDBUtil.java:301-333; schema
-        # lowercased at config time, CopyToolConfig.java:875-876 — matched
-        # by load_spec's .lower() above). Same-named targets must still be
-        # unique per (schema, table): two jobs writing one view would race
-        # the switch.
-        seen_targets: dict[tuple[str, str], str] = {}
-        for job_id, job in jobs.items():
-            key = (job.schema_name, job.to_table.lower())
-            if key in seen_targets:
-                raise SpecError(
-                    f"tables {seen_targets[key]!r} and {job_id!r} both target "
-                    f"jdbc sink {job.schema_name}.{job.to_table} — targets "
-                    "must be unique per (schema, table)"
-                )
-            seen_targets[key] = job_id
+
+    # targets must be unique per (schema, table) on either store: two jobs
+    # writing one target publish the same version name (the later write
+    # replaces the earlier one's data) and race the view switch. A jdbc
+    # sink's jobs may share a table name across schemas (round 10; reference
+    # MonetDBTable.java:12-25, schemas lowercased at config time —
+    # CopyToolConfig.java:875-876, matched by load_spec's .lower() above).
+    seen_targets: dict[tuple[str, str], str] = {}
+    for job_id, job in jobs.items():
+        key = (job.schema_name, job.to_table)
+        if key in seen_targets:
+            raise SpecError(
+                f"tables {seen_targets[key]!r} and {job_id!r} both target "
+                f"{job.schema_name}.{job.to_table} — targets must be unique "
+                "per (schema, table)"
+            )
+        seen_targets[key] = job_id
 
     return JobSpec(
         sources=sources,

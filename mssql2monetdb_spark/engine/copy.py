@@ -12,9 +12,16 @@ Phases:
 3. publish  — atomic view switch to the new version;
 4. cleanup  — retention drop beyond 2 versions.
 
-Cross-cutting semantics kept: watermark trigger skip (exit code 2), empty-
-source guard aborting the whole run before any load, truncate/drop/create
-flags, temp-table CTAS promotion, state persisted only after full success.
+One driver, ``do_copy``, runs the phases in order for either store: the
+engine's versioned Parquet catalog, or a JDBC warehouse sink
+(``engine/export.py``) when the spec configures one. Only the storage steps
+are chosen by sink — the load itself, and newest/exists/drop/publish/cleanup
+(``_SinkCatalog`` gives the sink the catalog's call shapes).
+
+Cross-cutting semantics kept on both: watermark trigger skip (exit code 2),
+empty-source guard aborting the whole run before any load, drop/create
+flags, temp-table CTAS promotion (parquet), state persisted only after full
+success.
 
 One run resolves each file-source table once: ``do_copy`` keeps a per-run
 dict of resolved frames that the trigger probe, the extract, query-mode view
@@ -30,7 +37,9 @@ Exit codes: 0 = loaded, 1 = error, 2 = no new data
 from __future__ import annotations
 
 import logging
-from datetime import datetime, timezone
+import os
+import shutil
+from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,7 +48,7 @@ from ..config.spec import CopyJob, JobSpec, spec_checksum
 from ..schema.evolve import evolve_to_union
 from ..schema.mapper import normalized_dataframe
 from ..sources.readers import read_source, register_source_views
-from .publish import VersionedCatalog
+from .publish import VersionedCatalog, physical_name
 from .watermark import WatermarkStore, has_new_data, probe_max
 
 log = logging.getLogger(__name__)
@@ -164,8 +173,6 @@ class CopyEngine:
         same cheap probe shape as the watermark trigger; file count follows
         the upstream partitioning.
         """
-        from pyspark.sql import functions as F
-
         from .zorder import ZCol, cluster_by_zorder
 
         aggs = []
@@ -234,22 +241,21 @@ class CopyEngine:
         extracting (the reference's CLI modes, ``CopyToolConfig.java:116-279``).
         """
         load_date = load_date or datetime.now(timezone.utc).replace(tzinfo=None)
+        # the store the storage steps run on; the parquet-only steps (the
+        # snapshot+delta load, temp-table promotion) use self.catalog
+        sink = None if self.warehouse is None else _SinkCatalog(self.warehouse, self.spec)
+        catalog = self.catalog if sink is None else sink
         published: dict[str, str] = {}
-
-        if self.warehouse is not None:
-            return self._do_copy_jdbc_sink(
-                no_switch=no_switch, switch_only=switch_only, load_date=load_date
-            )
 
         if switch_only:
             for job in self.spec.jobs.values():
-                physical = self.catalog.newest_version(job.schema_name, job.to_table)
+                physical = catalog.newest_version(job.schema_name, job.to_table)
                 if physical is None:
                     raise FileNotFoundError(
                         f"switch-only: no loaded version for {job.schema_name}.{job.to_table}"
                     )
-                self.catalog.publish(self.spark, job.schema_name, job.to_table, physical)
-                self.catalog.cleanup(job.schema_name, job.to_table)
+                catalog.publish(self.spark, job.schema_name, job.to_table, physical)
+                catalog.cleanup(job.schema_name, job.to_table)
                 published[job.job_id] = physical
             return published
 
@@ -258,24 +264,22 @@ class CopyEngine:
 
         # PHASE 1: extract all (plans built lazily; counts force the scans)
         frames = {job_id: self._extract(job, resolved) for job_id, job in self.spec.jobs.items()}
-        self.assert_non_empty(frames, resolved)
+        counts = self.assert_non_empty(frames, resolved)
 
-        # PHASE 2: load all (each job writes a new version; drop/truncate
+        # PHASE 2: load all (each job writes a new version; the drop/create
         # flags mirror reference ops #12/#15)
         loaded: dict[str, str] = {}
         for job_id, df in frames.items():
             job = self.spec.jobs[job_id]
             if job.drop:
-                self.catalog.drop_table(self.spark, job.schema_name, job.to_table)
-            if not job.create and not self.catalog.exists(job.schema_name, job.to_table):
+                catalog.drop_table(self.spark, job.schema_name, job.to_table)
+            if not job.create and not catalog.exists(job.schema_name, job.to_table):
                 raise FileNotFoundError(
                     f"target {job.schema_name}.{job.to_table} does not exist and create=False"
                 )
-            if job.truncate:
-                # versioned publish makes truncate implicit (the new version
-                # fully replaces); kept as an explicit empty-write for
-                # non-versioned parity when fast view switching is off
-                pass
+            if sink is not None:
+                loaded[job_id] = sink.load_version(job, df, load_date, counts[job_id])
+                continue
             # the published version, read once: the incremental snapshot
             # and the schema the new version evolves from
             current = self.catalog.current_version(job.schema_name, job.to_table)
@@ -338,10 +342,6 @@ class CopyEngine:
             # mode the written dir is tmp_-prefixed but the PHASE 3
             # os.replace promotion lands on the public name, which is
             # where the collision actually bites.
-            from datetime import timedelta
-
-            from .publish import physical_name
-
             eff_date = load_date
             if reads_current:
                 retained = set(
@@ -373,10 +373,8 @@ class CopyEngine:
                 # A same-load_date retry overwrites its previous promotion
                 # (os.replace cannot rename onto a non-empty directory) —
                 # the same idempotent-retry contract as fast-mode
-                # write_version's mode("overwrite").
-                import os
-                import shutil
-
+                # write_version's mode("overwrite"). Parquet only: the spec
+                # refuses temp-table mode on a JDBC sink.
                 src_dir = self.catalog.version_dir(job.schema_name, physical)
                 promoted = physical.replace("tmp_", "", 1)
                 dst_dir = self.catalog.version_dir(job.schema_name, promoted)
@@ -384,104 +382,15 @@ class CopyEngine:
                     shutil.rmtree(dst_dir)
                 os.replace(src_dir, dst_dir)
                 physical = promoted
-            self.catalog.publish(self.spark, job.schema_name, job.to_table, physical)
+            catalog.publish(self.spark, job.schema_name, job.to_table, physical)
             published[job_id] = physical
 
         # PHASE 4: retention cleanup
         for job_id in published:
             job = self.spec.jobs[job_id]
-            self.catalog.cleanup(job.schema_name, job.to_table)
+            catalog.cleanup(job.schema_name, job.to_table)
 
         # persist trigger state ONLY after full success (CopyTool.java:305-309)
-        for job_id, probe in probes.items():
-            if probe is not None:
-                self.store.save(self.checksum, probe, job_id)
-        return published
-
-    @staticmethod
-    def _sink_schema(job) -> str | None:
-        """Warehouse schema for a job: ``None`` (the connection's default
-        schema, unqualified SQL) for the config's ``default`` namespace."""
-        return None if job.schema_name == "default" else job.schema_name
-
-    def _do_copy_jdbc_sink(
-        self, *, no_switch: bool, switch_only: bool, load_date: datetime
-    ) -> dict[str, str]:
-        """The 4 phases against a real JDBC warehouse (the reference's
-        MonetDB topology): extract is unchanged; load lands each job in a
-        new versioned physical table (staged bulk COPY or batched INSERT);
-        publish is the transactional view switch; cleanup is keep-2
-        retention on the server. Trigger probes, the all-or-nothing empty
-        guard, exit codes, and state-after-success are IDENTICAL to the
-        parquet path — only the storage side of phases 2-4 differs.
-
-        The pre-load counts from the empty guard double as the bulk
-        loader's verification counts (the reference's count file,
-        ``CopyTool.java:643-649``), so no extra count job runs.
-        """
-        wh = self.warehouse
-        published: dict[str, str] = {}
-
-        # map the config's "default" namespace to the connection's default
-        # schema (unqualified SQL, the pre-round-10 behavior); any other
-        # schema name qualifies every statement and scopes every catalog
-        # probe (reference MonetDBTable.java:12-25)
-
-        if switch_only:
-            for job in self.spec.jobs.values():
-                schema = self._sink_schema(job)
-                versions = wh.table_versions(job.to_table, schema=schema)
-                if not versions:
-                    raise FileNotFoundError(
-                        f"switch-only: no loaded version for {job.to_table}"
-                    )
-                wh.publish(job.to_table, versions[0], schema=schema)
-                wh.cleanup(job.to_table, schema=schema)
-                # report in the engine's canonical lowercase (store listings
-                # come back store-cased; unquoted SQL resolves either way)
-                published[job.job_id] = versions[0].lower()
-            return published
-
-        resolved: dict[str, DataFrame] = {}  # this run's source frames, by path
-        probes = self.check_for_new_data(resolved)
-
-        frames = {job_id: self._extract(job, resolved) for job_id, job in self.spec.jobs.items()}
-        counts = self.assert_non_empty(frames, resolved)
-
-        loaded: dict[str, str] = {}
-        for job_id, df in frames.items():
-            job = self.spec.jobs[job_id]
-            schema = self._sink_schema(job)
-            if job.drop:
-                wh.drop_table(job.to_table, schema=schema)
-            if not job.create and not wh.exists(job.to_table, schema=schema):
-                raise FileNotFoundError(
-                    f"target {job.to_table} does not exist and create=False"
-                )
-            if job.sort_by:
-                df = df.sortWithinPartitions(*job.sort_by)
-            loaded[job_id] = wh.load_version(
-                df,
-                job.to_table,
-                load_date,
-                method=self.spec.sink_method,
-                staging_dir=self.spec.sink_staging_dir,
-                expected_count=counts[job_id],
-                schema=schema,
-                import_concurrency=self.spec.sink_import_concurrency,
-            )
-
-        if no_switch:
-            return loaded
-
-        for job_id, physical in loaded.items():
-            job = self.spec.jobs[job_id]
-            wh.publish(job.to_table, physical, schema=self._sink_schema(job))
-            published[job_id] = physical
-        for job_id in published:
-            job = self.spec.jobs[job_id]
-            wh.cleanup(job.to_table, schema=self._sink_schema(job))
-
         for job_id, probe in probes.items():
             if probe is not None:
                 self.store.save(self.checksum, probe, job_id)
@@ -518,8 +427,6 @@ class CopyEngine:
         if self.warehouse is not None:
             # jdbc sink: the published name is a VIEW on the warehouse
             # (schema-qualified when the job declared a non-default schema)
-            from ..sources.readers import read_source
-
             name = table if schema == "default" else f"{schema}.{table}"
             return read_source(
                 self.spark,
@@ -529,3 +436,60 @@ class CopyEngine:
         self.catalog.register_view(self.spark, schema, table)
         name = table if schema == "default" else f"{schema}_{table}"
         return self.spark.table(name)
+
+
+class _SinkCatalog:
+    """The JDBC sink's storage steps in the parquet catalog's call shapes,
+    so ``do_copy`` runs one sequence of steps on either store.
+
+    The config's ``default`` namespace maps to the connection's default
+    schema (unqualified SQL, the pre-round-10 behavior); any other schema
+    name qualifies every statement and scopes every catalog probe
+    (reference ``MonetDBTable.java:12-25``)."""
+
+    def __init__(self, warehouse, spec: JobSpec):
+        self.warehouse = warehouse
+        self.spec = spec
+
+    @staticmethod
+    def _schema(schema: str) -> str | None:
+        return None if schema == "default" else schema
+
+    def newest_version(self, schema: str, table: str) -> str | None:
+        versions = self.warehouse.table_versions(table, schema=self._schema(schema))
+        # the engine's canonical lowercase (store listings come back
+        # store-cased; unquoted SQL resolves either way)
+        return versions[0].lower() if versions else None
+
+    def exists(self, schema: str, table: str) -> bool:
+        return self.warehouse.exists(table, schema=self._schema(schema))
+
+    def drop_table(self, spark: SparkSession, schema: str, table: str) -> None:
+        self.warehouse.drop_table(table, schema=self._schema(schema))
+
+    def publish(self, spark: SparkSession, schema: str, table: str, physical: str) -> None:
+        self.warehouse.publish(table, physical, schema=self._schema(schema))
+
+    def cleanup(self, schema: str, table: str) -> None:
+        self.warehouse.cleanup(table, schema=self._schema(schema))
+
+    def load_version(
+        self, job: CopyJob, df: DataFrame, load_date: datetime, expected_count: int
+    ) -> str:
+        """PHASE 2 on the sink: a new versioned physical table (staged bulk
+        COPY or batched INSERT). ``expected_count`` is the empty guard's
+        pre-load count, which doubles as the bulk loader's verification
+        count (the reference's count file, ``CopyTool.java:643-649``), so no
+        extra count job runs."""
+        if job.sort_by:
+            df = df.sortWithinPartitions(*job.sort_by)
+        return self.warehouse.load_version(
+            df,
+            job.to_table,
+            load_date,
+            method=self.spec.sink_method,
+            staging_dir=self.spec.sink_staging_dir,
+            expected_count=expected_count,
+            schema=self._schema(job.schema_name),
+            import_concurrency=self.spec.sink_import_concurrency,
+        )

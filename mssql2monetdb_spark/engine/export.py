@@ -30,13 +30,20 @@ from __future__ import annotations
 
 import logging
 import re
+from contextlib import contextmanager
 from dataclasses import dataclass
 from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config.spec import SourceSpec
-from ..sources.jdbc import jdbc_bulk_loader, jdbc_writer
+from ..sources.jdbc import (
+    driver_connection,
+    insert_load,
+    jdbc_bulk_loader,
+    pushed_query,
+    url_dialect,
+)
 from .publish import RETAIN_VERSIONS, VERSION_RE, physical_name
 
 log = logging.getLogger(__name__)
@@ -195,17 +202,13 @@ class JdbcWarehouse:
         in insert mode), while server-side COPY support is the bulk
         loader's concern."""
         url = self.source.options["url"]
-        for prefix, name in (
-            ("jdbc:derby:", "derby"),
-            ("jdbc:monetdb:", "monetdb"),
-            ("jdbc:postgresql:", "postgresql"),
-        ):
-            if url.startswith(prefix):
-                return name
-        raise ValueError(
-            "jdbc sink requires a dialect with catalog probes "
-            f"(derby/monetdb/postgresql), got {url.split(':', 2)[:2]}"
-        )
+        dialect = url_dialect(url)
+        if dialect is None:
+            raise ValueError(
+                "jdbc sink requires a dialect with catalog probes "
+                f"(derby/monetdb/postgresql), got {url.split(':', 2)[:2]}"
+            )
+        return dialect
 
     def _store_name(self, name: str) -> str:
         """Unquoted identifiers are case-normalized by the store: Derby
@@ -219,10 +222,37 @@ class JdbcWarehouse:
         (the connection's default schema) when no schema is given."""
         return f"{schema}.{name}" if schema else name
 
-    def _connect(self):
-        from ..sources.jdbc import driver_connection
+    @contextmanager
+    def _statement(self, *, transaction: bool = False):
+        """A statement on a fresh driver connection; the statement and the
+        connection are closed on every exit path.
 
-        return driver_connection(self.spark, self.source.options)
+        With ``transaction`` the block runs with auto-commit off and commits
+        when it exits normally. A block that raises — or a commit that
+        fails — is rolled back BEFORE close: embedded Derby raises SQLState
+        25001 from close() on an active transaction, which would mask the
+        original failure and leak the connection, and a failed view switch
+        must leave readers on the OLD view."""
+        conn = driver_connection(self.spark, self.source.options)
+        committed = False
+        try:
+            if transaction:
+                conn.setAutoCommit(False)
+            st = conn.createStatement()
+            try:
+                yield st
+            finally:
+                st.close()
+            if transaction:
+                conn.commit()
+                committed = True
+        finally:
+            if transaction and not committed:
+                try:
+                    conn.rollback()
+                except Exception:  # noqa: BLE001 — closing anyway
+                    log.warning("rollback before close failed", exc_info=True)
+            conn.close()
 
     def _current_schema(self) -> str:
         """The connection's current schema (cached — fixed connection
@@ -232,17 +262,10 @@ class JdbcWarehouse:
         scope to exactly this namespace."""
         cached = self.__dict__.get("_cur_schema")
         if cached is None:
-            conn = self._connect()
-            try:
-                st = conn.createStatement()
-                try:
-                    rs = st.executeQuery(CURRENT_SCHEMA_SQL[self.dialect])
-                    rs.next()
-                    cached = rs.getString(1)
-                finally:
-                    st.close()
-            finally:
-                conn.close()
+            with self._statement() as st:
+                rs = st.executeQuery(CURRENT_SCHEMA_SQL[self.dialect])
+                rs.next()
+                cached = rs.getString(1)
             self.__dict__["_cur_schema"] = cached
         return cached
 
@@ -268,41 +291,13 @@ class JdbcWarehouse:
         return out
 
     def _probe(self, kind: str, *, schema: str | None = None, **subst: str) -> list[str]:
-        conn = self._connect()
-        try:
-            st = conn.createStatement()
-            try:
-                return self._probe_on(st, kind, schema=schema, **subst)
-            finally:
-                st.close()
-        finally:
-            conn.close()
+        with self._statement() as st:
+            return self._probe_on(st, kind, schema=schema, **subst)
 
     def _execute(self, *statements: str, transactional: bool = False) -> None:
-        conn = self._connect()
-        committed = False
-        try:
-            if transactional:
-                conn.setAutoCommit(False)
-            st = conn.createStatement()
-            try:
-                for sql in statements:
-                    st.execute(sql)
-            finally:
-                st.close()
-            if transactional:
-                conn.commit()
-                committed = True
-        finally:
-            # roll back an open transaction before close: embedded Derby
-            # raises SQLState 25001 from close() on an active transaction,
-            # which would mask the original failure and leak the connection
-            if transactional and not committed:
-                try:
-                    conn.rollback()
-                except Exception:  # noqa: BLE001 — closing anyway
-                    log.warning("rollback before close failed", exc_info=True)
-            conn.close()
+        with self._statement(transaction=transactional) as st:
+            for sql in statements:
+                st.execute(sql)
 
     # -- catalog probes (ops #15-16, MonetDBUtil.java:41-88) --------------
     def exists(self, name: str, *, schema: str | None = None) -> bool:
@@ -314,20 +309,9 @@ class JdbcWarehouse:
         )
 
     def schema_exists(self, schema: str) -> bool:
-        conn = self._connect()
-        try:
-            st = conn.createStatement()
-            try:
-                rs = st.executeQuery(
-                    SCHEMA_EXISTS_SQL[self.dialect].format(
-                        schema=self._store_name(schema)
-                    )
-                )
-                return bool(rs.next())
-            finally:
-                st.close()
-        finally:
-            conn.close()
+        sql = SCHEMA_EXISTS_SQL[self.dialect].format(schema=self._store_name(schema))
+        with self._statement() as st:
+            return bool(st.executeQuery(sql).next())
 
     def ensure_schema(self, schema: str) -> None:
         """Create the warehouse schema if absent (idempotent). The
@@ -350,11 +334,7 @@ class JdbcWarehouse:
 
     def current_version(self, table: str, *, schema: str | None = None) -> str | None:
         """The physical table the public view points at, parsed from the
-        stored view definition (``... FROM <physical>``). The pattern
-        tolerates the stores' rendering differences: optional schema
-        qualification (``"sys"."t_2024_..."``), quoting, a trailing
-        semicolon, and full create-statement text (MonetDB keeps the
-        whole ``create view ... as select ...`` in sys.tables.query)."""
+        stored view definition by :func:`parse_view_target`."""
         rows = self._probe(
             "view_definition", name=self._store_name(table), schema=schema
         )
@@ -366,11 +346,8 @@ class JdbcWarehouse:
         query (``SELECT * WHERE 1=0`` — the reference reads
         ResultSetMetaData off ``SELECT * ... LIMIT 1``,
         ``MonetDBUtil.java:346-349``); no data crosses the wire."""
-        opts = {
-            k: v for k, v in self.source.options.items() if k not in ("dbtable", "query")
-        }
-        opts["query"] = f"SELECT * FROM {self._qualify(table, schema)} WHERE 1=0"
-        return self.spark.read.format("jdbc").options(**opts).load().schema
+        sql = f"SELECT * FROM {self._qualify(table, schema)} WHERE 1=0"
+        return pushed_query(self.spark, self.source.options, sql).schema
 
     def verify_columns(self, table: str, incoming, *, schema: str | None = None) -> list[str]:
         """The reference's verify-and-ALTER for a PRE-EXISTING warehouse
@@ -503,8 +480,7 @@ class JdbcWarehouse:
             from ..schema.mapper import spark_schema_to_derby_ddl
 
             ddl = table_ddl if table_ddl is not None else spark_schema_to_derby_ddl(df.schema)
-            self._execute(f"CREATE TABLE {qualified} ({ddl})")
-            jdbc_writer(df, self.source, qualified, mode="append")
+            insert_load(self.spark, df, self.source, qualified, ddl)
         else:
             raise ValueError(f"method must be copy|insert, got {method!r}")
         return physical
@@ -527,39 +503,20 @@ class JdbcWarehouse:
         q_table = self._qualify(table, schema)
         q_physical = self._qualify(physical, schema)
         self._resolve_schema(schema)  # warm the current-schema cache OUTSIDE the txn
-        conn = self._connect()
-        committed = False
-        try:
-            conn.setAutoCommit(False)
-            st = conn.createStatement()
-            try:
-                for i in range(10):
-                    if not self._probe_on(st, "exists", name=store, schema=schema):
-                        break
-                    if i > 0:
-                        log.warning("%s still exists despite previous DROP", q_table)
-                    kind = (
-                        "TABLE"
-                        if self._probe_on(st, "is_table", name=store, schema=schema)
-                        else "VIEW"
-                    )
-                    st.execute(f"DROP {kind} {q_table}")
-                self._fault("mid_switch")
-                st.execute(f"CREATE VIEW {q_table} AS SELECT * FROM {q_physical}")
-            finally:
-                st.close()
-            conn.commit()
-            committed = True
-        finally:
-            # a failed switch must roll back before close (see _execute):
-            # readers keep the OLD view, and the original exception — not
-            # Derby's 25001 active-transaction close error — propagates
-            if not committed:
-                try:
-                    conn.rollback()
-                except Exception:  # noqa: BLE001 — closing anyway
-                    log.warning("rollback before close failed", exc_info=True)
-            conn.close()
+        with self._statement(transaction=True) as st:
+            for i in range(10):
+                if not self._probe_on(st, "exists", name=store, schema=schema):
+                    break
+                if i > 0:
+                    log.warning("%s still exists despite previous DROP", q_table)
+                kind = (
+                    "TABLE"
+                    if self._probe_on(st, "is_table", name=store, schema=schema)
+                    else "VIEW"
+                )
+                st.execute(f"DROP {kind} {q_table}")
+            self._fault("mid_switch")
+            st.execute(f"CREATE VIEW {q_table} AS SELECT * FROM {q_physical}")
 
     # -- PHASE 4: retention (CopyTool.java:554-602) ------------------------
     def cleanup(

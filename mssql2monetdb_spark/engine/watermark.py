@@ -29,6 +29,8 @@ from datetime import date, datetime
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.jdbc import identifier_ladder, pushed_query
+
 log = logging.getLogger(__name__)
 
 _TYPES = ("bigint", "date", "timestamp")
@@ -99,30 +101,12 @@ def jdbc_max_probe_frame(
     table size. Spark's V1 JDBC relation never pushes a Spark-side
     ``agg(max(...))`` down (pinned by ``tests/test_watermark.py``), so
     at a 100 TB source the Spark-side form is a full-column pull — this
-    frame is the scale-correct probe shape. With ``quoted=True`` (default)
-    the column is double-quoted (ANSI; matches the case-exact quoted
-    identifiers Spark's JDBC writer creates); ``quoted=False`` ships the
-    bare identifier so the STORE case-normalizes it (columns created
-    unquoted are stored upper- or lower-cased and never match a quoted
-    probe). The table name travels verbatim like every other ``dbtable``
-    here.
+    frame is the scale-correct probe shape. ``quoted`` picks the column's
+    identifier form (see :func:`identifier_ladder`); the table name travels
+    verbatim like every other ``dbtable`` here.
     """
-    opts = {
-        k: v
-        for k, v in source.options.items()
-        if k
-        not in (
-            "dbtable",
-            "query",
-            "partitionColumn",
-            "lowerBound",
-            "upperBound",
-            "numPartitions",
-        )
-    }
     ident = f'"{column}"' if quoted else column
-    opts["query"] = f"SELECT MAX({ident}) AS m FROM {table}"
-    return spark.read.format("jdbc").options(**opts).load()
+    return pushed_query(spark, source.options, f"SELECT MAX({ident}) AS m FROM {table}")
 
 
 def trigger_probe_sql(url: str, table: str, column: str) -> str | None:
@@ -152,27 +136,15 @@ def probe_max_jdbc(spark, source, table: str, column: str) -> Watermark | None:
     value and wire cost as MAX); on any failure there it degrades to the
     portable ANSI ladder below.
 
-    Identifier-case ladder: the quoted form is tried first (Spark-written
-    case-exact columns), then the UNQUOTED form (store-case-normalized —
-    a column created unquoted is stored upper-cased in Derby/MSSQL-style
-    stores and the quoted engine-cased probe fails on EVERY run, which
-    would otherwise silently trade the one-row pushdown for the caller's
-    Spark-side full-column pull at a 100 TB source). The unquoted retry is
-    GATED on identifier-resolution SQLStates (42X04/42S22-class): a
-    transient failure of the quoted probe must surface as itself, not run
-    an unquoted form the store could case-normalize onto a DIFFERENT
-    same-named column (ADVICE r10). Only identifier failures of both
-    forms reach the caller's degradation path."""
-    from ..sources.jdbc import is_identifier_resolution_error
-
+    The portable probe walks :func:`identifier_ladder`: quoted, then —
+    only on an identifier-resolution failure — the store-cased bare
+    identifier, which keeps the one-row pushdown for columns created
+    unquoted. Only identifier failures of both forms reach the caller's
+    degradation path."""
     native = trigger_probe_sql(source.options.get("url", ""), table, column)
     if native is not None:
-        opts = {
-            k: v for k, v in source.options.items() if k not in ("dbtable", "query")
-        }
-        opts["query"] = native
         try:
-            rows = spark.read.format("jdbc").options(**opts).load().collect()
+            rows = pushed_query(spark, source.options, native).collect()
             return _typed_watermark(rows[0][0] if rows else None, column)
         except Exception:  # noqa: BLE001 — degrade to the portable ladder
             log.warning(
@@ -182,22 +154,11 @@ def probe_max_jdbc(spark, source, table: str, column: str) -> Watermark | None:
                 column,
                 exc_info=True,
             )
-    try:
-        value = jdbc_max_probe_frame(spark, source, table, column).collect()[0][0]
-    except Exception as exc:
-        if not is_identifier_resolution_error(exc):
-            raise
-        log.warning(
-            "quoted MAX probe failed for %s.%s (identifier resolution) — "
-            "retrying with the store-cased unquoted identifier",
-            table,
-            column,
-            exc_info=True,
-        )
-        value = (
-            jdbc_max_probe_frame(spark, source, table, column, quoted=False)
-            .collect()[0][0]
-        )
+    value = identifier_ladder(
+        lambda quoted: jdbc_max_probe_frame(spark, source, table, column, quoted=quoted)
+        .collect()[0][0],
+        f"MAX probe for {table}.{column}",
+    )
     return _typed_watermark(value, column)
 
 

@@ -18,6 +18,7 @@ unit tests on the option dicts and are integration-ready.
 
 from __future__ import annotations
 
+import logging
 import os
 import zipfile
 
@@ -25,8 +26,30 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..config.spec import CopyJob, SourceSpec
 
+log = logging.getLogger(__name__)
+
 DEFAULT_BATCH_SIZE = 10_000  # reference batch.size default (CopyToolConfig.java:44)
 DEFAULT_NUM_PARTITIONS = 32
+
+#: JDBC url prefix -> dialect key: the dialects with catalog probes
+#: (engine/export.py) and a server-side bulk import (:func:`bulk_dialect`)
+_URL_DIALECTS = (
+    ("jdbc:derby:", "derby"),
+    ("jdbc:monetdb:", "monetdb"),
+    ("jdbc:postgresql:", "postgresql"),
+)
+
+
+def url_dialect(url: str) -> str | None:
+    """The :data:`_URL_DIALECTS` key for a JDBC url; ``None`` when none matches."""
+    return next((name for prefix, name in _URL_DIALECTS if url.startswith(prefix)), None)
+
+
+#: read options that shape a table scan — a pushed query carries none of
+#: them: Spark rejects partitioning keys without ``dbtable`` ("users need to
+#: specify all or none for ... 'partitionColumn', 'lowerBound',
+#: 'upperBound', and 'numPartitions'")
+_SCAN_OPTIONS = ("dbtable", "query", "partitionColumn", "lowerBound", "upperBound", "numPartitions")
 
 
 def jdbc_read_options(source: SourceSpec, job: CopyJob) -> dict[str, str]:
@@ -81,6 +104,36 @@ def is_identifier_resolution_error(exc: Exception) -> bool:
     return any(code in text for code in IDENTIFIER_SQLSTATES)
 
 
+def pushed_query(spark: SparkSession, options: dict[str, str], sql: str) -> DataFrame:
+    """``sql`` shipped verbatim as the JDBC relation's query, so it runs ON
+    the source and only its result rows cross the wire. Every other option
+    of the source (url, driver, credentials, fetchsize) rides along."""
+    opts = {k: v for k, v in options.items() if k not in _SCAN_OPTIONS}
+    opts["query"] = sql
+    return spark.read.format("jdbc").options(**opts).load()
+
+
+def identifier_ladder(probe, what: str):
+    """``probe(quoted)`` with the identifier double-quoted first (the
+    case-exact columns Spark's writer creates), then bare, so the STORE
+    case-normalizes it (a column created unquoted is stored upper- or
+    lower-cased and never matches a quoted probe). The bare retry runs only
+    on an :data:`IDENTIFIER_SQLSTATES` failure; any other failure of the
+    quoted probe surfaces as itself."""
+    try:
+        return probe(True)
+    except Exception as exc:  # noqa: BLE001 — classified below
+        if not is_identifier_resolution_error(exc):
+            raise
+        log.warning(
+            "quoted %s failed (identifier resolution) — retrying with the "
+            "store-cased unquoted identifier",
+            what,
+            exc_info=True,
+        )
+    return probe(False)
+
+
 def probe_partition_bounds(
     spark: SparkSession, options: dict[str, str], table: str, column: str
 ) -> tuple[object, object]:
@@ -88,50 +141,16 @@ def probe_partition_bounds(
     range-partitioned scan, computed ON the source so exactly one row
     crosses the wire (the same probe shape as the watermark trigger;
     Spark's V1 JDBC relation would otherwise pull the whole column for a
-    Spark-side agg). Identifier-case ladder as in ``probe_max_jdbc``:
-    quoted first (Spark-written case-exact columns), then bare
-    (store-case-normalized). Returns ``(None, None)`` only when the table
-    is empty."""
-    import logging
+    Spark-side agg), through :func:`identifier_ladder`. Returns
+    ``(None, None)`` only when the table is empty."""
 
-    log = logging.getLogger(__name__)
-    base = {
-        k: v
-        for k, v in options.items()
-        if k
-        not in (
-            "dbtable",
-            "query",
-            "partitionColumn",
-            "lowerBound",
-            "upperBound",
-            "numPartitions",
-        )
-    }
-    last_exc: Exception | None = None
-    for quoted in (True, False):
+    def bounds(quoted: bool) -> tuple[object, object]:
         ident = f'"{column}"' if quoted else column
-        probe = dict(base)
-        probe["query"] = f"SELECT MIN({ident}) AS lo, MAX({ident}) AS hi FROM {table}"
-        try:
-            row = spark.read.format("jdbc").options(**probe).load().collect()[0]
-            return row[0], row[1]
-        except Exception as exc:  # noqa: BLE001 — classified below
-            last_exc = exc
-            if quoted and not is_identifier_resolution_error(exc):
-                # transient failure (lock timeout, connection blip): the
-                # unquoted retry could case-normalize onto a DIFFERENT
-                # same-named column — surface the real error instead
-                raise
-            if quoted:
-                log.warning(
-                    "quoted bounds probe failed for %s.%s (identifier "
-                    "resolution) — retrying with the store-cased unquoted "
-                    "identifier",
-                    table,
-                    column,
-                )
-    raise last_exc
+        sql = f"SELECT MIN({ident}) AS lo, MAX({ident}) AS hi FROM {table}"
+        lo, hi = pushed_query(spark, options, sql).collect()[0]
+        return lo, hi
+
+    return identifier_ladder(bounds, f"bounds probe for {table}.{column}")
 
 
 def jdbc_reader(spark: SparkSession, source: SourceSpec, job: CopyJob) -> DataFrame:
@@ -205,14 +224,10 @@ def bulk_dialect(url: str) -> str:
     Raises ``ValueError`` for dialects without a known server-side COPY —
     the loader then degrades to the distributed INSERT path up front
     (before any staging I/O)."""
-    for prefix, name in (
-        ("jdbc:derby:", "derby"),
-        ("jdbc:monetdb:", "monetdb"),
-        ("jdbc:postgresql:", "postgresql"),
-    ):
-        if url.startswith(prefix):
-            return name
-    raise ValueError(f"no server-side bulk import for JDBC url {url.split(':', 2)[:2]}")
+    dialect = url_dialect(url)
+    if dialect is None:
+        raise ValueError(f"no server-side bulk import for JDBC url {url.split(':', 2)[:2]}")
+    return dialect
 
 
 def monetdb_staged_frame(df: DataFrame) -> DataFrame:
@@ -371,13 +386,10 @@ def _execute_update(conn, sql: str) -> None:
 
 
 def _drop_table_if_exists(conn, table: str) -> None:
-    st = conn.createStatement()
     try:
-        st.execute(f"DROP TABLE {table}")
+        _execute_update(conn, f"DROP TABLE {table}")
     except Exception:  # noqa: BLE001 — table absent: nothing to drop
         pass
-    finally:
-        st.close()
 
 
 def _import_one_part(conn, url: str, table: str, part: str, locked: bool) -> None:
@@ -392,6 +404,19 @@ def _import_one_part(conn, url: str, table: str, part: str, locked: bool) -> Non
             cs.close()
     else:
         _execute_update(conn, sql)
+
+
+def insert_load(spark: SparkSession, df: DataFrame, source: SourceSpec, table: str, ddl: str) -> str:
+    """CREATE ``table`` from ``ddl`` and load ``df`` through the distributed
+    batched :func:`jdbc_writer` — the INSERT end of the reference's
+    degradation chain (``CopyTool.java:829-866``). Returns ``"insert"``."""
+    conn = driver_connection(spark, source.options)
+    try:
+        _execute_update(conn, f"CREATE TABLE {table} ({ddl})")
+    finally:
+        conn.close()
+    jdbc_writer(df, source, table, mode="append")
+    return "insert"
 
 
 def _server_count(conn, table: str) -> int:
@@ -470,7 +495,6 @@ def jdbc_bulk_loader(
     import representation for BLOB data without LOB side-files).
     """
     import glob
-    import logging
     import tempfile
 
     from pyspark.sql import functions as F
@@ -478,7 +502,6 @@ def jdbc_bulk_loader(
 
     from ..schema.mapper import spark_schema_to_derby_ddl
 
-    log = logging.getLogger(__name__)
     url = source.options["url"]
     # derive DDL before staging: an unmappable column fails loudly here
     # (UnknownSqlTypeError) instead of after a useless distributed write
@@ -491,13 +514,7 @@ def jdbc_bulk_loader(
         if not fallback:
             raise BulkLoadError(f"{table}: {exc}") from exc
         log.warning("bulk load of %s degraded to INSERT path: %s", table, exc)
-        conn = driver_connection(spark, source.options)
-        try:
-            _execute_update(conn, f"CREATE TABLE {table} ({ddl})")
-        finally:
-            conn.close()
-        jdbc_writer(df, source, table, mode="append")
-        return "insert"
+        return insert_load(spark, df, source, table, ddl)
     if expected_count is None:
         expected_count = df.count()
     staged = df.select(
@@ -572,11 +589,9 @@ def jdbc_bulk_loader(
         # same DDL, reload through the distributed batched writer.
         log.warning("bulk load of %s degraded to INSERT path: %s", table, failure)
         _drop_table_if_exists(conn, table)
-        _execute_update(conn, f"CREATE TABLE {table} ({ddl})")
     finally:
         conn.close()
-    jdbc_writer(df, source, table, mode="append")
-    return "insert"
+    return insert_load(spark, df, source, table, ddl)
 
 
 def derby_shutdown(spark: SparkSession, db_path: str) -> None:

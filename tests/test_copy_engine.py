@@ -1033,3 +1033,53 @@ def test_resolution_saving_in_spark_jobs_and_reads(spark, tmp_path, monkeypatch)
     engine.do_copy(load_date=datetime(2024, 1, 1))
     assert calls == {str(src / "t.parquet"): 1, str(src / "u.parquet"): 1}
     assert engine.sql("SELECT SUM(n) AS s FROM by_name").collect()[0]["s"] == 30
+
+
+@pytest.mark.parametrize("store", ["parquet", "derby"])
+def test_failed_publish_saves_no_watermark_on_either_store(spark, tmp_path, store):
+    """One driver serves both stores: a triggered run whose publish raises
+    exits 1 and saves no watermark, the rerun exits 0 and publishes, and the
+    next tick without new rows exits 2."""
+    src_dir = tmp_path / "src"
+    spark.range(10).selectExpr("id AS k", "id * 2 AS v").coalesce(1).write.parquet(
+        str(src_dir / "t.parquet")
+    )
+    raw = {
+        "warehouse_dir": str(tmp_path / "wh"),
+        "state_dir": str(tmp_path / "state"),
+        "sources": {"s": {"format": "parquet", "path": str(src_dir)}},
+        "tables": {
+            "j": {"source": "s", "from_table": "t", "to_table": "t_sync", "trigger": {"column": "k"}}
+        },
+    }
+    if store == "derby":
+        raw["sink"] = {
+            "format": "jdbc",
+            "options": {
+                "url": f"jdbc:derby:{tmp_path}/sinkdb;create=true",
+                "driver": "org.apache.derby.jdbc.EmbeddedDriver",
+            },
+        }
+    engine = CopyEngine(spark, load_spec(raw))
+    catalog = engine.catalog if store == "parquet" else engine.warehouse
+
+    def crash_publish(*a, **kw):
+        raise RuntimeError("simulated crash before publish")
+
+    d = datetime(2024, 6, 1)
+    catalog.publish = crash_publish
+    assert engine.run(load_date=d) == EXIT_ERROR
+    assert engine.store.load(engine.checksum, "j") is None
+    del catalog.publish
+
+    assert engine.run(load_date=d) == EXIT_OK
+    assert engine.store.load(engine.checksum, "j").value == 9
+    current = (
+        engine.catalog.current_version("default", "t_sync")
+        if store == "parquet"
+        else engine.warehouse.current_version("t_sync")
+    )
+    assert current.lower() == physical_name("t_sync", d)
+    assert engine.table("t_sync").count() == 10
+
+    assert engine.run(load_date=datetime(2024, 6, 2)) == EXIT_NO_NEW_DATA

@@ -132,3 +132,55 @@ def test_identifier_quoted_probe_failure_retries_unquoted(monkeypatch):
     got = wm.probe_max_jdbc(None, src, "t", "c")
     assert (got.value, got.type_name) == (41, "bigint")
     assert calls == [True, False]
+
+
+def test_native_trigger_probe_drops_partitioned_scan_options():
+    """A source whose options declare a partitioned scan (the auto-bounds
+    setup: ``partitionColumn`` + ``numPartitions``) must still run the
+    dialect-native one-row probe: a pushed query carries no partitioning
+    keys, which Spark rejects without ``dbtable`` — keeping them failed the
+    native probe on every tick and ran a second, portable probe."""
+    from mssql2monetdb_spark.config.spec import SourceSpec
+    from mssql2monetdb_spark.engine import watermark as wm
+
+    loads: list[dict] = []
+
+    class _Reader:
+        def format(self, fmt):
+            return self
+
+        def options(self, **opts):
+            loads.append(opts)
+            return self
+
+        def load(self):
+            return self
+
+        def collect(self):
+            return [(41,)]
+
+    class _Spark:
+        read = _Reader()
+
+    src = SourceSpec(
+        name="s",
+        format="jdbc",
+        options={
+            "url": "jdbc:postgresql://db1:5432/mart",
+            "dbtable": "t",
+            "partitionColumn": "k",
+            "lowerBound": "1",
+            "upperBound": "9",
+            "numPartitions": "4",
+            "fetchsize": "500",
+        },
+    )
+    got = wm.probe_max_jdbc(_Spark(), src, "t", "c")
+    assert (got.value, got.type_name) == (41, "bigint")
+    assert loads == [
+        {
+            "url": "jdbc:postgresql://db1:5432/mart",
+            "fetchsize": "500",
+            "query": "SELECT c FROM t ORDER BY c DESC LIMIT 1",
+        }
+    ]

@@ -94,3 +94,16 @@ def test_jdbc_source_requires_url():
     raw["sources"]["jdbc1"] = {"format": "jdbc", "options": {}}
     with pytest.raises(SpecError, match="url"):
         load_spec(raw)
+
+
+def test_targets_unique_per_schema_table_on_the_parquet_catalog():
+    """Two jobs writing one (schema, table) on the parquet catalog publish
+    the same version name, so the later write silently replaces the
+    earlier one's rows: refused at spec time, as on a JDBC sink."""
+    raw = base_spec(to_table="t")
+    raw["tables"]["t2"] = {"from_table": "orders", "to_table": "T"}
+    with pytest.raises(SpecError, match="unique per \\(schema, table\\)"):
+        load_spec(raw)
+    # the same table name in another schema is a different target
+    raw["tables"]["t2"]["schema"] = "mart"
+    assert load_spec(raw).jobs["t2"].schema_name == "mart"
