@@ -90,6 +90,9 @@ class CopyJob:
     create: bool = True
     allow_empty: bool = False
     auto_trim: bool = True
+    # a parquet version is invisible until its publish, which is all the
+    # reference's temp-table copy provides, so the parquet load reads it
+    # nowhere; a jdbc sink refuses False (load_spec)
     use_fast_view_switching: bool = True
     copy_via_temp_table: bool = False
     # watermark trigger (CopyTool.java:332-477)

@@ -20,8 +20,10 @@ are chosen by sink — the load itself, and newest/exists/drop/publish/cleanup
 
 Cross-cutting semantics kept on both: watermark trigger skip (exit code 2),
 empty-source guard aborting the whole run before any load, drop/create
-flags, temp-table CTAS promotion (parquet), state persisted only after full
-success.
+flags, state persisted only after full success. Every load writes its
+version under the public name: a version stays invisible until its publish,
+which is all the reference's temp-table copy (``CopyTool.java:1107-1124``)
+provides, so ``use_fast_view_switching=False`` loads the same way.
 
 One run resolves each file-source table once: ``do_copy`` keeps a per-run
 dict of resolved frames that the trigger probe, the extract, query-mode view
@@ -37,8 +39,6 @@ Exit codes: 0 = loaded, 1 = error, 2 = no new data
 from __future__ import annotations
 
 import logging
-import os
-import shutil
 from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame, SparkSession
@@ -241,8 +241,8 @@ class CopyEngine:
         extracting (the reference's CLI modes, ``CopyToolConfig.java:116-279``).
         """
         load_date = load_date or datetime.now(timezone.utc).replace(tzinfo=None)
-        # the store the storage steps run on; the parquet-only steps (the
-        # snapshot+delta load, temp-table promotion) use self.catalog
+        # the store the storage steps run on; the parquet-only step (the
+        # snapshot+delta load) uses self.catalog
         sink = None if self.warehouse is None else _SinkCatalog(self.warehouse, self.spec)
         catalog = self.catalog if sink is None else sink
         published: dict[str, str] = {}
@@ -317,7 +317,6 @@ class CopyEngine:
                 df = evolve_to_union(df, current_df.schema)
             if job.zorder_by:
                 df = self._zorder_cluster(df, job.zorder_by)
-            target = job.to_table if job.use_fast_view_switching else f"tmp_{job.to_table}"
             # Same-load_date reruns OVERWRITE their version (crash-retry
             # idempotence, pinned by test_same_load_date_is_idempotent) —
             # EXCEPT when this run's plan lazily reads the current
@@ -338,10 +337,6 @@ class CopyEngine:
             # is RECLAIMED — write_version's mode("overwrite") replaces the
             # corpse (the manifest-driven same-name replay the streaming
             # sync uses).
-            # The collision is computed on the PUBLIC name: in temp-table
-            # mode the written dir is tmp_-prefixed but the PHASE 3
-            # os.replace promotion lands on the public name, which is
-            # where the collision actually bites.
             eff_date = load_date
             if reads_current:
                 retained = set(
@@ -355,7 +350,7 @@ class CopyEngine:
                         break  # free, or an unpublished corpse to reclaim
                     eff_date += timedelta(seconds=1)
             physical = self.catalog.write_version(
-                df, job.schema_name, target, eff_date,
+                df, job.schema_name, job.to_table, eff_date,
                 sort_by=list(job.sort_by) if job.sort_by else None,
                 partition_by=list(job.partition_by) if job.partition_by else None,
             )
@@ -364,24 +359,9 @@ class CopyEngine:
         if no_switch:
             return loaded
 
-        # PHASE 3: publish (view switch / CTAS-promote for temp mode)
+        # PHASE 3: publish (view switch)
         for job_id, physical in loaded.items():
             job = self.spec.jobs[job_id]
-            if not job.use_fast_view_switching:
-                # CTAS promotion analog (op #17, CopyTool.java:1107-1124):
-                # re-publish the temp physical dir under the public name.
-                # A same-load_date retry overwrites its previous promotion
-                # (os.replace cannot rename onto a non-empty directory) —
-                # the same idempotent-retry contract as fast-mode
-                # write_version's mode("overwrite"). Parquet only: the spec
-                # refuses temp-table mode on a JDBC sink.
-                src_dir = self.catalog.version_dir(job.schema_name, physical)
-                promoted = physical.replace("tmp_", "", 1)
-                dst_dir = self.catalog.version_dir(job.schema_name, promoted)
-                if os.path.exists(dst_dir):
-                    shutil.rmtree(dst_dir)
-                os.replace(src_dir, dst_dir)
-                physical = promoted
             catalog.publish(self.spark, job.schema_name, job.to_table, physical)
             published[job_id] = physical
 

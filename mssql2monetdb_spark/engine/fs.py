@@ -15,9 +15,8 @@ Required store primitives (the contract, also documented in SCALE.md):
   atomic PUT. This is the only operation whose atomicity the zero-downtime
   switch depends on;
 - recursive delete (retention), mkdir, file copy;
-- OPTIONAL hard links — stores without them (all object stores) make
-  ``carry_mode="auto"`` degrade to copies and leave ``"manifest"`` (zero
-  carry I/O) as the scale path; ``"link"`` raises, by contract.
+- OPTIONAL hard links — on stores without them (all object stores) the
+  incremental carry degrades to byte copies at the first ``OSError``.
 """
 
 from __future__ import annotations
@@ -81,8 +80,7 @@ class HadoopFS:
     ``Options.Rename.OVERWRITE`` — atomic on HDFS; on S3A the final object
     PUT is itself atomic, which is the property the manifest needs. Hard
     links do not exist on any Hadoop store, so ``link`` raises ``OSError``
-    and the catalog's ``carry_mode="auto"`` degrades to copies (use
-    ``"manifest"`` for zero carry I/O at scale).
+    and the catalog's incremental carry degrades to copies.
     """
 
     def __init__(self, spark, base_uri: str):
@@ -171,10 +169,7 @@ class HadoopFS:
             pass
 
     def link(self, src: str, dst: str) -> None:
-        raise OSError(
-            "hadoop stores have no hard links — carry_mode 'auto' degrades "
-            "to copies; use carry_mode='manifest' for zero carry I/O"
-        )
+        raise OSError("hadoop stores have no hard links — the carry degrades to copies")
 
     def copy(self, src: str, dst: str) -> None:
         self._jvm.org.apache.hadoop.fs.FileUtil.copy(

@@ -25,6 +25,14 @@ written by older code, and after a crash between the data write and the
 schema write. Spark's file listing skips names starting with ``_``, so the
 sidecar is never read as data. ``mode("overwrite")`` replaces a version
 directory whole, so a sidecar never outlives the data it describes.
+
+Every version is a self-contained directory: ``write_version`` rewrites the
+table, and ``write_version_incremental`` rewrites the touched partitions and
+carries the rest by hard link (byte copy where the store has no links).
+Older releases could also carry partitions by reference, leaving a version
+that held only the partitions it rewrote plus a marker file naming the
+versions that held the rest. That format is gone: reading such a version,
+or carrying from it, raises instead of silently dropping rows.
 """
 
 from __future__ import annotations
@@ -66,11 +74,12 @@ class VersionedCatalog:
     version. The manifest write is an atomic single-object publish
     (``os.replace`` on POSIX; see ``engine/fs.py`` for the store contract).
 
-    ``fs`` routes ALL control-plane I/O (listing, manifest swap, carry,
-    retention deletes) through a store interface — ``LocalFS`` (default)
-    for POSIX paths, ``HadoopFS`` for HDFS/S3A/any Hadoop URI; the data
-    plane (parquet read/write) already goes through Spark's own Hadoop
-    layer, so a non-POSIX ``warehouse_dir`` needs only the matching ``fs``.
+    ``fs`` routes ALL control-plane I/O (listing, manifest swap, carry
+    links/copies, retention deletes) through a store interface —
+    ``LocalFS`` (default) for POSIX paths, ``HadoopFS`` for HDFS/S3A/any
+    Hadoop URI; the data plane (parquet read/write) already goes through
+    Spark's own Hadoop layer, so a non-POSIX ``warehouse_dir`` needs only
+    the matching ``fs``.
     """
 
     warehouse_dir: str
@@ -182,7 +191,6 @@ class VersionedCatalog:
         *,
         partition_col: str,
         base_physical: str | None,
-        carry_mode: str = "auto",
     ) -> str:
         """Materialize a new version rewriting ONLY the touched partitions.
 
@@ -199,166 +207,66 @@ class VersionedCatalog:
         working (every retained version remains a full self-describing
         directory).
 
-        ``carry_mode`` states the store contract explicitly:
-
-        - ``"auto"`` (default): capability probe — try ``os.link``, and on
-          the first ``OSError`` (object-store FUSE mounts, cross-device
-          staging, filesystems without hard links) degrade to byte copies
-          for the remainder of the carry. Content-identical either way —
-          pinned by ``tests/test_streaming.py`` parity tests.
-        - ``"link"``: hard links only; raises where unsupported (choose
-          when carry I/O must stay O(metadata), e.g. POSIX/HDFS).
-        - ``"copy"``: byte copies only — the portable mode for stores with
-          no link primitive; carry I/O becomes O(untouched bytes), still
-          sequential file copies with no compute.
-        - ``"manifest"``: carry BY REFERENCE — zero carry I/O on any
-          store. Untouched partitions are recorded in a ``_CARRIED.json``
-          manifest at the version root, each entry naming the version that
-          PHYSICALLY WROTE the partition (refs resolve transitively at
-          write time, so a ref never points at another ref). Readers
-          (``table_at``/``register_view``) stitch the version together by
-          reading the owned partitions plus one grouped scan per
-          referenced host version; ``cleanup`` becomes ref-counted — a
-          version directory past retention survives as a data host while
-          any retained version still references it (bounded by P hosts:
-          a never-rewritten partition pins its original writer, exactly
-          like a table-format data file). ``compact()`` reads through
-          refs and materializes them, releasing pinned hosts.
+        On a store without hard links (object-store FUSE mounts,
+        cross-device staging, every ``HadoopFS`` store) the first
+        ``OSError`` from ``fs.link`` switches the rest of the carry to byte
+        copies: the same content, at O(untouched bytes) carry I/O.
 
         Crash-retry safe the same way ``write_version`` is: the target
         directory is cleared first, so a replay that recomputes the same
         version name rebuilds it deterministically from the unchanged
         manifest state.
         """
-        if carry_mode not in ("auto", "link", "copy", "manifest"):
-            raise ValueError(
-                f"carry_mode must be auto|link|copy|manifest, got {carry_mode!r}"
-            )
+        if base_physical:
+            self._refuse_carried(schema, base_physical)
         physical = physical_name(table, load_date)
         out_dir = self.version_dir(schema, physical)
         self.fs.rmtree_quiet(out_dir)
         df_touched.write.mode("overwrite").partitionBy(partition_col).parquet(out_dir)
-        if carry_mode == "manifest":
-            refs: dict[str, dict] = {}
-            if base_physical:
-                base_dir = self.version_dir(schema, base_physical)
-                prefix = f"{partition_col}="
-                for entry in self.fs.listdir(base_dir):
-                    if not entry.startswith(prefix):
-                        continue
-                    if self.fs.exists(os.path.join(out_dir, entry)):
-                        continue  # touched: freshly rewritten above
-                    src = os.path.join(base_dir, entry)
-                    refs[entry] = {
-                        "version": base_physical,
-                        "files": [
-                            f for f in self.fs.listdir(src) if not f.startswith(("_", "."))
-                        ],
-                    }
-                # partitions the base itself carried by reference: copy the
-                # entry through — refs always name the PHYSICAL writer, so
-                # a ref never points at another ref (no transitive walks at
-                # read or retention time)
-                for entry, ref in self._carried_refs(schema, base_physical).items():
-                    if entry not in refs and not self.fs.exists(
-                        os.path.join(out_dir, entry)
-                    ):
-                        refs[entry] = ref
-            self.fs.write_atomic(
-                os.path.join(out_dir, "_CARRIED.json"),
-                json.dumps({"partition_col": partition_col, "refs": refs}),
-            )
+        if not base_physical:
             return physical
-        use_copy = carry_mode == "copy"
-
-        def carry_dir(src: str, dst: str) -> None:
-            nonlocal use_copy
-            self.fs.makedirs(dst)
-            for fname in self.fs.listdir(src):
+        base_dir = self.version_dir(schema, base_physical)
+        use_copy = False
+        for entry in self.fs.listdir(base_dir):
+            src_dir, dst_dir = os.path.join(base_dir, entry), os.path.join(out_dir, entry)
+            if not entry.startswith(f"{partition_col}=") or self.fs.exists(dst_dir):
+                continue  # not a partition, or touched: freshly rewritten above
+            self.fs.makedirs(dst_dir)
+            for fname in self.fs.listdir(src_dir):
                 if fname.startswith(("_", ".")):
                     continue  # write markers, not data
-                s, d = os.path.join(src, fname), os.path.join(dst, fname)
-                if use_copy:
-                    self.fs.copy(s, d)
-                    continue
-                try:
-                    self.fs.link(s, d)
-                except OSError:
-                    if carry_mode == "link":
-                        raise
-                    use_copy = True  # store has no links: copy from here on
-                    self.fs.copy(s, d)
-
-        if base_physical:
-            base_dir = self.version_dir(schema, base_physical)
-            prefix = f"{partition_col}="
-            for entry in self.fs.listdir(base_dir):
-                if not entry.startswith(prefix):
-                    continue
-                dst = os.path.join(out_dir, entry)
-                if self.fs.exists(dst):
-                    continue  # touched: freshly rewritten above
-                carry_dir(os.path.join(base_dir, entry), dst)
-            # a manifest-mode base owns only its touched partitions; the
-            # rest live in referenced host versions — materialize those
-            # here (mode switch manifest -> link/copy must not lose them)
-            for entry, ref in self._carried_refs(schema, base_physical).items():
-                dst = os.path.join(out_dir, entry)
-                if self.fs.exists(dst):
-                    continue
-                carry_dir(
-                    os.path.join(self.version_dir(schema, ref["version"]), entry), dst
-                )
+                src, dst = os.path.join(src_dir, fname), os.path.join(dst_dir, fname)
+                if not use_copy:
+                    try:
+                        self.fs.link(src, dst)
+                        continue
+                    except OSError:
+                        use_copy = True  # store has no links: copy from here on
+                self.fs.copy(src, dst)
         return physical
 
-    def _carried_refs(self, schema: str, physical: str | None) -> dict[str, dict]:
-        """The version's carry-by-reference manifest entries ({} when the
-        version owns all of its partitions — link/copy/full modes)."""
-        if not physical:
-            return {}
-        path = os.path.join(self.version_dir(schema, physical), "_CARRIED.json")
-        if not self.fs.exists(path):
-            return {}
-        return json.loads(self.fs.read_text(path))["refs"]
+    def _refuse_carried(self, schema: str, physical: str) -> None:
+        """Fail loudly on a version in the carry-by-reference format older
+        releases wrote (module docstring): it holds only the partitions it
+        owns, so reading it as a plain directory would drop rows."""
+        if self.fs.exists(os.path.join(self.version_dir(schema, physical), "_CARRIED.json")):
+            raise RuntimeError(
+                f"version {schema}.{physical} is in the removed carry-by-reference "
+                "format: it holds only the partitions it rewrote, the rest live in "
+                "older versions. compact() it with the previous release, which "
+                "still reads that format, then retry"
+            )
 
     def read_version(self, spark: SparkSession, schema: str, physical: str) -> DataFrame:
-        """Read one physical version, stitching in carried-by-reference
-        partitions (``carry_mode="manifest"``): the owned partition dirs
-        plus ONE grouped partition-discovering scan per referenced host
-        version. Versions with no manifest read as a plain parquet dir,
-        with the schema recorded in ``_SCHEMA.json`` when there is one."""
+        """Read one physical version as a plain parquet directory, with the
+        schema recorded in ``_SCHEMA.json`` when there is one."""
+        self._refuse_carried(schema, physical)
         d = self.version_dir(schema, physical)
-        carried = self._carried_refs(schema, physical)
         schema_path = os.path.join(d, SCHEMA_FILE)
         reader = spark.read
         if self.fs.exists(schema_path):
             reader = reader.schema(StructType.fromJson(json.loads(self.fs.read_text(schema_path))))
-        own = reader.parquet(d)
-        if not carried:
-            return own
-        by_host: dict[str, list[str]] = {}
-        for entry, ref in carried.items():
-            by_host.setdefault(ref["version"], []).append(entry)
-        out = own
-        for host, entries in sorted(by_host.items()):
-            host_dir = self.version_dir(schema, host)
-            missing = [e for e in entries if not self.fs.isdir(os.path.join(host_dir, e))]
-            if missing:
-                # a host this version references was reaped: versions kept
-                # by retention are always protected (cleanup's ref count),
-                # so this is a BEYOND-retention version surviving only as a
-                # data host — not independently readable, by contract
-                raise FileNotFoundError(
-                    f"version {physical} references partitions "
-                    f"{sorted(missing)} in reaped host {host}; versions "
-                    "beyond the retention window are data hosts, not "
-                    "readable snapshots (manifest carry contract)"
-                )
-            paths = [os.path.join(host_dir, e) for e in sorted(entries)]
-            out = out.unionByName(
-                spark.read.option("basePath", host_dir).parquet(*paths)
-            )
-        return out
+        return reader.parquet(d)
 
     def version_is_partitioned(self, schema: str, physical: str | None, partition_col: str) -> bool:
         """True iff the version directory is hive-partitioned on
@@ -373,14 +281,7 @@ class VersionedCatalog:
         if not self.fs.isdir(d):
             return False
         prefix = f"{partition_col}="
-        if any(e.startswith(prefix) for e in self.fs.listdir(d)):
-            return True
-        # manifest-carried versions may own few/no partition dirs but are
-        # fully partitioned through their refs
-        path = os.path.join(d, "_CARRIED.json")
-        if self.fs.exists(path):
-            return json.loads(self.fs.read_text(path))["partition_col"] == partition_col
-        return False
+        return any(e.startswith(prefix) for e in self.fs.listdir(d))
 
     def publish(
         self,
@@ -476,23 +377,14 @@ class VersionedCatalog:
         """PHASE 4 analog: drop versions beyond retention (op #21).
 
         Never drops the currently-published version even if it is old.
-        Ref-counted for manifest-carried tables: a version past retention
-        survives as a DATA HOST while any kept version's ``_CARRIED.json``
-        still references it (at most P hosts can stay pinned — one per
-        never-rewritten partition; ``compact()`` materializes refs and
-        releases them). Link/copy/full tables have no refs and reap
-        exactly as before.
+        Files a retained version carried by hard link stay readable: the
+        link keeps the data alive when the version that wrote it is reaped.
         """
         current = self.current_version(schema, table)
         versions = self.table_versions(schema, table)
-        kept = set(versions[:retain]) | ({current} - {None})
-        referenced: set[str] = set()
-        for v in kept:
-            for ref in self._carried_refs(schema, v).values():
-                referenced.add(ref["version"])
         dropped = []
         for physical in versions[retain:]:
-            if physical == current or physical in referenced:
+            if physical == current:
                 continue
             self.fs.rmtree(self.version_dir(schema, physical))
             dropped.append(physical)

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.jdbc import identifier_ladder, pushed_query
+from .fs import LocalFS
 
 log = logging.getLogger(__name__)
 
@@ -168,6 +169,7 @@ class WatermarkStore:
 
     def __init__(self, state_dir: str):
         self.state_dir = state_dir
+        self.fs = LocalFS()
         os.makedirs(state_dir, exist_ok=True)
 
     def _path(self, checksum: str, job_id: str = "") -> str:
@@ -189,11 +191,9 @@ class WatermarkStore:
             return None
 
     def save(self, checksum: str, wm: Watermark, job_id: str = "") -> None:
-        path = self._path(checksum, job_id)
-        tmp = path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({**wm.to_json(), "checksum": checksum}, fh)
-        os.replace(tmp, path)
+        self.fs.write_atomic(
+            self._path(checksum, job_id), json.dumps({**wm.to_json(), "checksum": checksum})
+        )
 
     # -- probe-degradation persistence (ADVICE r10) -----------------------
     # The escalation rule "same job, consecutive runs -> ERROR" must hold
@@ -223,10 +223,7 @@ class WatermarkStore:
             if os.path.exists(path):
                 os.remove(path)
             return
-        tmp = path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"n": int(n)}, fh)
-        os.replace(tmp, path)
+        self.fs.write_atomic(path, json.dumps({"n": int(n)}))
 
 
 def has_new_data(probe: Watermark | None, state: Watermark | None) -> bool:

@@ -140,8 +140,8 @@ def pagerank(
     CTE, so the two shapes were always in lockstep) lets ReusedExchange
     dedup the derivation inside the single action. ``1/n`` and
     ``(1-d)/n`` stay single IEEE divisions either way — bit-identical
-    ranks (probe: scripts/pagerank_scalar_probe.py, min-of-5 4.82 s ->
-    4.40 s at sf0.1)."""
+    ranks (OPTIMIZATION_r11.md, applied optimization 2: min-of-5 4.82 s
+    -> 4.40 s at sf0.1)."""
     nodes = (
         edges.select(F.col("src").alias("node"))
         .unionAll(edges.select(F.col("dst").alias("node")))

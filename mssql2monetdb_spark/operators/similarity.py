@@ -61,7 +61,7 @@ def with_lsh_bands(emb_df: DataFrame, emb_col: str = "embedding") -> DataFrame:
     a single projection as an array of (band, bkey) structs and exploded
     — the same shape dedup.lsh_bands uses. (The first draft unioned one
     withColumn branch per band, i.e. LSH_BANDS scans PER CONSUMER.
-    Measured at production band counts — scripts/lsh_band_probe.py,
+    Measured at production band counts — SCALE.md "LSH banding shape",
     100k vectors, bands 2/8/16, interleaved min-of-3: WALL-TIME ties
     (union/explode 1.12 / 0.77 / 0.91 — total plane-dot work is
     identical and the HOF dot is interpreted in both shapes), but the

@@ -30,7 +30,8 @@ from . import lifecycle  # noqa: E402,F401
 # round (each displaces a tail canary back to NEXT_WINDOW_QUEUE head):
 #   - graph_pagerank: the rank update now iterates on the rank frame
 #     instead of re-deriving nodes+nstats per round (operators/graph.py;
-#     bit-identical ranks, probe-asserted — scripts/pr_shape_probe.py).
+#     bit-identical ranks, probe-asserted — commit 9286347, VERDICT.md
+#     round 12 audit item 3).
 #   - agg_tpch_q1: the unsplittable single-row-group scan is spread
 #     before the 7 exact-DECIMAL partial aggregates (queries/relational.py;
 #     DECIMAL sums are order-insensitive by construction).

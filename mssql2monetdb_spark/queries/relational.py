@@ -295,7 +295,7 @@ def agg_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is ~85% of the stage). On splittable inputs the partition probe makes
     # this a no-op — same contract as every parallelized() site. The same
     # spread measured WORSE on q3/q5 (light per-row work, broadcast-probe
-    # joins — scripts/factside_repart_probe.py), so it stays q1-only.
+    # joins — VERDICT.md, round 12 audit item 2), so it stays q1-only.
     li = parallelized(
         li.select(
             "l_returnflag", "l_linestatus", "l_quantity", "l_extendedprice",

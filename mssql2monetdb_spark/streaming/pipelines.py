@@ -236,7 +236,6 @@ def upsert_stream_available_now(
     *,
     key: str = "user_id",
     partition_buckets: int | None = None,
-    carry_mode: str = "auto",
 ) -> None:
     """Streaming SCD-1 sync into the versioned catalog: each micro-batch
     collapses to one row per ``key`` (latest ``(ts, event_id)`` wins),
@@ -290,11 +289,9 @@ def upsert_stream_available_now(
     under a DIFFERENT modulus, or with a flattened layout is migrated by
     one full bucketed rewrite on the next batch — linking old-modulus
     directories next to new-modulus rewrites of the same keys would
-    silently publish duplicates. ``carry_mode`` selects how untouched
-    buckets travel into each new version: ``"auto"`` (hard links with a
-    capability-probe fallback to byte copies), ``"link"``, or ``"copy"``
-    (object stores without a link primitive) — see
-    ``VersionedCatalog.write_version_incremental``.
+    silently publish duplicates. Untouched buckets travel into each new
+    version by hard link, or by byte copy on a store without links (see
+    ``VersionedCatalog.write_version_incremental``).
 
     Pinned by ``tests/test_streaming.py::test_upsert_stream_replay_is_
     idempotent`` (checkpoint wipe = every batch replays),
@@ -430,7 +427,6 @@ def upsert_stream_available_now(
                     and KEY_BUCKET_COL in existing.columns
                     else None
                 ),
-                carry_mode=carry_mode,
             )
         else:
             physical = catalog.write_version(merged, schema, table, load_date)

@@ -539,9 +539,7 @@ def test_upsert_stream_migrates_past_legacy_outsorting_version(spark, tmp_path):
     assert catalog.current_version("main", "user_state") > legacy_hi
 
 
-def _drain_partitioned(
-    spark, tmp_path, buckets, *, shards=3, ckpt="ckpt_part", carry_mode="auto"
-):
+def _drain_partitioned(spark, tmp_path, buckets, *, shards=3, ckpt="ckpt_part"):
     from mssql2monetdb_spark.engine.publish import VersionedCatalog
     from mssql2monetdb_spark.streaming.pipelines import (
         events_stream,
@@ -566,7 +564,6 @@ def _drain_partitioned(
         "user_state_p",
         str(tmp_path / ckpt),
         partition_buckets=buckets,
-        carry_mode=carry_mode,
     )
     return catalog
 
@@ -828,17 +825,25 @@ def test_upsert_stream_partitioned_bucket_count_change_migrates(spark, tmp_path)
     assert got == expected
 
 
-def test_upsert_stream_partitioned_copy_carry_parity(spark, tmp_path):
-    """carry_mode='copy' (the object-store-portable mode, no link
-    primitive) must publish byte-for-byte the same CONTENT as the default
-    link carry — and actually copy: no carried file may share an inode
-    with the base version."""
+def test_upsert_stream_partitioned_copy_carry_parity(spark, tmp_path, monkeypatch):
+    """The copy carry (taken where the store has no hard links) must
+    publish the same CONTENT as the default link carry — and actually
+    copy: no carried file may share an inode with the base version."""
     import os
 
-    catalog = _drain_partitioned(spark, tmp_path, buckets=8, carry_mode="copy")
-    out = catalog.table_at(spark, "main", "user_state_p")
-    got = {r.user_id: r.event_id for r in out.collect()}
-    assert got == _latest_per_user(spark)
+    def read(catalog):
+        out = catalog.table_at(spark, "main", "user_state_p")
+        return {r.user_id: r.event_id for r in out.collect()}
+
+    linked = read(_drain_partitioned(spark, tmp_path / "link", buckets=8))
+
+    def no_link(src, dst, *a, **k):
+        raise OSError("EXDEV: cross-device link (simulated object store)")
+
+    monkeypatch.setattr(os, "link", no_link)
+    catalog = _drain_partitioned(spark, tmp_path / "copy", buckets=8)
+    got = read(catalog)
+    assert got == linked == _latest_per_user(spark)
 
     # 3 shards -> >= 2 versions with carried (untouched) buckets; every
     # data file in the published version must be link-count 1 (a copy)
@@ -855,9 +860,8 @@ def test_upsert_stream_partitioned_copy_carry_parity(spark, tmp_path):
 
 
 def test_write_version_incremental_auto_falls_back_to_copy(spark, tmp_path, monkeypatch):
-    """carry_mode='auto' on a store without hard links (os.link raises):
-    the capability probe degrades to copies mid-carry with identical
-    published content."""
+    """On a store without hard links (os.link raises) the carry degrades
+    to byte copies mid-carry with identical published content."""
     import os
 
     def no_link(src, dst, *a, **k):
@@ -870,21 +874,6 @@ def test_write_version_incremental_auto_falls_back_to_copy(spark, tmp_path, monk
         for r in catalog.table_at(spark, "main", "user_state_p").collect()
     }
     assert got == _latest_per_user(spark)
-
-
-def test_write_version_incremental_link_mode_raises_without_links(spark, tmp_path, monkeypatch):
-    """carry_mode='link' states a hard requirement: on a linkless store it
-    must raise, never silently copy."""
-    import os
-
-    import pytest
-
-    def no_link(src, dst, *a, **k):
-        raise OSError("EPERM: links unsupported")
-
-    monkeypatch.setattr(os, "link", no_link)
-    with pytest.raises(Exception):
-        _drain_partitioned(spark, tmp_path, buckets=8, carry_mode="link")
 
 
 def test_compact_carries_buckets_meta_and_keeps_fast_path(spark, tmp_path):
@@ -1018,150 +1007,6 @@ def test_stateful_tracker_event_time_replay_deterministic(spark, tmp_path):
     rows_a = sorted(map(tuple, a.collect()))
     rows_b = sorted(map(tuple, b.collect()))
     assert rows_a == rows_b and len(rows_a) > 0
-
-
-def test_upsert_stream_partitioned_manifest_carry_parity(spark, tmp_path):
-    """carry_mode='manifest' (carry BY REFERENCE — zero carry I/O, the
-    object-store mode) publishes the same content as the link carry; the
-    current version OWNS only the buckets its batch touched and names the
-    rest in _CARRIED.json."""
-    import json
-    import os
-
-    from mssql2monetdb_spark.streaming.pipelines import KEY_BUCKET_COL
-
-    catalog = _drain_partitioned(spark, tmp_path, buckets=8, carry_mode="manifest")
-    out = catalog.table_at(spark, "main", "user_state_p")
-    got = {r.user_id: r.event_id for r in out.collect()}
-    assert got == _latest_per_user(spark)
-
-    cur = catalog.current_version("main", "user_state_p")
-    cur_dir = catalog.version_dir("main", cur)
-    manifest = os.path.join(cur_dir, "_CARRIED.json")
-    assert os.path.exists(manifest)
-    refs = json.load(open(manifest))["refs"]
-    owned = [e for e in os.listdir(cur_dir) if e.startswith(f"{KEY_BUCKET_COL}=")]
-    # carried + owned cover the bucket space with no overlap
-    assert refs and set(refs).isdisjoint(owned)
-    # refs name PHYSICAL writers (never another ref): every referenced
-    # bucket dir exists as a real directory in its host version
-    for entry, ref in refs.items():
-        host_dir = catalog.version_dir("main", ref["version"])
-        assert os.path.isdir(os.path.join(host_dir, entry))
-
-
-def test_manifest_retention_refcounts_hosts_and_compact_releases(spark, tmp_path):
-    """Keep-2 retention must NOT reap a version past retention while a
-    retained version still references its partitions (ref-counted GC);
-    compact() materializes the refs, after which the host is reclaimable."""
-    from datetime import datetime
-
-    catalog = _drain_partitioned(spark, tmp_path, buckets=8, carry_mode="manifest")
-    versions = catalog.table_versions("main", "user_state_p")
-    assert len(versions) == 3  # three shards -> three publishes
-    v1 = versions[-1]  # the original writer of never-rewritten buckets
-
-    dropped = catalog.cleanup("main", "user_state_p")
-    assert v1 not in dropped  # referenced: survives as a data host
-    assert v1 in catalog.table_versions("main", "user_state_p")
-    before = {
-        r.user_id: r.event_id
-        for r in catalog.table_at(spark, "main", "user_state_p").collect()
-    }
-    assert before == _latest_per_user(spark)
-
-    # compact reads THROUGH the refs and owns everything it writes
-    catalog.compact(
-        spark, "main", "user_state_p", datetime(2030, 1, 2), partition_by=["_kb"]
-    )
-    after = {
-        r.user_id: r.event_id
-        for r in catalog.table_at(spark, "main", "user_state_p").collect()
-    }
-    assert after == before
-    # the retained BACKUP (a manifest version) still references v1, so the
-    # host stays protected through this cleanup too
-    catalog.cleanup("main", "user_state_p")
-    assert v1 in catalog.table_versions("main", "user_state_p")
-    # a second compact pushes every ref-carrying version out of retention:
-    # the host finally reaps, content unchanged
-    catalog.compact(
-        spark, "main", "user_state_p", datetime(2030, 1, 3), partition_by=["_kb"]
-    )
-    dropped2 = catalog.cleanup("main", "user_state_p")
-    assert v1 in dropped2
-    final = {
-        r.user_id: r.event_id
-        for r in catalog.table_at(spark, "main", "user_state_p").collect()
-    }
-    assert final == before
-
-
-def test_manifest_replay_is_idempotent(spark, tmp_path):
-    """Checkpoint wipe replays every batch through the manifest path."""
-    import shutil
-
-    from mssql2monetdb_spark.streaming.pipelines import (
-        events_stream,
-        upsert_stream_available_now,
-    )
-
-    catalog = _drain_partitioned(spark, tmp_path, buckets=4, carry_mode="manifest")
-    before = {
-        r.user_id: r.event_id
-        for r in catalog.table_at(spark, "main", "user_state_p").collect()
-    }
-    shutil.rmtree(str(tmp_path / "ckpt_part"))
-    upsert_stream_available_now(
-        events_stream(spark, str(tmp_path / "in_part"), max_files_per_trigger=1),
-        catalog,
-        "main",
-        "user_state_p",
-        str(tmp_path / "ckpt_part"),
-        partition_buckets=4,
-        carry_mode="manifest",
-    )
-    after = {
-        r.user_id: r.event_id
-        for r in catalog.table_at(spark, "main", "user_state_p").collect()
-    }
-    assert after == before
-
-
-def test_manifest_to_link_mode_switch_materializes_refs(spark, tmp_path):
-    """Switching a manifest-carried table back to the link carry must
-    materialize the referenced partitions (owning them in the new version)
-    — never silently drop what the base carried by reference."""
-    from mssql2monetdb_spark.streaming.pipelines import (
-        events_stream,
-        upsert_stream_available_now,
-    )
-
-    catalog = _drain_partitioned(spark, tmp_path, buckets=8, carry_mode="manifest")
-    one_user = load_table(spark, SF, "events").orderBy("event_id").limit(1)
-    one_user.coalesce(1).write.mode("append").parquet(str(tmp_path / "in_part"))
-    upsert_stream_available_now(
-        events_stream(spark, str(tmp_path / "in_part"), max_files_per_trigger=1),
-        catalog,
-        "main",
-        "user_state_p",
-        str(tmp_path / "ckpt_part"),
-        partition_buckets=8,  # default link carry
-    )
-    import os
-
-    cur_dir = catalog.version_dir(
-        "main", catalog.current_version("main", "user_state_p")
-    )
-    assert not os.path.exists(os.path.join(cur_dir, "_CARRIED.json"))
-    got = {
-        r.user_id: r.event_id
-        for r in catalog.table_at(spark, "main", "user_state_p").collect()
-    }
-    delta_uid, delta_eid = one_user.select("user_id", "event_id").first()[:2]
-    expected = _latest_per_user(spark)
-    expected[delta_uid] = delta_eid
-    assert got == expected
 
 
 def test_stream_quality_classifier_matches_batch(spark, tmp_path, tmp_path_factory):
