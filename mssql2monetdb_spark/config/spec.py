@@ -21,9 +21,12 @@ from __future__ import annotations
 
 import hashlib
 import json
+import logging
 import os
 import re
 from dataclasses import dataclass, field
+
+log = logging.getLogger(__name__)
 
 
 class SpecError(ValueError):
@@ -94,6 +97,9 @@ class CopyJob:
     # reference's temp-table copy provides, so the parquet load reads it
     # nowhere; a jdbc sink refuses False (load_spec)
     use_fast_view_switching: bool = True
+    # the same reason as use_fast_view_switching: the versioned load already
+    # keeps a version out of sight until its publish, so the engine reads it
+    # nowhere; load_spec warns when a job sets it
     copy_via_temp_table: bool = False
     # watermark trigger (CopyTool.java:332-477)
     trigger_table: str | None = None
@@ -217,6 +223,13 @@ def load_spec(spec: dict | str, env: dict[str, str] | None = None) -> JobSpec:
             )
     if not jobs:
         raise SpecError("spec defines no tables")
+    temp_table_jobs = sorted(j for j, job in jobs.items() if job.copy_via_temp_table)
+    if temp_table_jobs:
+        log.warning(
+            "copy_via_temp_table has no effect (every load lands as an unpublished "
+            "version); set by: %s",
+            ", ".join(temp_table_jobs),
+        )
 
     # mail block (reference CONFIG_KEYS MAIL_* family, CopyToolConfig):
     # optional; ${ENV} interpolation above covers credentials

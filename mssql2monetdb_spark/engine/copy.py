@@ -26,11 +26,27 @@ which is all the reference's temp-table copy (``CopyTool.java:1107-1124``)
 provides, so ``use_fast_view_switching=False`` loads the same way.
 
 One run resolves each file-source table once: ``do_copy`` keeps a per-run
-dict of resolved frames that the trigger probe, the extract, query-mode view
-registration and the ``count_query`` all share. The run therefore pins each
-source's file listing at its first read — rows that land mid-run are left
-for the next tick, whose probe sees them — and pays one schema inference per
-source instead of one per read. The next run resolves afresh.
+dict of resolved frames that the Spark trigger probe, the extract, query-mode
+view registration and the ``count_query`` all share, so a run pins each
+source's file listing at its first read and pays one schema inference per
+source instead of one per read. The next run resolves afresh. The trigger
+probe of a local parquet source reads only the files' footers
+(``engine/watermark.py``), so an idle tick starts no Spark job; that probe
+lists the files before the extract does, and an incremental job's bound
+``trigger IS NULL OR trigger <= probe`` leaves rows that land in between
+for the next tick, whose probe sees them.
+
+A tick pays only for the tables that changed. An ``incremental`` job is
+skipped — no extract, empty-guard count, load, publish or cleanup — when
+``drop`` is off, its probe is not ``None``, ``has_new_data(probe, state)``
+is False and it has a published version: its delta would be empty, so the
+next version would hold the rows the published one already holds. The run
+returns that published name for it and re-points only the session's view.
+The reference has no incremental mode and re-copies every table whenever any
+trigger fires (``CopyTool.java:168-314``); non-incremental triggered jobs
+still do, since a full copy is also how deletes reach the warehouse. The one
+visible difference: a column added to a skipped job's source without new
+rows appears at the next tick that brings rows, not at this one.
 
 Exit codes: 0 = loaded, 1 = error, 2 = no new data
 (``CopyTool.java:66-68,95-106``).
@@ -39,6 +55,7 @@ Exit codes: 0 = loaded, 1 = error, 2 = no new data
 from __future__ import annotations
 
 import logging
+import os
 from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame, SparkSession
@@ -49,7 +66,7 @@ from ..schema.evolve import evolve_to_union
 from ..schema.mapper import normalized_dataframe
 from ..sources.readers import read_source, register_source_views
 from .publish import VersionedCatalog, physical_name
-from .watermark import WatermarkStore, has_new_data, probe_max
+from .watermark import FooterFallback, WatermarkStore, has_new_data, probe_max, probe_max_footer
 
 log = logging.getLogger(__name__)
 
@@ -126,6 +143,22 @@ class CopyEngine:
                     )
                 else:
                     log.warning(msg, job.job_id, n, exc_info=True)
+        elif table:
+            # file source: the max from the parquet footers' row-group
+            # statistics — no Spark job (the reference's probe is a one-row
+            # metadata query too); what footers cannot answer falls back
+            try:
+                if src.format != "parquet":
+                    raise FooterFallback(f"{src.format} files carry no column statistics")
+                conf = self.spark.conf
+                return probe_max_footer(
+                    os.path.join(src.path, f"{table}.parquet"),
+                    job.trigger_column,
+                    case_sensitive=_conf_on(conf, "spark.sql.caseSensitive"),
+                    infer_ntz=_conf_on(conf, "spark.sql.parquet.inferTimestampNTZ.enabled"),
+                )
+            except FooterFallback as exc:
+                log.info("trigger probe for %s scans with Spark: %s", job.job_id, exc)
         trigger_job = CopyJob(
             job_id=f"{job.job_id}__trigger",
             source=job.source,
@@ -234,7 +267,9 @@ class CopyEngine:
         switch_only: bool = False,
         load_date: datetime | None = None,
     ) -> dict[str, str]:
-        """Run the pipeline; returns {job_id: physical_name}.
+        """Run the pipeline; returns {job_id: physical_name} — for an
+        incremental job skipped as unchanged (module docstring), the version
+        it already publishes.
 
         ``no_switch`` stops after phase 2 (load but don't publish);
         ``switch_only`` publishes the newest already-loaded version without
@@ -261,14 +296,34 @@ class CopyEngine:
 
         resolved: dict[str, DataFrame] = {}  # this run's source frames, by path
         probes = self.check_for_new_data(resolved)
+        # an incremental job whose probe did not move has an empty delta:
+        # its published version already holds what a reload would write
+        states = {
+            job_id: self.store.load(self.checksum, job_id)
+            for job_id, job in self.spec.jobs.items()
+            if job.incremental
+        }
+        unchanged: dict[str, str] = {}
+        for job_id, state in states.items():
+            job = self.spec.jobs[job_id]
+            probe = probes.get(job_id)
+            if job.drop or probe is None or has_new_data(probe, state):
+                continue
+            current = self.catalog.current_version(job.schema_name, job.to_table)
+            if current is not None:
+                unchanged[job_id] = current
 
         # PHASE 1: extract all (plans built lazily; counts force the scans)
-        frames = {job_id: self._extract(job, resolved) for job_id, job in self.spec.jobs.items()}
+        frames = {
+            job_id: self._extract(job, resolved)
+            for job_id, job in self.spec.jobs.items()
+            if job_id not in unchanged
+        }
         counts = self.assert_non_empty(frames, resolved)
 
         # PHASE 2: load all (each job writes a new version; the drop/create
         # flags mirror reference ops #12/#15)
-        loaded: dict[str, str] = {}
+        loaded: dict[str, str] = dict(unchanged)
         for job_id, df in frames.items():
             job = self.spec.jobs[job_id]
             if job.drop:
@@ -295,16 +350,17 @@ class CopyEngine:
             # the full table every run; this is the Spark-first upgrade).
             # Rows newer than this run's probe are left out as well: the
             # probe is the watermark saved on success, so the next tick
-            # loads them — loading them now would load them twice. File
-            # sources already pin their listing at the probe; this bound
-            # covers sources that cannot, such as JDBC tables.
+            # loads them — loading them now would load them twice. The
+            # probe may list the files before the extract does, so this
+            # bound is what keeps such rows out, for file and JDBC sources
+            # alike.
             reads_current = False
             if job.incremental:
                 trigger = F.col(job.trigger_column)
                 probe = probes.get(job_id)
                 if probe is not None:
                     df = df.filter(trigger.isNull() | (trigger <= F.lit(probe.value)))
-                state = self.store.load(self.checksum, job.job_id)
+                state = states[job_id]
                 if state is not None and current_df is not None:
                     delta = df.filter(trigger > F.lit(state.value))
                     df = current_df.unionByName(delta, allowMissingColumns=True)
@@ -359,14 +415,19 @@ class CopyEngine:
         if no_switch:
             return loaded
 
-        # PHASE 3: publish (view switch)
-        for job_id, physical in loaded.items():
+        # PHASE 3: publish (view switch); unchanged jobs keep their published
+        # version, and only the session's view is pointed at it
+        for job_id, physical in unchanged.items():
             job = self.spec.jobs[job_id]
-            catalog.publish(self.spark, job.schema_name, job.to_table, physical)
+            self.catalog.register_view(self.spark, job.schema_name, job.to_table)
             published[job_id] = physical
+        for job_id in frames:
+            job = self.spec.jobs[job_id]
+            catalog.publish(self.spark, job.schema_name, job.to_table, loaded[job_id])
+            published[job_id] = loaded[job_id]
 
         # PHASE 4: retention cleanup
-        for job_id in published:
+        for job_id in frames:
             job = self.spec.jobs[job_id]
             catalog.cleanup(job.schema_name, job.to_table)
 
@@ -416,6 +477,10 @@ class CopyEngine:
         self.catalog.register_view(self.spark, schema, table)
         name = table if schema == "default" else f"{schema}_{table}"
         return self.spark.table(name)
+
+
+def _conf_on(conf, key: str) -> bool:
+    return conf.get(key).strip().lower() == "true"
 
 
 class _SinkCatalog:

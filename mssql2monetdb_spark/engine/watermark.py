@@ -14,6 +14,27 @@ Ports the decision table of ``CopyTool.checkForNewData``
 | probe value > state value (typed compare)   | run            | 444-473 |
 | otherwise                                   | SKIP (exit 2)  | 95-98 |
 
+How the probe is taken, by source:
+
+| source                                  | probe                              |
+|-----------------------------------------|------------------------------------|
+| JDBC table                              | source-side MAX (:func:`probe_max_jdbc`) |
+| local parquet table                     | footer statistics (:func:`probe_max_footer`), no Spark job |
+| anything the footer cannot answer       | Spark ``agg(max)`` scan (:func:`probe_max`) |
+
+The footer probe answers from the row-group min/max the parquet writer
+recorded (Dremel's metadata-instead-of-scan, VLDB 2020), typed exactly as
+:func:`probe_max` types Spark's answer. The run takes the Spark probe
+instead, and logs why once per job (:class:`FooterFallback`'s message),
+when the source is CSV/JSON/ORC; the path has a URI scheme other than
+``file:``; the table directory has subdirectories (hive partitions); no
+data file is listed or a footer cannot be read; the column is missing,
+nested, quoted or dotted, or matches no or several names under Spark's name
+resolution; its parquet type differs between files; it is INT96, unsigned,
+NANOS or outside bigint/int/smallint/tinyint/date/timestamp; a date or
+timestamp lies before 1900 (where Spark may rebase legacy calendar values);
+or a non-empty row group lacks min/max and is not all-null.
+
 State is persisted ONLY after a fully successful run
 (``CopyTool.java:305-309``) — a failed run re-processes.
 """
@@ -25,9 +46,11 @@ import logging
 import os
 from dataclasses import dataclass
 from datetime import date, datetime
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DateType, TimestampNTZType, TimestampType
 
 from ..sources.jdbc import identifier_ladder, pushed_query
 from .fs import LocalFS
@@ -88,6 +111,134 @@ def probe_max(df: DataFrame, column: str) -> Watermark | None:
     pull the whole trigger column across the wire at a 100 TB source."""
     row = df.agg(F.max(column).alias("m")).collect()[0]
     return _typed_watermark(row["m"], column)
+
+
+class FooterFallback(Exception):
+    """The parquet footers cannot give :func:`probe_max`'s exact answer; the
+    message says why. The caller probes with Spark instead."""
+
+
+#: 1900-01-01 in days and in microseconds since the epoch: older values may
+#: be rebased from the legacy hybrid calendar on read, which footers don't see
+_OLDEST_DAY = -25567
+_OLDEST_MICROS = _OLDEST_DAY * 86_400_000_000
+
+
+def _hidden(name: str) -> bool:
+    """Spark's listing filter (``HadoopFSUtils.shouldFilterOutPathName``):
+    metadata, hidden and in-flight names are not data."""
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _data_files(path: str) -> list[str]:
+    """The data files ``spark.read.parquet(path)`` would read."""
+    uri = urlparse(path)
+    if uri.scheme not in ("", "file") or uri.netloc not in ("", "localhost"):
+        raise FooterFallback(f"{path} is not a local path")
+    local = uri.path if uri.scheme else path
+    if os.path.isfile(local):
+        return [local]
+    try:
+        entries = [e for e in os.scandir(local) if not _hidden(e.name)]
+    except OSError as exc:
+        raise FooterFallback(f"cannot list {local}: {exc}") from exc
+    if any(e.is_dir() for e in entries):
+        raise FooterFallback(f"{local} has subdirectories (hive partitions)")
+    if not entries:
+        raise FooterFallback(f"{local} holds no data file")
+    return sorted(e.path for e in entries)
+
+
+def _footer_kind(col, infer_ntz: bool) -> tuple[str, int]:
+    """(kind, micros per unit) of a top-level parquet column as Spark reads
+    it: kind is ``int``, ``date``, ``ltz`` (TimestampType) or ``ntz``."""
+    logical = json.loads(col.logical_type.to_json())
+    lt = logical["Type"]
+    if col.physical_type in ("INT32", "INT64"):
+        wide = col.physical_type == "INT64"
+        if lt == "None" or (
+            lt == "Int" and logical["isSigned"] and (logical["bitWidth"] == 64) == wide
+        ):
+            return "int", 1
+        if lt == "Date" and not wide:
+            return "date", 1
+        if lt == "Timestamp" and wide:
+            scale = {"milliseconds": 1000, "microseconds": 1}.get(logical["timeUnit"])
+            if scale is not None:
+                ntz = infer_ntz and not logical["isAdjustedToUTC"]
+                return ("ntz" if ntz else "ltz"), scale
+    raise FooterFallback(
+        f"column {col.name!r} is {col.physical_type} {col.logical_type.to_json()}, "
+        "not a signed integer, date or milli/microsecond timestamp"
+    )
+
+
+def probe_max_footer(
+    path: str, column: str, *, case_sensitive: bool = False, infer_ntz: bool = True
+) -> Watermark | None:
+    """:func:`probe_max` of ``spark.read.parquet(path)`` from the files'
+    row-group statistics — the files' footers, no data read and no Spark job.
+
+    ``case_sensitive`` and ``infer_ntz`` mirror the session's
+    ``spark.sql.caseSensitive`` and
+    ``spark.sql.parquet.inferTimestampNTZ.enabled``. Raises
+    :class:`FooterFallback` whenever the footers cannot give Spark's exact
+    answer (the cases are listed in the module docstring)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if "." in column or "`" in column:
+        raise FooterFallback(f"{column!r} is not a plain column name")
+    key = column if case_sensitive else column.lower()
+    signature = None
+    lo = hi = None
+    for f in _data_files(path):
+        try:
+            md = pq.read_metadata(f)
+            names = md.schema.to_arrow_schema().names
+        except (OSError, pa.ArrowException) as exc:
+            raise FooterFallback(f"unreadable footer {f}: {exc}") from exc
+        matches = [n for n in names if (n if case_sensitive else n.lower()) == key]
+        if len(matches) != 1:
+            raise FooterFallback(f"{column!r} matches {len(matches)} columns of {f}")
+        leaf = [i for i in range(md.num_columns) if md.schema.column(i).path == matches[0]]
+        if len(leaf) != 1:
+            raise FooterFallback(f"{column!r} is nested in {f}")
+        col = md.schema.column(leaf[0])
+        if signature is None:
+            signature = (col.physical_type, col.logical_type.to_json())
+            kind, scale = _footer_kind(col, infer_ntz)
+        elif signature != (col.physical_type, col.logical_type.to_json()):
+            raise FooterFallback(f"{column!r} changes type between files ({f})")
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            if rg.num_rows == 0:
+                continue
+            stats = rg.column(leaf[0]).statistics
+            if stats is not None and stats.has_min_max:
+                lo = stats.min_raw if lo is None else min(lo, stats.min_raw)
+                hi = stats.max_raw if hi is None else max(hi, stats.max_raw)
+            elif stats is None or not stats.has_null_count or stats.null_count != rg.num_rows:
+                raise FooterFallback(f"a row group of {f} has no min/max for {column!r}")
+    if hi is None:
+        return None  # every row NULL, or no rows: Spark's MAX is NULL too
+    if kind != "int" and lo * scale < (_OLDEST_DAY if kind == "date" else _OLDEST_MICROS):
+        raise FooterFallback(f"{column!r} holds values before 1900")
+    convert = {
+        "int": int,
+        "date": DateType().fromInternal,
+        "ltz": TimestampType().fromInternal,
+        "ntz": TimestampNTZType().fromInternal,
+    }[kind]
+    try:
+        value = convert(hi * scale)
+    except (ValueError, OverflowError, OSError) as exc:
+        raise FooterFallback(f"{column!r} max {hi} is out of Python's range: {exc}") from exc
+    return _typed_watermark(value, column)
 
 
 def jdbc_max_probe_frame(

@@ -190,6 +190,12 @@ def find_offenders(
     return changed, new, offenders
 
 
+def _named(names: list[str]) -> str:
+    """``3 [a, b, c]`` — a count followed by the sorted names, so a report
+    says which plans moved without a ``--dump-dir`` diff."""
+    return f"{len(names)} [{', '.join(sorted(names))}]" if names else "0"
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--repo-root", default=str(REPO))
@@ -225,7 +231,7 @@ def main() -> int:
         if offenders:
             print(f"FORCED update for out-of-window changed plans: {offenders}")
         FP_FILE.write_text(json.dumps(fps, indent=1, sort_keys=True) + "\n")
-        print(f"updated {FP_FILE.name}: {len(changed)} changed, {len(new)} new")
+        print(f"updated {FP_FILE.name}: {_named(changed)} changed, {_named(new)} new")
         return 0
 
     # --check (default)
@@ -238,8 +244,8 @@ def main() -> int:
         )
         return 1
     print(
-        f"OK: {len(fps)} fingerprints; {len(changed)} changed (all inside window); "
-        f"{len(new)} new"
+        f"OK: {len(fps)} fingerprints; {_named(changed)} changed (all inside window); "
+        f"{_named(new)} new"
     )
     return 0
 

@@ -1127,3 +1127,131 @@ def test_failed_publish_saves_no_watermark_on_either_store(spark, tmp_path, stor
     assert engine.table("t_sync").count() == 10
 
     assert engine.run(load_date=datetime(2024, 6, 2)) == EXIT_NO_NEW_DATA
+
+
+def _polled_engine(spark, tmp_path, extra_tables=None):
+    """Two triggered incremental parquet tables, ``a`` (20 rows) and ``b``
+    (10 rows), plus ``extra_tables``, after their first load."""
+    src = tmp_path / "src"
+    _append_rows(spark, str(src / "a.parquet"), 0, 20)
+    _append_rows(spark, str(src / "b.parquet"), 0, 10)
+    tables = {
+        t: {"from_table": t, "trigger": {"column": "seq"}, "incremental": True} for t in "ab"
+    }
+    tables.update(extra_tables or {})
+    engine = CopyEngine(
+        spark,
+        load_spec(
+            {
+                "warehouse_dir": str(tmp_path / "wh"),
+                "state_dir": str(tmp_path / "state"),
+                "sources": {"_default": {"format": "parquet", "path": str(src)}},
+                "tables": tables,
+            }
+        ),
+    )
+    assert engine.run(load_date=datetime(2024, 1, 1)) == EXIT_OK
+    return engine, src
+
+
+def _version_files(cat, table):
+    """Every retained version of ``table`` with its files' identities."""
+    import os
+
+    out = {}
+    for physical in cat.table_versions("default", table):
+        d = cat.version_dir("default", physical)
+        stats = {f: os.stat(os.path.join(d, f)) for f in os.listdir(d)}
+        out[physical] = {(f, st.st_ino, st.st_mtime_ns) for f, st in stats.items()}
+    return out
+
+
+def test_idle_tick_starts_no_spark_job(spark, tmp_path):
+    """Both trigger probes come from the parquet footers: a tick that finds
+    nothing new exits 2 without a single Spark job."""
+    import uuid
+
+    engine, _ = _polled_engine(spark, tmp_path)
+    codes = []
+    jobs = _jobs_in_group(
+        spark,
+        f"idle-{uuid.uuid4()}",
+        lambda: codes.append(engine.run(load_date=datetime(2024, 1, 2))),
+    )
+    assert codes == [EXIT_NO_NEW_DATA]
+    assert jobs == []
+
+
+def test_fresh_tick_leaves_the_unchanged_table_alone(spark, tmp_path):
+    """Rows appended to ``a`` reload ``a`` only: ``b`` keeps its published
+    physical name, its retained versions and their very files, and both
+    published tables hold the right rows."""
+    engine, src = _polled_engine(spark, tmp_path)
+    cat = engine.catalog
+    b_current = cat.current_version("default", "b")
+    b_files = _version_files(cat, "b")
+    a_current = cat.current_version("default", "a")
+
+    _append_rows(spark, str(src / "a.parquet"), 20, 25)
+    d = datetime(2024, 1, 2)
+    published = engine.do_copy(load_date=d)
+    assert published == {"a": physical_name("a", d), "b": b_current}
+    assert cat.current_version("default", "b") == b_current
+    assert _version_files(cat, "b") == b_files
+    assert sorted(cat.table_versions("default", "a")) == sorted([a_current, physical_name("a", d)])
+    for table, n in (("a", 25), ("b", 10)):
+        row = engine.sql(f"SELECT COUNT(*) AS n, COUNT(DISTINCT seq) AS k, SUM(v) AS s FROM {table}").collect()[0]
+        assert (row["n"], row["k"], row["s"]) == (n, n, sum(2 * i for i in range(n))), table
+    assert engine.store.load(engine.checksum, "a").value == 24
+    assert engine.store.load(engine.checksum, "b").value == 9
+    # b's unchanged probe does not count as new data on the next tick
+    assert engine.run(load_date=datetime(2024, 1, 3)) == EXIT_NO_NEW_DATA
+
+
+def test_drop_and_full_copy_jobs_reload_when_another_trigger_fires(spark, tmp_path):
+    """Only an incremental job without ``drop`` is skipped: a ``drop=True``
+    incremental job and a non-incremental triggered job (a full copy, the
+    way deletes reach the warehouse) reload whenever any trigger fires."""
+    src = tmp_path / "src"
+    _append_rows(spark, str(src / "c.parquet"), 0, 6)
+    _append_rows(spark, str(src / "f.parquet"), 0, 8)
+    engine, _ = _polled_engine(
+        spark,
+        tmp_path,
+        {
+            "c": {"from_table": "c", "trigger": {"column": "seq"}, "incremental": True, "drop": True},
+            "f": {"from_table": "f", "trigger": {"column": "seq"}},
+        },
+    )
+    _append_rows(spark, str(src / "a.parquet"), 20, 22)
+    d = datetime(2024, 1, 2)
+    published = engine.do_copy(load_date=d)
+    for table in "acf":
+        assert published[table] == physical_name(table, d), table
+        assert engine.catalog.current_version("default", table) == physical_name(table, d)
+    assert published["b"] == physical_name("b", datetime(2024, 1, 1))
+    counts = {t: engine.sql(f"SELECT COUNT(*) AS n FROM {t}").collect()[0]["n"] for t in "abcf"}
+    assert counts == {"a": 22, "b": 10, "c": 6, "f": 8}
+
+
+def test_csv_trigger_probe_says_why_it_scans(spark, tmp_path, caplog):
+    """A source whose files carry no statistics is probed by Spark, and the
+    run logs the reason once for the job."""
+    from mssql2monetdb_spark.sources.readers import write_csv_compat
+
+    src_dir = tmp_path / "csv_src"
+    write_csv_compat(spark.range(5).selectExpr("id AS seq"), str(src_dir / "t.csv"))
+    spec = load_spec(
+        {
+            "warehouse_dir": str(tmp_path / "wh"),
+            "state_dir": str(tmp_path / "state"),
+            "sources": {"_default": {"format": "csv", "path": str(src_dir)}},
+            "tables": {"j": {"from_table": "t", "trigger": {"column": "seq"}}},
+        }
+    )
+    engine = CopyEngine(spark, spec)
+    with caplog.at_level("INFO", logger="mssql2monetdb_spark.engine.copy"):
+        assert engine.run(load_date=datetime(2024, 1, 1)) == EXIT_OK
+    reasons = [r.getMessage() for r in caplog.records if "scans with Spark" in r.getMessage()]
+    assert reasons == ["trigger probe for j scans with Spark: csv files carry no column statistics"]
+    assert engine.store.load(engine.checksum, "j").value == 4

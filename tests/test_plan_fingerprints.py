@@ -99,3 +99,11 @@ def test_normalizer_strips_session_global_counters():
         "lambda x_9#88)) (l_tax#12 = 0.0) AS _common_expr_15#2"
     )
     assert a == b
+
+
+def test_report_names_the_moved_plans():
+    """``--check``/``--update`` print the sorted names of the changed and
+    the new queries, not only how many there are."""
+    mod = _load_script()
+    assert mod._named(["c", "b"]) == "2 [b, c]"
+    assert mod._named([]) == "0"

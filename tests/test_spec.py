@@ -107,3 +107,21 @@ def test_targets_unique_per_schema_table_on_the_parquet_catalog():
     # the same table name in another schema is a different target
     raw["tables"]["t2"]["schema"] = "mart"
     assert load_spec(raw).jobs["t2"].schema_name == "mart"
+
+
+def test_copy_via_temp_table_warns_once_naming_its_jobs(caplog):
+    """``copy_via_temp_table`` is accepted for the reference's config files
+    but has no effect: one warning names every job that sets it."""
+    raw = base_spec(copy_via_temp_table=True)
+    raw["tables"]["t2"] = {"from_table": "orders"}
+    raw["tables"]["t0"] = {"from_table": "nation", "copy_via_temp_table": True}
+    with caplog.at_level("WARNING", logger="mssql2monetdb_spark.config.spec"):
+        spec = load_spec(raw)
+    assert spec.jobs["t1"].copy_via_temp_table is True
+    warnings = [r for r in caplog.records if "copy_via_temp_table" in r.getMessage()]
+    assert len(warnings) == 1
+    assert warnings[0].getMessage().endswith("set by: t0, t1")
+    caplog.clear()
+    with caplog.at_level("WARNING", logger="mssql2monetdb_spark.config.spec"):
+        load_spec(base_spec())
+    assert not [r for r in caplog.records if "copy_via_temp_table" in r.getMessage()]
