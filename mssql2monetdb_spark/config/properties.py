@@ -317,7 +317,15 @@ def properties_to_spec_dict(
         if monetdb_block.get("user") and monetdb_block.get("password"):
             options["user"] = monetdb_block["user"]
             options["password"] = monetdb_block["password"]
+        # batch.size is the reference's INSERT batch size (CopyToolConfig
+        # .java:44), the batched writer's batchsize option
+        if "batch_size" in top:
+            options["batchsize"] = str(top["batch_size"])
         spec["sink"] = {"format": "jdbc", "options": options}
+        # temp.directory is where the reference spools the file COPY INTO
+        # reads: the bulk loader's staging directory
+        if "temp_directory" in top:
+            spec["sink"]["staging_dir"] = top["temp_directory"]
     if top.get("scheduler_enabled") and top.get("scheduler_interval"):
         spec["scheduler_interval"] = top["scheduler_interval"]
     for passthrough in ("batch_size", "temp_directory"):

@@ -137,10 +137,6 @@ class JobSpec:
     sink: SourceSpec | None = None
     sink_method: str = "copy"  # "copy" (staged bulk) | "insert" (batched writer)
     sink_staging_dir: str | None = None  # shared-fs staging for the bulk path
-    #: per-part server-import fan-out (jdbc_bulk_loader); honored only where
-    #: the server accepts concurrent COPYs into one table (PostgreSQL) —
-    #: Derby/MonetDB clamp to the reference's single connection
-    sink_import_concurrency: int = 1
     raw: dict = field(default_factory=dict, compare=False)
 
 
@@ -259,7 +255,6 @@ def load_spec(spec: dict | str, env: dict[str, str] | None = None) -> JobSpec:
     sink = None
     sink_method = "copy"
     sink_staging_dir = None
-    sink_import_concurrency = 1
     sk = spec.get("sink")
     if sk is not None:
         if (sk.get("format") or "jdbc").lower() != "jdbc":
@@ -270,10 +265,10 @@ def load_spec(spec: dict | str, env: dict[str, str] | None = None) -> JobSpec:
         if sink_method not in ("copy", "insert"):
             raise SpecError(f"sink.method must be copy|insert, got {sink_method!r}")
         sink_staging_dir = sk.get("staging_dir")
-        raw_conc = sk.get("import_concurrency")
-        sink_import_concurrency = 1 if raw_conc is None else int(raw_conc)
-        if sink_import_concurrency < 1:
-            raise SpecError("sink.import_concurrency must be >= 1")
+        # the bulk loader imports on one connection, like the reference;
+        # the key is still accepted at that one value
+        if str(sk.get("import_concurrency", 1)) != "1":
+            raise SpecError("sink.import_concurrency must be 1 (one import connection)")
         sink = SourceSpec(name="_sink", format="jdbc", options=dict(sk["options"]))
         for job_id, job in jobs.items():
             if job.incremental:
@@ -322,7 +317,6 @@ def load_spec(spec: dict | str, env: dict[str, str] | None = None) -> JobSpec:
         sink=sink,
         sink_method=sink_method,
         sink_staging_dir=sink_staging_dir,
-        sink_import_concurrency=sink_import_concurrency,
         raw=spec,
     )
 

@@ -536,5 +536,4 @@ class _SinkCatalog:
             staging_dir=self.spec.sink_staging_dir,
             expected_count=expected_count,
             schema=self._schema(job.schema_name),
-            import_concurrency=self.spec.sink_import_concurrency,
         )

@@ -30,7 +30,6 @@ from __future__ import annotations
 
 import logging
 import re
-from contextlib import contextmanager
 from dataclasses import dataclass
 from datetime import datetime
 
@@ -38,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..config.spec import SourceSpec
 from ..sources.jdbc import (
-    driver_connection,
+    driver_statement,
     insert_load,
     jdbc_bulk_loader,
     pushed_query,
@@ -222,37 +221,9 @@ class JdbcWarehouse:
         (the connection's default schema) when no schema is given."""
         return f"{schema}.{name}" if schema else name
 
-    @contextmanager
     def _statement(self, *, transaction: bool = False):
-        """A statement on a fresh driver connection; the statement and the
-        connection are closed on every exit path.
-
-        With ``transaction`` the block runs with auto-commit off and commits
-        when it exits normally. A block that raises — or a commit that
-        fails — is rolled back BEFORE close: embedded Derby raises SQLState
-        25001 from close() on an active transaction, which would mask the
-        original failure and leak the connection, and a failed view switch
-        must leave readers on the OLD view."""
-        conn = driver_connection(self.spark, self.source.options)
-        committed = False
-        try:
-            if transaction:
-                conn.setAutoCommit(False)
-            st = conn.createStatement()
-            try:
-                yield st
-            finally:
-                st.close()
-            if transaction:
-                conn.commit()
-                committed = True
-        finally:
-            if transaction and not committed:
-                try:
-                    conn.rollback()
-                except Exception:  # noqa: BLE001 — closing anyway
-                    log.warning("rollback before close failed", exc_info=True)
-            conn.close()
+        """:func:`driver_statement` on this warehouse's connection options."""
+        return driver_statement(self.spark, self.source.options, transaction=transaction)
 
     def _current_schema(self) -> str:
         """The connection's current schema (cached — fixed connection
@@ -294,10 +265,9 @@ class JdbcWarehouse:
         with self._statement() as st:
             return self._probe_on(st, kind, schema=schema, **subst)
 
-    def _execute(self, *statements: str, transactional: bool = False) -> None:
-        with self._statement(transaction=transactional) as st:
-            for sql in statements:
-                st.execute(sql)
+    def _execute(self, sql: str) -> None:
+        with self._statement() as st:
+            st.execute(sql)
 
     # -- catalog probes (ops #15-16, MonetDBUtil.java:41-88) --------------
     def exists(self, name: str, *, schema: str | None = None) -> bool:
@@ -340,7 +310,7 @@ class JdbcWarehouse:
         )
         return parse_view_target(rows[0]) if rows else None
 
-    # -- schema verify + evolve (op #14, MonetDBUtil.java:339-394) ---------
+    # -- schema evolve (op #14, MonetDBUtil.java:339-394) -------------------
     def table_schema(self, table: str, *, schema: str | None = None):
         """The warehouse table's Spark schema from a zero-row metadata
         query (``SELECT * WHERE 1=0`` — the reference reads
@@ -348,47 +318,6 @@ class JdbcWarehouse:
         ``MonetDBUtil.java:346-349``); no data crosses the wire."""
         sql = f"SELECT * FROM {self._qualify(table, schema)} WHERE 1=0"
         return pushed_query(self.spark, self.source.options, sql).schema
-
-    def verify_columns(self, table: str, incoming, *, schema: str | None = None) -> list[str]:
-        """The reference's verify-and-ALTER for a PRE-EXISTING warehouse
-        table (temp-table / non-versioned mode,
-        ``MonetDBUtil.java:339-394``): every incoming column missing from
-        the table is added with ``ALTER TABLE ... ADD COLUMN``; columns
-        only on the warehouse side are left alone (consumers never lose a
-        column). Unlike the reference's declared TODO, a retype fails
-        loudly — the same exact-match rule as the parquet side's
-        ``evolve_to_union``. Returns the added column names."""
-        from pyspark.sql import types as T
-
-        from ..schema.evolve import SchemaEvolutionError
-        from ..schema.mapper import equivalent_in_derby, spark_schema_to_derby_ddl
-
-        existing = {f.name.lower(): f for f in self.table_schema(table, schema=schema).fields}
-        added: list[str] = []
-        for f in incoming.fields:
-            cur = existing.get(f.name.lower())
-            if cur is not None:
-                # compare through the sink's type-lattice round-trip:
-                # the read-back side is already widened (SMALLINT -> int),
-                # so exact equality would flag every short/byte column as
-                # a retype on the SECOND export of the same frame.
-                if not equivalent_in_derby(cur.dataType, f.dataType):
-                    raise SchemaEvolutionError(
-                        f"column {f.name!r}: warehouse type "
-                        f"{cur.dataType.simpleString()} != incoming "
-                        f"{f.dataType.simpleString()}; implicit retyping is "
-                        "not allowed"
-                    )
-                continue
-            # nullable copy: an added column must accept NULL on existing rows
-            col_ddl = spark_schema_to_derby_ddl(
-                T.StructType([T.StructField(f.name, f.dataType, True)])
-            )
-            self._execute(
-                f"ALTER TABLE {self._qualify(table, schema)} ADD COLUMN {col_ddl}"
-            )
-            added.append(f.name)
-        return added
 
     # -- PHASE 2: load ----------------------------------------------------
     def load_version(
@@ -398,11 +327,9 @@ class JdbcWarehouse:
         load_date: datetime,
         *,
         method: str = "copy",
-        table_ddl: str | None = None,
         staging_dir: str | None = None,
         expected_count: int | None = None,
         schema: str | None = None,
-        import_concurrency: int = 1,
     ) -> str:
         """Land the frame in a NEW versioned physical table; returns the
         physical name (bare — qualification is per-statement).
@@ -416,49 +343,48 @@ class JdbcWarehouse:
         with ``mode("overwrite")``). A collision WITH the live target
         raises: rebuilding a table readers are on is never safe.
 
-        Schema verify + evolve (op #14): when a version is already
-        published, the new version is widened to published ∪ incoming
-        (columns the incoming frame dropped arrive as typed NULLs; a
-        retype fails loudly) — the same ``evolve_to_union`` semantics as
-        the parquet catalog, so the public view never loses a column.
-        Skipped when ``table_ddl`` pins the physical schema explicitly."""
+        Schema evolve (op #14): when a version is already published, the
+        new version is widened to published ∪ incoming (columns the
+        incoming frame dropped arrive as typed NULLs; a retype fails
+        loudly) — the same ``evolve_to_union`` semantics as the parquet
+        catalog, so the public view never loses a column."""
+        from ..schema.mapper import spark_schema_to_derby_ddl
+
         if schema:
             self.ensure_schema(schema)
-        if table_ddl is None:
-            current = self.current_version(table, schema=schema)
-            if current is not None:
-                from pyspark.sql import types as T
+        current = self.current_version(table, schema=schema)
+        if current is not None:
+            from pyspark.sql import types as T
 
-                from ..schema.evolve import evolve_to_union
-                from ..schema.mapper import equivalent_in_derby
+            from ..schema.evolve import evolve_to_union
+            from ..schema.mapper import equivalent_in_derby
 
-                published = self.table_schema(current, schema=schema)
-                # The JDBC read-back schema is post-round-trip (SMALLINT
-                # reads as int), so exact comparison inside evolve_to_union
-                # would reject every re-export of a short/byte column.
-                # Substitute the incoming type wherever the pair is merely
-                # the sink's lossy lattice round-trip — this also keeps the
-                # NEW physical version on the narrow DDL (SMALLINT) instead
-                # of silently widening it on every publish.
-                incoming_types = {f.name: f.dataType for f in df.schema.fields}
-                published = T.StructType(
-                    [
-                        T.StructField(
-                            f.name,
-                            incoming_types[f.name]
-                            if f.name in incoming_types
-                            and equivalent_in_derby(f.dataType, incoming_types[f.name])
-                            else f.dataType,
-                            f.nullable,
-                        )
-                        for f in published.fields
-                    ]
-                )
-                df = evolve_to_union(df, published)
+            published = self.table_schema(current, schema=schema)
+            # The JDBC read-back schema is post-round-trip (SMALLINT
+            # reads as int), so exact comparison inside evolve_to_union
+            # would reject every re-export of a short/byte column.
+            # Substitute the incoming type wherever the pair is merely
+            # the sink's lossy lattice round-trip — this also keeps the
+            # NEW physical version on the narrow DDL (SMALLINT) instead
+            # of silently widening it on every publish.
+            incoming_types = {f.name: f.dataType for f in df.schema.fields}
+            published = T.StructType(
+                [
+                    T.StructField(
+                        f.name,
+                        incoming_types[f.name]
+                        if f.name in incoming_types
+                        and equivalent_in_derby(f.dataType, incoming_types[f.name])
+                        else f.dataType,
+                        f.nullable,
+                    )
+                    for f in published.fields
+                ]
+            )
+            df = evolve_to_union(df, published)
         physical = physical_name(table, load_date)
         qualified = self._qualify(physical, schema)
         if self.exists(physical, schema=schema):
-            current = self.current_version(table, schema=schema)
             if current and current.lower() == physical.lower():
                 raise RuntimeError(
                     f"{qualified} is the live published version; refusing to "
@@ -471,16 +397,11 @@ class JdbcWarehouse:
                 df,
                 self.source,
                 qualified,
-                table_ddl=table_ddl,
                 staging_dir=staging_dir,
                 expected_count=expected_count,
-                import_concurrency=import_concurrency,
             )
         elif method == "insert":
-            from ..schema.mapper import spark_schema_to_derby_ddl
-
-            ddl = table_ddl if table_ddl is not None else spark_schema_to_derby_ddl(df.schema)
-            insert_load(self.spark, df, self.source, qualified, ddl)
+            insert_load(self.spark, df, self.source, qualified, spark_schema_to_derby_ddl(df.schema))
         else:
             raise ValueError(f"method must be copy|insert, got {method!r}")
         return physical
@@ -549,22 +470,13 @@ class JdbcWarehouse:
         load_date: datetime,
         *,
         method: str = "copy",
-        table_ddl: str | None = None,
         staging_dir: str | None = None,
-        expected_count: int | None = None,
         schema: str | None = None,
     ) -> str:
         """PHASES 2-4 in one call: load a new version, switch the view,
         reap old versions. Returns the physical name published."""
         physical = self.load_version(
-            df,
-            table,
-            load_date,
-            method=method,
-            table_ddl=table_ddl,
-            staging_dir=staging_dir,
-            expected_count=expected_count,
-            schema=schema,
+            df, table, load_date, method=method, staging_dir=staging_dir, schema=schema
         )
         self._fault("between_load_and_switch")
         self.publish(table, physical, schema=schema)

@@ -2,8 +2,9 @@
 
 The reference logs every 100k rows: percent complete, elapsed, and ETA from
 rows/sec. Spark's own instrumentation (UI, listeners) supersedes per-row
-loops, so this is a driver-side utility fed by counts: the copy engine
-reports per-table progress between phases with identical math.
+loops, so this is a driver-side utility fed by counts, with identical math.
+Nothing in the copy engine calls it; the engine reports no per-table
+progress.
 """
 
 from __future__ import annotations

@@ -12,15 +12,20 @@ Spark replaces both ends:
   ``isolationLevel=NONE`` as the analog of LOCKED-mode loads
   (``CopyTool.java:990-991``).
 
-No JDBC server exists in this environment; these builders are exercised by
-unit tests on the option dicts and are integration-ready.
+Every driver-side statement (catalog probes, DDL, the view switch, the bulk
+loader's imports and count) runs through :func:`driver_statement`. The read,
+write, bulk-load and warehouse paths are integration-tested against embedded
+Derby, which ships with Spark; the MonetDB and PostgreSQL statement shapes
+are unit-pinned.
 """
 
 from __future__ import annotations
 
 import logging
 import os
+import shutil
 import zipfile
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -212,12 +217,6 @@ BULK_CSV_OPTIONS = {
 }
 
 
-class BulkLoadError(RuntimeError):
-    """The staged-CSV bulk load could not be completed (staging invisible to
-    the server, partial part-file set, import failure, or a post-import
-    row-count mismatch) and fallback was disabled."""
-
-
 def bulk_dialect(url: str) -> str:
     """Dialect key for a JDBC url's server-side bulk-import support.
 
@@ -348,19 +347,6 @@ def server_bulk_import_sql(
     )
 
 
-def effective_import_concurrency(url: str, requested: int) -> int:
-    """Clamp the bulk loader's per-part import fan-out to what the target
-    server actually supports. PostgreSQL accepts concurrent COPYs into one
-    table (MVCC appends); Derby's SYSCS_IMPORT_TABLE takes a table lock and
-    MonetDB serializes COPY INTO on the table (always under LOCKED mode),
-    so both clamp to 1 — the reference's single connection. The default of
-    1 everywhere keeps the conservative, reference-parity behavior; a user
-    opts in per job."""
-    if requested <= 1:
-        return 1
-    return requested if bulk_dialect(url) == "postgresql" else 1
-
-
 def driver_connection(spark: SparkSession, options: dict[str, str]):
     """Driver-side java.sql.Connection honoring the FULL option map — the
     ``driver`` class is loaded explicitly and ``user``/``password`` travel
@@ -377,56 +363,62 @@ def driver_connection(spark: SparkSession, options: dict[str, str]):
     return jvm.java.sql.DriverManager.getConnection(options["url"], props)
 
 
-def _execute_update(conn, sql: str) -> None:
-    st = conn.createStatement()
+@contextmanager
+def driver_statement(spark: SparkSession, options: dict[str, str], *, transaction: bool = False):
+    """A statement on a fresh driver connection; the statement and the
+    connection are closed on every exit path. This is the one place the
+    engine opens a driver-side connection.
+
+    With ``transaction`` the block runs with auto-commit off and commits
+    when it exits normally. A block that raises — or a commit that
+    fails — is rolled back BEFORE close: embedded Derby raises SQLState
+    25001 from close() on an active transaction, which would mask the
+    original failure and leak the connection, and a failed view switch
+    must leave readers on the OLD view."""
+    conn = driver_connection(spark, options)
+    committed = False
     try:
-        st.execute(sql)
-    finally:
-        st.close()
-
-
-def _drop_table_if_exists(conn, table: str) -> None:
-    try:
-        _execute_update(conn, f"DROP TABLE {table}")
-    except Exception:  # noqa: BLE001 — table absent: nothing to drop
-        pass
-
-
-def _import_one_part(conn, url: str, table: str, part: str, locked: bool) -> None:
-    sql, params = server_bulk_import_sql(url, table, part, locked=locked)
-    if params:
-        cs = conn.prepareCall(sql)
+        if transaction:
+            conn.setAutoCommit(False)
+        st = conn.createStatement()
         try:
-            for i, p in enumerate(params, start=1):
-                cs.setString(i, p)
-            cs.execute()
+            yield st
         finally:
-            cs.close()
-    else:
-        _execute_update(conn, sql)
+            st.close()
+        if transaction:
+            conn.commit()
+            committed = True
+    finally:
+        if transaction and not committed:
+            try:
+                conn.rollback()
+            except Exception:  # noqa: BLE001 — closing anyway
+                log.warning("rollback before close failed", exc_info=True)
+        conn.close()
+
+
+def _import_one_part(st, url: str, table: str, part: str, locked: bool) -> None:
+    sql, params = server_bulk_import_sql(url, table, part, locked=locked)
+    if not params:
+        st.execute(sql)
+        return
+    cs = st.getConnection().prepareCall(sql)
+    try:
+        for i, p in enumerate(params, start=1):
+            cs.setString(i, p)
+        cs.execute()
+    finally:
+        cs.close()
 
 
 def insert_load(spark: SparkSession, df: DataFrame, source: SourceSpec, table: str, ddl: str) -> str:
     """CREATE ``table`` from ``ddl`` and load ``df`` through the distributed
     batched :func:`jdbc_writer` — the INSERT end of the reference's
     degradation chain (``CopyTool.java:829-866``). Returns ``"insert"``."""
-    conn = driver_connection(spark, source.options)
-    try:
-        _execute_update(conn, f"CREATE TABLE {table} ({ddl})")
-    finally:
-        conn.close()
+    with driver_statement(spark, source.options) as st:
+        st.execute(f"CREATE TABLE {table} ({ddl})")
     jdbc_writer(df, source, table, mode="append")
     return "insert"
-
-
-def _server_count(conn, table: str) -> int:
-    st = conn.createStatement()
-    try:
-        rs = st.executeQuery(f"SELECT COUNT(*) FROM {table}")
-        rs.next()
-        return int(rs.getLong(1))
-    finally:
-        st.close()
 
 
 def jdbc_bulk_loader(
@@ -438,9 +430,7 @@ def jdbc_bulk_loader(
     table_ddl: str | None = None,
     staging_dir: str | None = None,
     expected_count: int | None = None,
-    fallback: bool = True,
     locked: bool = False,
-    import_concurrency: int = 1,
 ) -> str:
     """Staged-CSV bulk load — the reference's COPY INTO path
     (``CopyTool.java:1042-1071``), with the reference's own degradation
@@ -456,8 +446,8 @@ def jdbc_bulk_loader(
        MonetDB);
     2. the driver creates the table (DDL from the engine's schema mapper
        unless ``table_ddl`` pins explicit types) and issues ONE server-side
-       bulk-import call per part file, dialect-dispatched by
-       :func:`server_bulk_import_sql` (Derby:
+       bulk-import call per part file, in order, on one connection,
+       dialect-dispatched by :func:`server_bulk_import_sql` (Derby:
        ``SYSCS_UTIL.SYSCS_IMPORT_TABLE``; MonetDB: the reference's
        ``COPY INTO ... USING DELIMITERS ... NULL AS '\\N' [LOCKED]``
        statement verbatim, with ``\\N``-staged nulls; PostgreSQL:
@@ -466,11 +456,14 @@ def jdbc_bulk_loader(
     3. the loaded row count is verified against the frame's count (the
        reference's pre-load count file, ``CopyTool.java:643-649``). Any
        shortfall — zero staged part files, an import error, or a count
-       mismatch — means the staging path was not fully server-visible;
-       with ``fallback=True`` (default) the half-load is dropped and the
-       table is reloaded through the distributed batched-INSERT
-       :func:`jdbc_writer`, exactly the reference's fallback order; with
-       ``fallback=False`` a :class:`BulkLoadError` is raised.
+       mismatch — means the staging path was not fully server-visible:
+       the half-load is dropped and the table is reloaded through the
+       distributed batched-INSERT :func:`jdbc_writer`, exactly the
+       reference's fallback order.
+
+    The staged part files are removed once the import is done, on success
+    and before the INSERT fallback (which reads ``df``, not the files);
+    a driver-local tmpdir made for want of ``staging_dir`` goes with them.
 
     **Cluster contract**: ``staging_dir`` (default: a driver-local tmpdir)
     must be a filesystem BOTH the executors and the database server can
@@ -484,12 +477,6 @@ def jdbc_bulk_loader(
 
     ``expected_count`` lets callers that already counted the extract (the
     engine's pre-scan count, op #4) skip the extra count job here.
-
-    ``import_concurrency`` opts into issuing the per-part server imports
-    from multiple driver threads (own connection each) — honored only for
-    dialects whose server accepts concurrent COPYs into one table
-    (:func:`effective_import_concurrency`; PostgreSQL yes, Derby/MonetDB
-    clamp to 1). Default 1 = the reference's single-connection behavior.
 
     BinaryType columns are hex-encoded at staging (Derby's documented
     import representation for BLOB data without LOB side-files).
@@ -511,8 +498,6 @@ def jdbc_bulk_loader(
     try:
         bulk_dialect(url)
     except ValueError as exc:
-        if not fallback:
-            raise BulkLoadError(f"{table}: {exc}") from exc
         log.warning("bulk load of %s degraded to INSERT path: %s", table, exc)
         return insert_load(spark, df, source, table, ddl)
     if expected_count is None:
@@ -527,70 +512,49 @@ def jdbc_bulk_loader(
     )
     base_dir = staging_dir or tempfile.mkdtemp(prefix="jdbc_bulk_")
     csv_dir = os.path.join(base_dir, f"stage_{table}")
-    stage_bulk_frame(staged, url, csv_dir)
-
-    conn = driver_connection(spark, source.options)
     try:
-        _execute_update(conn, f"CREATE TABLE {table} ({ddl})")
-        failure: str | None = None
-        parts = sorted(glob.glob(os.path.join(csv_dir, "part-*")))
-        if not parts and expected_count > 0:
-            failure = f"no staged part files visible at {csv_dir}"
-        else:
-            # dialect-dispatched server-side import, one call per part file
-            # (Derby: parameterized SYSCS_IMPORT_TABLE — unquoted CREATE
-            # stores the name uppercase and the proc matches its tablename
-            # argument case-SENSITIVELY; MonetDB/PostgreSQL: plain COPY).
-            # The loop is deliberately driver-sequential at concurrency=1:
-            # server-side COPY serializes on the table lock in every
-            # supported store anyway (and matches the reference's single
-            # connection); `import_concurrency` opts into parallel COPYs
-            # where the server allows them (PostgreSQL).
-            try:
-                workers = effective_import_concurrency(url, import_concurrency)
-                if workers > 1 and len(parts) > 1:
-                    # one driver-side connection per worker thread; a
-                    # mid-flight failure leaves a partial import that the
-                    # count verification below catches (same degradation
-                    # chain as the serial path)
-                    from concurrent.futures import ThreadPoolExecutor
-
-                    def _import_on_own_conn(part: str) -> None:
-                        c = driver_connection(spark, source.options)
-                        try:
-                            _import_one_part(c, url, table, part, locked)
-                        finally:
-                            c.close()
-
-                    with ThreadPoolExecutor(max_workers=workers) as pool:
-                        for fut in [
-                            pool.submit(_import_on_own_conn, p) for p in parts
-                        ]:
-                            fut.result()
-                else:
+        stage_bulk_frame(staged, url, csv_dir)
+        with driver_statement(spark, source.options) as st:
+            st.execute(f"CREATE TABLE {table} ({ddl})")
+            failure: str | None = None
+            parts = sorted(glob.glob(os.path.join(csv_dir, "part-*")))
+            if not parts and expected_count > 0:
+                failure = f"no staged part files visible at {csv_dir}"
+            else:
+                # dialect-dispatched server-side import, one call per part
+                # file (Derby: parameterized SYSCS_IMPORT_TABLE — unquoted
+                # CREATE stores the name uppercase and the proc matches its
+                # tablename argument case-SENSITIVELY; MonetDB/PostgreSQL:
+                # plain COPY). Sequential on one connection: server-side
+                # COPY serializes on the table lock in Derby and MonetDB,
+                # and the reference holds one connection per database.
+                try:
                     for part in parts:
-                        _import_one_part(conn, url, table, part, locked)
-            except Exception as exc:  # noqa: BLE001 — degrade per reference chain
-                failure = f"server-side import failed: {exc}"
-        if failure is None:
-            loaded = _server_count(conn, table)
-            if loaded != expected_count:
-                failure = (
-                    f"bulk load row-count mismatch: imported {loaded}, "
-                    f"expected {expected_count} (staging dir {csv_dir} "
-                    f"not fully server-visible?)"
-                )
-        if failure is None:
-            return "copy"
-        if not fallback:
-            raise BulkLoadError(f"{table}: {failure}")
-        # The reference's COPY-file -> INSERT degradation
-        # (CopyTool.java:829-866): drop the half-load, recreate with the
-        # same DDL, reload through the distributed batched writer.
-        log.warning("bulk load of %s degraded to INSERT path: %s", table, failure)
-        _drop_table_if_exists(conn, table)
+                        _import_one_part(st, url, table, part, locked)
+                except Exception as exc:  # noqa: BLE001 — degrade per reference chain
+                    failure = f"server-side import failed: {exc}"
+            if failure is None:
+                rs = st.executeQuery(f"SELECT COUNT(*) FROM {table}")
+                rs.next()
+                loaded = int(rs.getLong(1))
+                if loaded != expected_count:
+                    failure = (
+                        f"bulk load row-count mismatch: imported {loaded}, "
+                        f"expected {expected_count} (staging dir {csv_dir} "
+                        f"not fully server-visible?)"
+                    )
+            if failure is None:
+                return "copy"
+            # The reference's COPY-file -> INSERT degradation
+            # (CopyTool.java:829-866): drop the half-load, recreate with the
+            # same DDL, reload through the distributed batched writer.
+            log.warning("bulk load of %s degraded to INSERT path: %s", table, failure)
+            try:
+                st.execute(f"DROP TABLE {table}")
+            except Exception:  # noqa: BLE001 — table absent: nothing to drop
+                pass
     finally:
-        conn.close()
+        shutil.rmtree(csv_dir if staging_dir else base_dir, ignore_errors=True)
     return insert_load(spark, df, source, table, ddl)
 
 

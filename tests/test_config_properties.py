@@ -536,6 +536,38 @@ table.b.schema = mart_b
         load_properties_spec(dup, warehouse_dir="/tmp/wh", monetdb_sink=True)
 
 
+def test_batch_size_and_temp_directory_reach_the_monetdb_sink():
+    """With the monetdb sink, ``batch.size`` is the batched writer's
+    ``batchsize`` (the reference's INSERT batch size) and
+    ``temp.directory`` is the bulk loader's staging directory (where the
+    reference spools the file COPY INTO reads)."""
+    from mssql2monetdb_spark.config.properties import load_properties_spec
+    from mssql2monetdb_spark.sources.jdbc import jdbc_write_options
+
+    text = """
+monetdb.server = warehouse.example.org
+monetdb.database = analytics_db
+mssql.src.server = db.example.org
+mssql.src.database = erp
+table.t1.source = src
+table.t1.from.table = dbo.orders
+table.t1.to = orders
+batch.size = 2500
+temp.directory = /data/spool
+"""
+    spec = load_properties_spec(text, warehouse_dir="/tmp/wh", monetdb_sink=True)
+    assert spec.sink_staging_dir == "/data/spool"
+    assert jdbc_write_options(spec.sink, "orders")["batchsize"] == "2500"
+
+    defaults = load_properties_spec(
+        text.replace("batch.size = 2500\ntemp.directory = /data/spool\n", ""),
+        warehouse_dir="/tmp/wh",
+        monetdb_sink=True,
+    )
+    assert defaults.sink_staging_dir is None
+    assert jdbc_write_options(defaults.sink, "orders")["batchsize"] == "10000"
+
+
 def test_monetdb_sink_requires_block():
     import pytest
 

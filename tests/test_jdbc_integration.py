@@ -267,12 +267,12 @@ def test_bulk_loader_falls_back_to_insert_on_partial_staging(spark, tmp_path, mo
     assert back.count() == 10
 
 
-def test_bulk_loader_no_fallback_raises(spark, tmp_path, monkeypatch):
-    """fallback=False must surface the shortfall as BulkLoadError instead
-    of degrading (the caller opted into bulk-or-nothing)."""
+def test_bulk_loader_without_visible_parts_loads_through_insert(spark, tmp_path, monkeypatch):
+    """No staged part file visible to the driver (the staging dir is not
+    shared storage) degrades to the INSERT path, and the table is complete."""
     import glob as glob_mod
 
-    from mssql2monetdb_spark.sources.jdbc import BulkLoadError, jdbc_bulk_loader
+    from mssql2monetdb_spark.sources.jdbc import derby_snapshot_jar, jdbc_bulk_loader
 
     db = str(tmp_path / "db")
     src = SourceSpec(
@@ -282,13 +282,37 @@ def test_bulk_loader_no_fallback_raises(spark, tmp_path, monkeypatch):
     )
     df = spark.createDataFrame([(1, "a"), (2, "b")], "k bigint, s string")
     monkeypatch.setattr(glob_mod, "glob", lambda pat: [])
-    with pytest.raises(BulkLoadError):
-        jdbc_bulk_loader(spark, df, src, "strict_t", fallback=False)
+    assert jdbc_bulk_loader(spark, df, src, "unseen_t") == "insert"
+    monkeypatch.undo()
+
+    ro = SourceSpec(
+        name="dro",
+        format="jdbc",
+        options={"url": derby_snapshot_jar(spark, db), "driver": DERBY_DRIVER},
+    )
+    back = jdbc_reader(spark, ro, CopyJob(job_id="b", source="dro", from_table="unseen_t"))
+    assert sorted(tuple(r) for r in back.collect()) == [(1, "a"), (2, "b")]
 
 
-def test_bulk_loader_shared_staging_dir(spark, tmp_path):
+def _recording_stage(monkeypatch):
+    """Wrap ``stage_bulk_frame``; returns the list of directories it wrote."""
+    from mssql2monetdb_spark.sources import jdbc
+
+    written = []
+    real = jdbc.stage_bulk_frame
+
+    def record(df, url, stage_dir):
+        written.append(stage_dir)
+        real(df, url, stage_dir)
+
+    monkeypatch.setattr(jdbc, "stage_bulk_frame", record)
+    return written
+
+
+def test_bulk_loader_shared_staging_dir(spark, tmp_path, monkeypatch):
     """An explicit staging_dir (the shared-filesystem knob for real
-    clusters) is honored: part files land under it and the load succeeds."""
+    clusters) is honored: part files land under it, the load succeeds, and
+    the staged files are removed once imported."""
     import os
 
     from mssql2monetdb_spark.sources.jdbc import jdbc_bulk_loader
@@ -301,8 +325,35 @@ def test_bulk_loader_shared_staging_dir(spark, tmp_path):
         options={"url": f"jdbc:derby:{db};create=true", "driver": DERBY_DRIVER},
     )
     df = spark.createDataFrame([(1, "a"), (2, "b")], "k bigint, s string")
+    written = _recording_stage(monkeypatch)
     assert jdbc_bulk_loader(spark, df, src, "staged_t", staging_dir=stage) == "copy"
-    assert os.path.isdir(os.path.join(stage, "stage_staged_t"))
+    assert len(written) == 1
+    assert os.path.dirname(written[0]) == stage
+    assert not os.path.exists(written[0])
+    assert os.listdir(stage) == []
+
+
+def test_bulk_loader_removes_its_tmpdir_on_copy_and_fallback(spark, tmp_path, monkeypatch):
+    """Without staging_dir the loader stages under a tmpdir of its own and
+    removes it after the import, and before the INSERT fallback too."""
+    import glob as glob_mod
+    import os
+
+    from mssql2monetdb_spark.sources.jdbc import jdbc_bulk_loader
+
+    src = SourceSpec(
+        name="d",
+        format="jdbc",
+        options={"url": f"jdbc:derby:{tmp_path}/db;create=true", "driver": DERBY_DRIVER},
+    )
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "k bigint, s string")
+    written = _recording_stage(monkeypatch)
+    assert jdbc_bulk_loader(spark, df, src, "tmp_copy_t") == "copy"
+    monkeypatch.setattr(glob_mod, "glob", lambda pat: [])
+    assert jdbc_bulk_loader(spark, df, src, "tmp_insert_t") == "insert"
+    assert len(written) == 2
+    for stage_dir in written:
+        assert not os.path.exists(os.path.dirname(stage_dir))
 
 
 def test_derby_shutdown_raises_on_missing_database(spark, tmp_path):
@@ -502,20 +553,6 @@ def test_bulk_import_sql_dialect_statements():
         server_bulk_import_sql("jdbc:h2:mem:x", "t", "/p")
 
 
-def test_import_concurrency_clamps_by_dialect():
-    """Parallel per-part COPY is opt-in and only where the server allows
-    concurrent COPYs into one table: PostgreSQL honors the request;
-    Derby (table-locking import proc) and MonetDB (COPY serializes,
-    always under LOCKED) clamp to the reference's single connection."""
-    from mssql2monetdb_spark.sources.jdbc import effective_import_concurrency
-
-    assert effective_import_concurrency("jdbc:postgresql://h/db", 4) == 4
-    assert effective_import_concurrency("jdbc:derby:/x/db", 4) == 1
-    assert effective_import_concurrency("jdbc:monetdb://h/db", 4) == 1
-    assert effective_import_concurrency("jdbc:postgresql://h/db", 1) == 1
-    assert effective_import_concurrency("jdbc:postgresql://h/db", 0) == 1
-
-
 def test_monetdb_staging_serializer_reference_bytes(spark, tmp_path):
     """Byte-exact pin of the MonetDB staging serialization against the
     reference's writer (CopyTool.java:691-733): NULL is the bare UNQUOTED
@@ -567,14 +604,20 @@ def test_monetdb_staging_serializer_reference_bytes(spark, tmp_path):
     assert staged == lines
 
 
-def test_bulk_loader_unknown_dialect_strict_raises(spark):
-    """fallback=False + a dialect without server-side COPY must raise
-    BEFORE any staging or connection."""
-    from mssql2monetdb_spark.sources.jdbc import BulkLoadError, jdbc_bulk_loader
+def test_bulk_loader_unknown_dialect_degrades_before_staging(spark, monkeypatch):
+    """A dialect without server-side COPY loads through the INSERT path
+    without staging anything first."""
+    from mssql2monetdb_spark.sources import jdbc
 
+    staged, inserted = [], []
+    monkeypatch.setattr(jdbc, "stage_bulk_frame", lambda *a: staged.append(a))
+    monkeypatch.setattr(
+        jdbc, "insert_load", lambda spark, df, source, table, ddl: inserted.append(table) or "insert"
+    )
     src = SourceSpec(
         name="d", format="jdbc", options={"url": "jdbc:h2:mem:x", "driver": "x.Y"}
     )
     df = spark.createDataFrame([(1, "a")], "k bigint, s string")
-    with pytest.raises(BulkLoadError):
-        jdbc_bulk_loader(spark, df, src, "t", fallback=False)
+    assert jdbc.jdbc_bulk_loader(spark, df, src, "t") == "insert"
+    assert inserted == ["t"]
+    assert staged == []

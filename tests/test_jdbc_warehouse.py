@@ -162,7 +162,7 @@ def test_monetdb_catalog_statement_shapes():
 # -- CopyEngine with a JDBC sink (the reference's full topology) ------------
 
 
-def _sink_spec(tmp_path, src_dir, *, trigger=False, extra_job=None):
+def _sink_spec(tmp_path, src_dir, *, trigger=False, extra_job=None, staging_dir=None):
     from mssql2monetdb_spark.config.spec import load_spec
 
     job = {"source": "src", "from_table": "nation", "to_table": "nation_wh"}
@@ -171,18 +171,21 @@ def _sink_spec(tmp_path, src_dir, *, trigger=False, extra_job=None):
     tables = {"nation_job": job}
     if extra_job:
         tables.update(extra_job)
+    sink = {
+        "format": "jdbc",
+        "options": {
+            "url": f"jdbc:derby:{tmp_path}/sinkdb;create=true",
+            "driver": DERBY_DRIVER,
+        },
+    }
+    if staging_dir:
+        sink["staging_dir"] = staging_dir
     return load_spec(
         {
             "warehouse_dir": str(tmp_path / "wh_unused"),
             "state_dir": str(tmp_path / "state"),
             "sources": {"src": {"format": "parquet", "path": str(src_dir)}},
-            "sink": {
-                "format": "jdbc",
-                "options": {
-                    "url": f"jdbc:derby:{tmp_path}/sinkdb;create=true",
-                    "driver": DERBY_DRIVER,
-                },
-            },
+            "sink": sink,
             "tables": tables,
         }
     )
@@ -269,6 +272,56 @@ def test_copy_engine_jdbc_sink_empty_guard_aborts_all(spark, tmp_path, nation_sr
     assert engine.run() == 1
     assert not engine.warehouse.exists("nation_wh")
     assert not engine.warehouse.exists("empty_wh")
+
+
+#: driver-side connections the third sink run of a two-job spec opened
+#: before every warehouse statement went through one helper (16 on each of
+#: four runs)
+SINK_RUN_OPENS = 16
+
+
+def test_sink_run_connection_count(spark, tmp_path, nation_src, monkeypatch):
+    """Counts ``driver_connection`` opens during one steady-state sink
+    ``do_copy`` (two jobs, load, view switch and keep-2 cleanup). A run may
+    not open more connections than this; a run-scoped connection would
+    bring the bound down to one or two."""
+    from mssql2monetdb_spark.engine.copy import CopyEngine
+    from mssql2monetdb_spark.sources import jdbc
+
+    spec = _sink_spec(
+        tmp_path,
+        nation_src,
+        extra_job={"b_job": {"source": "src", "from_table": "nation", "to_table": "nation_b"}},
+    )
+    engine = CopyEngine(spark, spec)
+    for day in (1, 2):
+        engine.do_copy(load_date=datetime(2024, 6, day))
+    opens = []
+    real = jdbc.driver_connection
+
+    def counting(*args, **kwargs):
+        opens.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(jdbc, "driver_connection", counting)
+    engine.do_copy(load_date=datetime(2024, 6, 3))
+    assert 0 < len(opens) <= SINK_RUN_OPENS
+    assert len(engine.warehouse.table_versions("nation_b")) == 2
+
+
+def test_sink_copy_leaves_staging_dir_empty(spark, tmp_path, nation_src):
+    """Each load's staged CSV is removed after the server import, so
+    repeated sink runs do not pile up copies under staging_dir."""
+    import os
+
+    from mssql2monetdb_spark.engine.copy import CopyEngine
+
+    stage = str(tmp_path / "stage")
+    engine = CopyEngine(spark, _sink_spec(tmp_path, nation_src, staging_dir=stage))
+    for day in (1, 2):
+        engine.do_copy(load_date=datetime(2024, 6, day))
+        assert os.listdir(stage) == []
+    assert engine.table("nation_wh").count() == 25
 
 
 def test_sink_spec_validation():
@@ -457,47 +510,6 @@ def test_export_survives_sink_widened_integrals(spark, wh):
         wh.export(v3, "smalls", datetime(2024, 6, 3))
 
 
-def test_verify_columns_accepts_sink_equivalent_types(spark, wh):
-    """Regression (ADVICE r10, medium): verify_columns on a PRE-EXISTING
-    SMALLINT warehouse column fed by a ShortType frame must not raise a
-    false 'implicit retyping' error in temp-table/non-versioned mode."""
-    from pyspark.sql import types as T
-
-    wh._execute('CREATE TABLE pre_sm ("k" BIGINT, "sm" SMALLINT)')
-    incoming = T.StructType(
-        [T.StructField("k", T.LongType()), T.StructField("sm", T.ShortType())]
-    )
-    assert wh.verify_columns("pre_sm", incoming) == []  # no ALTER, no error
-
-    from mssql2monetdb_spark.schema.evolve import SchemaEvolutionError
-
-    bad = T.StructType([T.StructField("sm", T.StringType())])
-    with pytest.raises(SchemaEvolutionError):
-        wh.verify_columns("pre_sm", bad)
-
-
-def test_verify_columns_alters_preexisting_table(spark, wh):
-    """The reference's literal ALTER path for a PRE-EXISTING (non-versioned)
-    warehouse table: missing incoming columns are added nullable; warehouse-
-    only columns are left alone; retype raises."""
-    from mssql2monetdb_spark.schema.evolve import SchemaEvolutionError
-
-    wh._execute(
-        'CREATE TABLE plain ("k" BIGINT, "legacy" VARCHAR(5))',
-        'INSERT INTO plain VALUES (1, \'old\')',
-    )
-    incoming = spark.createDataFrame([(1, "x", 2.5)], "k bigint, s string, x double").schema
-    added = wh.verify_columns("plain", incoming)
-    assert added == ["s", "x"]
-    cols = {f.name for f in wh.table_schema("plain").fields}
-    assert cols == {"k", "legacy", "s", "x"}  # legacy survives
-    assert wh.verify_columns("plain", incoming) == []  # idempotent
-
-    bad = spark.createDataFrame([(1.0,)], "k double").schema
-    with pytest.raises(SchemaEvolutionError):
-        wh.verify_columns("plain", bad)
-
-
 def test_load_version_reclaims_unpublished_corpse(spark, wh):
     """Crash-retry: a colliding physical that is NOT the live view target
     is dropped and rebuilt; colliding with the live target raises."""
@@ -603,24 +615,6 @@ def test_sink_rejects_duplicate_schema_table_targets():
         }
     )
     assert spec.jobs["a"].schema_name == "s1"
-    # the per-part import fan-out knob rides in the sink block (default 1)
-    assert spec.sink_import_concurrency == 1
-    spec_c = load_spec(
-        {
-            **base,
-            "sink": {**base["sink"], "import_concurrency": 4},
-            "tables": {"a": {"source": "src", "from_table": "x", "to_table": "t"}},
-        }
-    )
-    assert spec_c.sink_import_concurrency == 4
-    with pytest.raises(SpecError, match="import_concurrency"):
-        load_spec(
-            {
-                **base,
-                "sink": {**base["sink"], "import_concurrency": 0},
-                "tables": {"a": {"source": "src", "from_table": "x", "to_table": "t"}},
-            }
-        )
 
     # same (schema, table) twice: refused
     with pytest.raises(SpecError, match="unique per \\(schema, table\\)"):
@@ -633,6 +627,29 @@ def test_sink_rejects_duplicate_schema_table_targets():
                 },
             }
         )
+
+
+def test_sink_import_concurrency_accepts_only_one():
+    """The bulk loader imports on one connection; a spec may still say so,
+    and any other value is refused."""
+    from mssql2monetdb_spark.config.spec import SpecError, load_spec
+
+    def spec(conc):
+        return {
+            "warehouse_dir": "/tmp/x",
+            "sources": {"src": {"format": "parquet", "path": "/tmp/src"}},
+            "sink": {
+                "format": "jdbc",
+                "import_concurrency": conc,
+                "options": {"url": "jdbc:derby:/tmp/d"},
+            },
+            "tables": {"a": {"source": "src", "from_table": "x", "to_table": "t"}},
+        }
+
+    assert load_spec(spec(1)).sink is not None
+    for conc in (0, 4):
+        with pytest.raises(SpecError, match="import_concurrency"):
+            load_spec(spec(conc))
 
 
 def test_schema_qualified_publish_independent(spark, wh):
