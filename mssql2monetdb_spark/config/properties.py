@@ -236,9 +236,11 @@ def properties_to_spec_dict(
                 job["allow_empty"] = _bool(value)
             elif field == "autotrim":
                 job["auto_trim"] = _bool(value)
-            # temptableprefix / uselockedmode / copymethod are accepted but
-            # have no Spark-side distinction (versioned-parquet publish
-            # subsumes the reference's temp-table + COPY INTO/INSERT split)
+            # temptableprefix / copymethod are accepted but have no
+            # Spark-side distinction (versioned-parquet publish subsumes the
+            # reference's temp-table + COPY INTO/INSERT split); uselockedmode
+            # is accepted and always on: a MonetDB sink's COPY INTO ends in
+            # LOCKED, since it loads a table no reader uses yet
         elif key.lower() == "batch.size":
             try:
                 top["batch_size"] = int(value)

@@ -101,9 +101,11 @@ class CopyJob:
     # keeps a version out of sight until its publish, so the engine reads it
     # nowhere; load_spec warns when a job sets it
     copy_via_temp_table: bool = False
-    # watermark trigger (CopyTool.java:332-477)
+    # watermark trigger (CopyTool.java:332-477); the trigger table is read
+    # on trigger_source when set, else on the job's source
     trigger_table: str | None = None
     trigger_column: str | None = None
+    trigger_source: str | None = None
     # incremental append: only rows with trigger_column > persisted state are
     # extracted; the new version = published snapshot + the delta (a
     # Spark-first upgrade — the reference always re-copies the full table)
@@ -189,6 +191,8 @@ def load_spec(spec: dict | str, env: dict[str, str] | None = None) -> JobSpec:
         trigger = j.get("trigger") or {}
         if j.get("incremental") and not trigger.get("column"):
             raise SpecError(f"table {job_id!r}: 'incremental' requires trigger.column")
+        if trigger.get("source") and trigger["source"] not in sources:
+            raise SpecError(f"table {job_id!r}: unknown trigger source {trigger['source']!r}")
         jobs[job_id] = CopyJob(
             job_id=job_id,
             source=source,
@@ -207,6 +211,7 @@ def load_spec(spec: dict | str, env: dict[str, str] | None = None) -> JobSpec:
             copy_via_temp_table=bool(j.get("copy_via_temp_table", False)),
             trigger_table=trigger.get("table"),
             trigger_column=trigger.get("column"),
+            trigger_source=trigger.get("source"),
             incremental=bool(j.get("incremental", False)),
             sort_by=tuple(j["sort_by"]) if j.get("sort_by") else None,
             partition_by=tuple(j["partition_by"]) if j.get("partition_by") else None,

@@ -65,7 +65,7 @@ from ..config.spec import CopyJob, JobSpec, spec_checksum
 from ..schema.evolve import evolve_to_union
 from ..schema.mapper import normalized_dataframe
 from ..sources.readers import read_source, register_source_views
-from .publish import VersionedCatalog, physical_name
+from .publish import LOAD_DATE_FORMAT, VersionedCatalog, version_of
 from .watermark import FooterFallback, WatermarkStore, has_new_data, probe_max, probe_max_footer
 
 log = logging.getLogger(__name__)
@@ -93,6 +93,8 @@ class CopyEngine:
         self.catalog = VersionedCatalog(spec.warehouse_dir)
         self.store = WatermarkStore(spec.state_dir)
         self.checksum = spec_checksum(spec)
+        # {job_id: state} of the triggered jobs, read by check_for_new_data
+        self.states: dict[str, object] = {}
         # optional JDBC sink: publishes land in a real warehouse through the
         # reference's versioned-table + view-switch protocol (engine/export)
         self.warehouse = None
@@ -103,7 +105,7 @@ class CopyEngine:
 
     # -- trigger (PHASE 0, CopyTool.java:332-477) ------------------------
     def _probe_job(self, job: CopyJob, resolved: dict[str, DataFrame] | None = None):
-        src = self.spec.sources[job.source]
+        src = self.spec.sources[job.trigger_source or job.source]
         table = job.trigger_table or job.from_table
         if src.format == "jdbc" and table:
             # source-side MAX: the aggregate runs ON the database and one
@@ -159,11 +161,7 @@ class CopyEngine:
                 )
             except FooterFallback as exc:
                 log.info("trigger probe for %s scans with Spark: %s", job.job_id, exc)
-        trigger_job = CopyJob(
-            job_id=f"{job.job_id}__trigger",
-            source=job.source,
-            from_table=table,
-        )
+        trigger_job = CopyJob(job_id=f"{job.job_id}__trigger", source=src.name, from_table=table)
         df = read_source(self.spark, src, trigger_job, resolved)
         return probe_max(df, job.trigger_column)
 
@@ -172,24 +170,28 @@ class CopyEngine:
     ) -> dict[str, object]:
         """Return {job_id: probe} for triggered jobs; raise NoNewDataError
         when every triggered job is unchanged (and at least one exists).
-        ``resolved`` is the run's memo of resolved source frames."""
+        ``resolved`` is the run's memo of resolved source frames. Each
+        job's persisted state is read once here and kept in ``self.states``
+        for the run's skip and delta filter."""
         probes: dict[str, object] = {}
-        triggered = [j for j in self.spec.jobs.values() if j.trigger_column]
-        if not triggered:
-            return probes
+        self.states = {
+            j.job_id: self.store.load(self.checksum, j.job_id)
+            for j in self.spec.jobs.values()
+            if j.trigger_column
+        }
         fresh = False
-        for job in triggered:
-            state = self.store.load(self.checksum, job.job_id)
+        for job_id, state in self.states.items():
+            job = self.spec.jobs[job_id]
             try:
                 probe = self._probe_job(job, resolved)
             except Exception:
                 log.warning("trigger probe failed for %s — failing open", job.job_id, exc_info=True)
                 probe = None
                 fresh = True  # probe error => run (CopyTool.java:375-381)
-            probes[job.job_id] = probe
+            probes[job_id] = probe
             if has_new_data(probe, state):
                 fresh = True
-        if not fresh:
+        if self.states and not fresh:
             raise NoNewDataError("no new data in any triggered source")
         return probes
 
@@ -298,16 +300,11 @@ class CopyEngine:
         probes = self.check_for_new_data(resolved)
         # an incremental job whose probe did not move has an empty delta:
         # its published version already holds what a reload would write
-        states = {
-            job_id: self.store.load(self.checksum, job_id)
-            for job_id, job in self.spec.jobs.items()
-            if job.incremental
-        }
         unchanged: dict[str, str] = {}
-        for job_id, state in states.items():
+        for job_id, state in self.states.items():
             job = self.spec.jobs[job_id]
             probe = probes.get(job_id)
-            if job.drop or probe is None or has_new_data(probe, state):
+            if not job.incremental or job.drop or probe is None or has_new_data(probe, state):
                 continue
             current = self.catalog.current_version(job.schema_name, job.to_table)
             if current is not None:
@@ -337,7 +334,8 @@ class CopyEngine:
                 continue
             # the published version, read once: the incremental snapshot
             # and the schema the new version evolves from
-            current = self.catalog.current_version(job.schema_name, job.to_table)
+            info = self.catalog.manifest_info(job.schema_name, job.to_table)
+            current = info.get("physical")
             current_df = (
                 self.catalog.read_version(self.spark, job.schema_name, current)
                 if current is not None
@@ -360,7 +358,7 @@ class CopyEngine:
                 probe = probes.get(job_id)
                 if probe is not None:
                     df = df.filter(trigger.isNull() | (trigger <= F.lit(probe.value)))
-                state = states[job_id]
+                state = self.states[job_id]
                 if state is not None and current_df is not None:
                     delta = df.filter(trigger > F.lit(state.value))
                     df = current_df.unionByName(delta, allowMissingColumns=True)
@@ -373,38 +371,19 @@ class CopyEngine:
                 df = evolve_to_union(df, current_df.schema)
             if job.zorder_by:
                 df = self._zorder_cluster(df, job.zorder_by)
-            # Same-load_date reruns OVERWRITE their version (crash-retry
-            # idempotence, pinned by test_same_load_date_is_idempotent) —
-            # EXCEPT when this run's plan lazily reads the current
-            # version's directory (incremental snapshot+delta): the date
-            # has 1-second granularity, so a tick in the same second as
-            # the previous publish would overwrite the directory it is
-            # reading mid-write, and a THIRD same-second tick would land
-            # back on the first name — destroying the retained backup and
-            # publishing a name that sorts below a retained newer one
-            # (newest_version/switch_only would then serve stale data).
-            # So in incremental mode, bump past the PUBLISHED lineage
-            # (manifest ``physical`` + ``previous`` — the versions the
-            # incremental read and the keep-2 rollback window actually
-            # protect). A retained dir that collides but was NEVER
-            # published is a half-written leftover from a crashed attempt:
-            # bumping past it would let retention count the corpse as the
-            # "backup" and reap the last good version, so instead the name
-            # is RECLAIMED — write_version's mode("overwrite") replaces the
-            # corpse (the manifest-driven same-name replay the streaming
-            # sync uses).
+            # A version whose plan lazily reads the published one must not
+            # overwrite it or sort below it (newest_version, switch_only):
+            # names have 1-second granularity, so it lands at least one
+            # second after the newer of the published version and its
+            # backup. An unpublished directory at that name is a crashed
+            # attempt's leftover, and write_version's overwrite reclaims
+            # it. Full reloads keep the same-date overwrite (crash-retry
+            # idempotence).
             eff_date = load_date
             if reads_current:
-                retained = set(
-                    self.catalog.table_versions(job.schema_name, job.to_table)
-                )
-                info = self.catalog.manifest_info(job.schema_name, job.to_table)
-                protected = {info.get("physical"), info.get("previous")} - {None}
-                while True:
-                    name = physical_name(job.to_table, eff_date)
-                    if name not in retained or name not in protected:
-                        break  # free, or an unpublished corpse to reclaim
-                    eff_date += timedelta(seconds=1)
+                newest = max(v for v in (current, info.get("previous")) if v)
+                after = datetime.strptime(version_of(newest), LOAD_DATE_FORMAT)
+                eff_date = max(load_date, after + timedelta(seconds=1))
             physical = self.catalog.write_version(
                 df, job.schema_name, job.to_table, eff_date,
                 sort_by=list(job.sort_by) if job.sort_by else None,

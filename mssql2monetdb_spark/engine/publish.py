@@ -304,11 +304,11 @@ class VersionedCatalog:
         manifest = self._manifest(schema, table)
         record = dict(meta or {})
         # Record the outgoing version as ``previous``: the manifest then
-        # names the full published lineage the keep-2 retention protects
-        # (current + backup), letting crash-retry logic distinguish a
-        # retained-but-never-published half-written directory (safe to
-        # reclaim) from the live backup (must not touch) — see
-        # CopyEngine.do_copy's same-second collision handling.
+        # names the published lineage the keep-2 retention protects
+        # (current + backup). Its readers: CopyEngine.do_copy names an
+        # incremental version after the newer of the two, and the
+        # ``catalog_version_diff`` lifecycle query (queries/lifecycle.py)
+        # diffs the backup against the current version.
         old = self.manifest_info(schema, table)
         prior = old.get("physical")
         if prior is not None and prior != physical:

@@ -14,11 +14,12 @@ Ports the decision table of ``CopyTool.checkForNewData``
 | probe value > state value (typed compare)   | run            | 444-473 |
 | otherwise                                   | SKIP (exit 2)  | 95-98 |
 
-How the probe is taken, by source:
+How the probe is taken, by the source that holds the trigger table (the
+job's ``trigger.source`` when set, else the job's own source):
 
 | source                                  | probe                              |
 |-----------------------------------------|------------------------------------|
-| JDBC table                              | source-side MAX (:func:`probe_max_jdbc`) |
+| JDBC table, any dialect                 | source-side ``SELECT MAX`` (:func:`probe_max_jdbc`) |
 | local parquet table                     | footer statistics (:func:`probe_max_footer`), no Spark job |
 | anything the footer cannot answer       | Spark ``agg(max)`` scan (:func:`probe_max`) |
 
@@ -101,8 +102,9 @@ def _typed_watermark(value, column: str) -> Watermark | None:
 
 
 def probe_max(df: DataFrame, column: str) -> Watermark | None:
-    """``SELECT MAX(col)`` typed probe (dialect TOP-1/LIMIT-1 queries in the
-    reference, ``SourceDatabaseType.java:21-25,45-49`` — same value).
+    """``SELECT MAX(col)`` typed probe (dialect top-1 queries in the
+    reference, ``SourceDatabaseType.java:21-25,45-49`` — the same value
+    wherever those skip NULLs; see :func:`probe_max_jdbc`).
 
     The aggregate is partial/map-side over the scan (one scalar to the
     driver); on columnar file sources the scan prunes to the single probe
@@ -247,10 +249,10 @@ def jdbc_max_probe_frame(
     """One-row frame whose MAX executes ON the source server.
 
     Query-mode pushdown (``SELECT MAX("col") AS m FROM table`` shipped
-    verbatim as the JDBC relation's query — the reference's dialect
-    probe, ``SourceDatabaseType.java:21-25,45-49``): the source computes
-    the aggregate and exactly ONE row crosses the wire, regardless of
-    table size. Spark's V1 JDBC relation never pushes a Spark-side
+    verbatim as the JDBC relation's query — the value of the reference's
+    dialect probe, ``SourceDatabaseType.java:21-25,45-49``): the source
+    computes the aggregate and exactly ONE row crosses the wire, regardless
+    of table size. Spark's V1 JDBC relation never pushes a Spark-side
     ``agg(max(...))`` down (pinned by ``tests/test_watermark.py``), so
     at a 100 TB source the Spark-side form is a full-column pull — this
     frame is the scale-correct probe shape. ``quoted`` picks the column's
@@ -261,51 +263,19 @@ def jdbc_max_probe_frame(
     return pushed_query(spark, source.options, f"SELECT MAX({ident}) AS m FROM {table}")
 
 
-def trigger_probe_sql(url: str, table: str, column: str) -> str | None:
-    """The reference's dialect-NATIVE trigger statements, verbatim
-    (``SourceDatabaseType.java:21-25,45-49``):
-
-    - MSSQL: ``SELECT TOP 1 [col] FROM [table] ORDER BY [col] DESC``
-      (bracket quoting, TOP-n — the T-SQL shape);
-    - PostgreSQL: ``SELECT col FROM table ORDER BY col DESC LIMIT 1``
-      (bare identifiers, exactly as the reference ships them).
-
-    ``None`` for every other URL — the ANSI ``SELECT MAX`` pushdown is the
-    engine's portable probe (same value, same one-row wire cost)."""
-    if url.startswith(("jdbc:jtds:sqlserver:", "jdbc:sqlserver:")):
-        return f"SELECT TOP 1 [{column}] FROM [{table}] ORDER BY [{column}] DESC"
-    if url.startswith("jdbc:postgresql:"):
-        return f"SELECT {column} FROM {table} ORDER BY {column} DESC LIMIT 1"
-    return None
-
-
 def probe_max_jdbc(spark, source, table: str, column: str) -> Watermark | None:
     """Typed watermark from the source-side MAX probe (see
-    :func:`jdbc_max_probe_frame`).
+    :func:`jdbc_max_probe_frame`), the one trigger statement of every
+    dialect. The reference's top-1 statements are not shipped: PostgreSQL
+    sorts NULLs first under ``ORDER BY c DESC``, so its top-1 answers NULL
+    whenever the column holds one (a NULL probe fails open on every tick),
+    while MAX skips NULLs.
 
-    On MSSQL/PostgreSQL URLs the probe ships the reference's verbatim
-    dialect statement (:func:`trigger_probe_sql` — TOP-1 / LIMIT-1, same
-    value and wire cost as MAX); on any failure there it degrades to the
-    portable ANSI ladder below.
-
-    The portable probe walks :func:`identifier_ladder`: quoted, then —
-    only on an identifier-resolution failure — the store-cased bare
-    identifier, which keeps the one-row pushdown for columns created
-    unquoted. Only identifier failures of both forms reach the caller's
-    degradation path."""
-    native = trigger_probe_sql(source.options.get("url", ""), table, column)
-    if native is not None:
-        try:
-            rows = pushed_query(spark, source.options, native).collect()
-            return _typed_watermark(rows[0][0] if rows else None, column)
-        except Exception:  # noqa: BLE001 — degrade to the portable ladder
-            log.warning(
-                "dialect-native trigger probe failed for %s.%s — degrading "
-                "to the ANSI MAX ladder",
-                table,
-                column,
-                exc_info=True,
-            )
+    The probe walks :func:`identifier_ladder`: quoted, then — only on an
+    identifier-resolution failure — the store-cased bare identifier, which
+    keeps the one-row pushdown for columns created unquoted. Only
+    identifier failures of both forms reach the caller's degradation
+    path."""
     value = identifier_ladder(
         lambda quoted: jdbc_max_probe_frame(spark, source, table, column, quoted=quoted)
         .collect()[0][0],

@@ -4,5 +4,4 @@ from .mapper import (  # noqa: F401
     normalize_identifier,
     normalize_schema,
     normalized_dataframe,
-    schema_to_ddl,
 )

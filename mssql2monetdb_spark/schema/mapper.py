@@ -166,21 +166,6 @@ def normalized_dataframe(df: DataFrame, *, auto_trim: bool = True) -> DataFrame:
     return out
 
 
-_SPARK_TO_DDL = {
-    T.ByteType(): "TINYINT",
-    T.ShortType(): "SMALLINT",
-    T.IntegerType(): "INT",
-    T.LongType(): "BIGINT",
-    T.FloatType(): "REAL",
-    T.DoubleType(): "DOUBLE",
-    T.BooleanType(): "BOOLEAN",
-    T.StringType(): "STRING",
-    T.BinaryType(): "BINARY",
-    T.DateType(): "DATE",
-    T.TimestampType(): "TIMESTAMP",
-}
-
-
 #: Spark -> Derby column DDL (the bulk-load sink's dialect). Derby has no
 #: TINYINT (SMALLINT carries byte values on the wire — the narrowing rule
 #: re-narrows at ingest) and its strings are length-bounded (VARCHAR cap
@@ -269,16 +254,3 @@ def spark_schema_to_derby_ddl(schema: T.StructType) -> str:
         parts.append(f'"{normalize_identifier(f.name)}" {ddl}{null}')
     return ", ".join(parts)
 
-
-def schema_to_ddl(schema: T.StructType) -> str:
-    """Render a StructType as a CREATE-TABLE column list (engine DDL parity
-    with ``MonetDBUtil.createTableSql``, ``MonetDBUtil.java:162-190``)."""
-    parts = []
-    for f in schema.fields:
-        if isinstance(f.dataType, T.DecimalType):
-            ddl = f"DECIMAL({f.dataType.precision},{f.dataType.scale})"
-        else:
-            ddl = _SPARK_TO_DDL.get(f.dataType, f.dataType.simpleString().upper())
-        null = "" if f.nullable else " NOT NULL"
-        parts.append(f"`{f.name}` {ddl}{null}")
-    return ", ".join(parts)

@@ -299,9 +299,7 @@ def stage_bulk_frame(df: DataFrame, url: str, stage_dir: str) -> None:
     writer.csv(stage_dir)
 
 
-def server_bulk_import_sql(
-    url: str, table: str, path: str, *, locked: bool = False
-) -> tuple[str, list[str]]:
+def server_bulk_import_sql(url: str, table: str, path: str) -> tuple[str, list[str]]:
     """One staged part file's server-side bulk-import statement —
     the reference's COPY INTO builder re-expressed per dialect
     (``CopyTool.java:1042-1071``). Returns ``(sql, params)``; empty
@@ -311,10 +309,14 @@ def server_bulk_import_sql(
       integration-tested path — embedded Derby ships with Spark).
     - MonetDB: the reference's statement verbatim —
       ``COPY INTO t FROM 'file' USING DELIMITERS ',','\\n','\"'
-      NULL AS '\\\\N' [LOCKED]`` (``locked`` = the reference's
-      use-locked-mode flag, ``CopyTable.java:65``). Statement-shape
-      parity is unit-pinned; no MonetDB server exists in this sandbox,
-      so the path is integration-ready rather than integration-proven.
+      NULL AS '\\\\N' LOCKED``. ``LOCKED`` is the reference's default-on
+      use-locked-mode flag (``CopyTable.java:66``,
+      ``CopyTool.java:990-991``), safe on every import here: each one
+      targets a table :func:`jdbc_bulk_loader` has just created and no
+      reader uses yet (on the sink, an unpublished version). Statement-shape
+      parity is unit-pinned;
+      the test suite has no MonetDB server, so the path is
+      integration-ready rather than integration-proven.
     - PostgreSQL: server-side ``COPY ... FROM ... (FORMAT csv)`` —
       requires the file be readable by the SERVER process, the same
       visibility contract as the other two.
@@ -334,13 +336,11 @@ def server_bulk_import_sql(
             [bare.upper(), path],
         )
     if dialect == "monetdb":
-        sql = (
+        return (
             f"COPY INTO {table} FROM '{esc}'"
-            " USING DELIMITERS ',','\\n','\"' NULL AS '\\\\N'"
+            " USING DELIMITERS ',','\\n','\"' NULL AS '\\\\N' LOCKED",
+            [],
         )
-        if locked:
-            sql += " LOCKED"
-        return (sql, [])
     return (
         f"COPY {table} FROM '{esc}' WITH (FORMAT csv, QUOTE '\"', ESCAPE '\"')",
         [],
@@ -397,8 +397,8 @@ def driver_statement(spark: SparkSession, options: dict[str, str], *, transactio
         conn.close()
 
 
-def _import_one_part(st, url: str, table: str, part: str, locked: bool) -> None:
-    sql, params = server_bulk_import_sql(url, table, part, locked=locked)
+def _import_one_part(st, url: str, table: str, part: str) -> None:
+    sql, params = server_bulk_import_sql(url, table, part)
     if not params:
         st.execute(sql)
         return
@@ -430,7 +430,6 @@ def jdbc_bulk_loader(
     table_ddl: str | None = None,
     staging_dir: str | None = None,
     expected_count: int | None = None,
-    locked: bool = False,
 ) -> str:
     """Staged-CSV bulk load — the reference's COPY INTO path
     (``CopyTool.java:1042-1071``), with the reference's own degradation
@@ -449,7 +448,7 @@ def jdbc_bulk_loader(
        bulk-import call per part file, in order, on one connection,
        dialect-dispatched by :func:`server_bulk_import_sql` (Derby:
        ``SYSCS_UTIL.SYSCS_IMPORT_TABLE``; MonetDB: the reference's
-       ``COPY INTO ... USING DELIMITERS ... NULL AS '\\N' [LOCKED]``
+       ``COPY INTO ... USING DELIMITERS ... NULL AS '\\N' LOCKED``
        statement verbatim, with ``\\N``-staged nulls; PostgreSQL:
        ``COPY ... (FORMAT csv)``). A dialect with no known server-side
        COPY degrades to the INSERT path BEFORE staging;
@@ -530,7 +529,7 @@ def jdbc_bulk_loader(
                 # and the reference holds one connection per database.
                 try:
                     for part in parts:
-                        _import_one_part(st, url, table, part, locked)
+                        _import_one_part(st, url, table, part)
                 except Exception as exc:  # noqa: BLE001 — degrade per reference chain
                     failure = f"server-side import failed: {exc}"
             if failure is None:

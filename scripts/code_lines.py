@@ -5,8 +5,10 @@ a docstring (the string statement that opens a module, class or function).
 Blank lines, comment-only lines and docstring lines are not code lines.
 
     python scripts/code_lines.py mssql2monetdb_spark/engine/export.py ...
+    python scripts/code_lines.py mssql2monetdb_spark
 
-Prints one ``total code path`` row per file, then the sums.
+A directory stands for every ``*.py`` file under it. Prints one
+``total code path`` row per file, then the sums.
 """
 
 from __future__ import annotations
@@ -14,6 +16,7 @@ from __future__ import annotations
 import ast
 import sys
 import tokenize
+from pathlib import Path
 
 _NOT_CODE = {
     tokenize.COMMENT,
@@ -56,12 +59,18 @@ def count(path: str) -> tuple[int, int]:
     return len(source.decode().splitlines()), len(code)
 
 
+def python_files(paths: list[str]):
+    """``paths``, each directory replaced by the ``*.py`` files under it."""
+    for p in map(Path, paths):
+        yield from sorted(p.rglob("*.py")) if p.is_dir() else [p]
+
+
 def main(paths: list[str]) -> int:
     if not paths:
         print(__doc__.strip(), file=sys.stderr)
         return 2
     total_sum = code_sum = 0
-    for path in paths:
+    for path in python_files(paths):
         total, code = count(path)
         total_sum += total
         code_sum += code

@@ -93,6 +93,7 @@ def test_example_file_compiles_to_valid_spec():
     # global trigger block applies to every job
     assert job.trigger_table == "updated"
     assert job.trigger_column == "last_updatetime"
+    assert job.trigger_source == "db1"
 
     assert spec.scheduler_interval == "every 5 minutes"
     assert spec.mail is not None and spec.mail.server == "10.0.0.9"

@@ -1255,3 +1255,73 @@ def test_csv_trigger_probe_says_why_it_scans(spark, tmp_path, caplog):
     reasons = [r.getMessage() for r in caplog.records if "scans with Spark" in r.getMessage()]
     assert reasons == ["trigger probe for j scans with Spark: csv files carry no column statistics"]
     assert engine.store.load(engine.checksum, "j").value == 4
+
+
+def test_one_state_read_per_triggered_job(spark, tmp_path, monkeypatch):
+    """A run reads each triggered job's persisted state once: the trigger
+    decision, the unchanged-job skip and the delta filter share it."""
+    from mssql2monetdb_spark.engine.watermark import WatermarkStore
+
+    engine, src = _polled_engine(spark, tmp_path)
+    _append_rows(spark, str(src / "a.parquet"), 20, 25)
+    reads = []
+    real_load = WatermarkStore.load
+
+    def counting_load(self, checksum, job_id=""):
+        reads.append(job_id)
+        return real_load(self, checksum, job_id)
+
+    monkeypatch.setattr(WatermarkStore, "load", counting_load)
+    engine.do_copy(load_date=datetime(2024, 1, 2))
+    monkeypatch.undo()
+    assert sorted(reads) == ["a", "b"]
+    counts = {t: engine.sql(f"SELECT COUNT(DISTINCT seq) AS n FROM {t}").collect()[0]["n"] for t in "ab"}
+    assert counts == {"a": 25, "b": 10}
+
+
+def test_incremental_tick_dated_before_the_published_version_sorts_after_it(spark, tmp_path):
+    """A tick whose load_date is older than the published version (a clock
+    step back, a replayed schedule) names its version one second after the
+    published one, so newest_version — and switch_only — serve the new
+    rows."""
+    engine, src = _polled_engine(spark, tmp_path)  # published at 2024-01-01
+    cat = engine.catalog
+    _append_rows(spark, str(src / "a.parquet"), 20, 25)
+    engine.do_copy(load_date=datetime(2023, 12, 31))
+    expected = physical_name("a", datetime(2024, 1, 1, 0, 0, 1))
+    assert cat.current_version("default", "a") == expected
+    assert cat.newest_version("default", "a") == expected
+    engine.do_copy(switch_only=True)
+    row = engine.sql("SELECT COUNT(*) AS n, COUNT(DISTINCT seq) AS k, SUM(v) AS s FROM a").collect()[0]
+    assert (row["n"], row["k"], row["s"]) == (25, 25, sum(2 * i for i in range(25)))
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "csv"])
+def test_idle_tick_probes_the_trigger_source(spark, tmp_path, fmt):
+    """The trigger table lives only on ``trigger.source``: the probe reads
+    it there (from the footers, or with Spark for CSV), so a tick with no
+    new trigger rows exits 2 instead of failing open."""
+    from mssql2monetdb_spark.sources.readers import write_csv_compat
+
+    _append_rows(spark, str(tmp_path / "src" / "t.parquet"), 0, 10)
+    ctl = tmp_path / "ctl"
+    marks = spark.range(3).selectExpr("id AS seq")
+    if fmt == "csv":
+        write_csv_compat(marks, str(ctl / "marks.csv"))
+    else:
+        marks.write.parquet(str(ctl / "marks.parquet"))
+    spec = load_spec(
+        {
+            "warehouse_dir": str(tmp_path / "wh"),
+            "state_dir": str(tmp_path / "state"),
+            "sources": {
+                "_default": {"format": "parquet", "path": str(tmp_path / "src")},
+                "ctl": {"format": fmt, "path": str(ctl)},
+            },
+            "tables": {"j": {"from_table": "t", "trigger": {"table": "marks", "column": "seq", "source": "ctl"}}},
+        }
+    )
+    engine = CopyEngine(spark, spec)
+    assert engine.run(load_date=datetime(2024, 1, 1)) == EXIT_OK
+    assert engine.store.load(engine.checksum, "j").value == 2
+    assert engine.run(load_date=datetime(2024, 1, 2)) == EXIT_NO_NEW_DATA

@@ -10,37 +10,37 @@ from __future__ import annotations
 import pytest
 
 from mssql2monetdb_spark.config.properties import DIALECTS
-from mssql2monetdb_spark.engine.watermark import trigger_probe_sql
 from mssql2monetdb_spark.sources.jdbc import is_identifier_resolution_error
 
 
-def test_mssql_trigger_statement_verbatim():
-    """The T-SQL trigger probe, exactly as the reference emits it
-    (``SourceDatabaseType.java:21-25``): TOP 1, bracket-quoted
-    identifiers, descending order."""
-    got = trigger_probe_sql(
-        "jdbc:jtds:sqlserver://db1:1433/mart", "dim_customer", "load_ts"
-    )
-    assert got == (
-        "SELECT TOP 1 [load_ts] FROM [dim_customer] ORDER BY [load_ts] DESC"
-    )
-    # Microsoft's own driver URL scheme reaches the same dialect
-    assert trigger_probe_sql("jdbc:sqlserver://db1;db=x", "t", "c") == (
-        "SELECT TOP 1 [c] FROM [t] ORDER BY [c] DESC"
-    )
+@pytest.mark.parametrize(
+    "url",
+    ["jdbc:jtds:sqlserver://db1:1433/mart", "jdbc:sqlserver://db1;db=x", "jdbc:postgresql://db1/mart"],
+    ids=["jtds", "sqlserver", "postgresql"],
+)
+def test_mssql_and_postgresql_trigger_probes_ship_select_max(monkeypatch, url):
+    """Every dialect's trigger probe is the pushed ``SELECT MAX``: the
+    reference's PostgreSQL top-1 (``ORDER BY c DESC LIMIT 1``) answers NULL
+    whenever the column holds a NULL, and its MSSQL form brackets a
+    schema-qualified table name whole (``[dbo.orders]``)."""
+    from mssql2monetdb_spark.config.spec import SourceSpec
+    from mssql2monetdb_spark.engine import watermark as wm
 
+    shipped: list[str] = []
 
-def test_postgresql_trigger_statement_verbatim():
-    """``SourceDatabaseType.java:45-49``: bare identifiers, LIMIT 1."""
-    got = trigger_probe_sql("jdbc:postgresql://db1:5432/mart", "t", "c")
-    assert got == "SELECT c FROM t ORDER BY c DESC LIMIT 1"
+    class _Frame:
+        def collect(self):
+            return [(41,)]
 
+    def fake_pushed_query(spark, options, sql):
+        shipped.append(sql)
+        return _Frame()
 
-def test_other_dialects_use_portable_max_probe():
-    """Derby/MonetDB (and anything unrecognized) have no dialect-native
-    trigger statement — the ANSI ``SELECT MAX`` pushdown is the probe."""
-    assert trigger_probe_sql("jdbc:derby:/tmp/db", "t", "c") is None
-    assert trigger_probe_sql("jdbc:monetdb://h:50000/db", "t", "c") is None
+    monkeypatch.setattr(wm, "pushed_query", fake_pushed_query)
+    src = SourceSpec(name="s", format="jdbc", options={"url": url})
+    got = wm.probe_max_jdbc(None, src, "dbo.orders", "c")
+    assert (got.value, got.type_name) == (41, "bigint")
+    assert shipped == ['SELECT MAX("c") AS m FROM dbo.orders']
 
 
 def test_mssql_url_synthesis_and_default_port():
@@ -137,9 +137,9 @@ def test_identifier_quoted_probe_failure_retries_unquoted(monkeypatch):
 def test_native_trigger_probe_drops_partitioned_scan_options():
     """A source whose options declare a partitioned scan (the auto-bounds
     setup: ``partitionColumn`` + ``numPartitions``) must still run the
-    dialect-native one-row probe: a pushed query carries no partitioning
-    keys, which Spark rejects without ``dbtable`` — keeping them failed the
-    native probe on every tick and ran a second, portable probe."""
+    one-row MAX probe: a pushed query carries no partitioning keys, which
+    Spark rejects without ``dbtable`` — keeping them would fail the probe
+    on every tick."""
     from mssql2monetdb_spark.config.spec import SourceSpec
     from mssql2monetdb_spark.engine import watermark as wm
 
@@ -181,6 +181,6 @@ def test_native_trigger_probe_drops_partitioned_scan_options():
         {
             "url": "jdbc:postgresql://db1:5432/mart",
             "fetchsize": "500",
-            "query": "SELECT c FROM t ORDER BY c DESC LIMIT 1",
+            "query": 'SELECT MAX("c") AS m FROM t',
         }
     ]

@@ -536,13 +536,9 @@ def test_bulk_import_sql_dialect_statements():
     sql, params = server_bulk_import_sql("jdbc:monetdb://h:50000/db", "t", "/stage/p1")
     assert sql == (
         "COPY INTO t FROM '/stage/p1'"
-        " USING DELIMITERS ',','\\n','\"' NULL AS '\\\\N'"
+        " USING DELIMITERS ',','\\n','\"' NULL AS '\\\\N' LOCKED"
     )
     assert params == []
-    locked, _ = server_bulk_import_sql(
-        "jdbc:monetdb://h:50000/db", "t", "/stage/p1", locked=True
-    )
-    assert locked.endswith(" LOCKED")
 
     sql, params = server_bulk_import_sql(
         "jdbc:postgresql://h/db", "t", "/stage/it's"

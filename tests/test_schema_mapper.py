@@ -14,7 +14,6 @@ from mssql2monetdb_spark.schema.mapper import (
     normalize_identifier,
     normalize_schema,
     normalized_dataframe,
-    schema_to_ddl,
 )
 
 
@@ -125,16 +124,6 @@ def test_normalized_dataframe_trim_and_names(spark):
 
     kept = normalized_dataframe(df, auto_trim=False).collect()[0]
     assert kept["s_pad"] == "  padded  "  # autoTrim OFF preserves
-
-
-def test_schema_to_ddl():
-    schema = T.StructType(
-        [
-            T.StructField("id", T.LongType(), False),
-            T.StructField("v", T.DecimalType(18, 2), True),
-        ]
-    )
-    assert schema_to_ddl(schema) == "`id` BIGINT NOT NULL, `v` DECIMAL(18,2)"
 
 
 def test_spark_schema_to_derby_ddl():

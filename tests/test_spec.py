@@ -125,3 +125,13 @@ def test_copy_via_temp_table_warns_once_naming_its_jobs(caplog):
     with caplog.at_level("WARNING", logger="mssql2monetdb_spark.config.spec"):
         load_spec(base_spec())
     assert not [r for r in caplog.records if "copy_via_temp_table" in r.getMessage()]
+
+
+def test_trigger_source_is_carried_and_must_exist():
+    """``trigger.source`` names the source that holds the trigger table;
+    without it the probe reads the job's own source."""
+    spec = load_spec(base_spec(trigger={"column": "l_orderkey", "source": "_default"}))
+    assert spec.jobs["t1"].trigger_source == "_default"
+    assert load_spec(base_spec(trigger={"column": "l_orderkey"})).jobs["t1"].trigger_source is None
+    with pytest.raises(SpecError, match="unknown trigger source 'nope'"):
+        load_spec(base_spec(trigger={"column": "l_orderkey", "source": "nope"}))
