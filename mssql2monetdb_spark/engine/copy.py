@@ -48,6 +48,26 @@ still do, since a full copy is also how deletes reach the warehouse. The one
 visible difference: a column added to a skipped job's source without new
 rows appears at the next tick that brings rows, not at this one.
 
+A fresh tick of an incremental job costs O(delta), not O(table). Its load
+writes only the delta and hard-links every data file of the published
+version into the new one (``VersionedCatalog.write_version(carry_from=)``),
+and the empty guard counts a table-mode parquet source from its footers,
+so no Spark job counts it. The tick rewrites in full, as snapshot plus
+delta, when any of these holds:
+
+- the job has no saved state (its first load, or its spec changed) or
+  no published version;
+- the delta brings a column the published version lacks;
+- the job sets ``sort_by``, ``zorder_by`` or ``partition_by``;
+- the published version recorded no schema (partitioned, or written by
+  older code);
+- ``publish.APPEND_MAX_FILES`` (32) or more of the published version's
+  data files were appended since its last full write;
+- the store has no hard links (``VersionedCatalog.write_version``).
+
+A full rewrite is one Spark write, so its files count as the new
+version's full write and the next tick appends again.
+
 Exit codes: 0 = loaded, 1 = error, 2 = no new data
 (``CopyTool.java:66-68,95-106``).
 """
@@ -57,6 +77,7 @@ from __future__ import annotations
 import logging
 import os
 from datetime import datetime, timedelta, timezone
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -227,28 +248,46 @@ class CopyEngine:
     def count_source(
         self, job: CopyJob, df: DataFrame, resolved: dict[str, DataFrame] | None = None
     ) -> int:
-        """Pre-scan count (op #4, ``CopyTool.java:643-649``): the declared
-        ``count_query`` (evaluated natively — reference ships it to the
-        source DB, ``CopyTable.java:300-308``) when present, else df.count().
+        """Pre-scan count (op #4, ``CopyTool.java:643-649``), from the
+        cheapest place that holds it:
 
-        The job's own source views are re-registered immediately before the
-        SQL runs: bare temp views are session-global, so another query-mode
-        job (or a published view of the same name) could otherwise shadow
-        the relation the count targets. With the run's ``resolved`` memo the
-        re-registration reuses the frames the extract resolved.
+        - the declared ``count_query``, evaluated natively (the reference
+          ships it to the source DB, ``CopyTable.java:300-308``);
+        - for a table-mode parquet job, the sum of the footers' row counts
+          over ``df.inputFiles()``: the files of the frame the run resolved,
+          so the guard and the extract read one pinned listing, and no
+          Spark job runs. A file that is not a local ``file:`` path, an
+          unreadable footer or an empty listing falls back to ``df.count()``,
+          logging why;
+        - otherwise (query mode, JDBC, CSV/JSON/ORC) ``df.count()``.
+
+        Before the ``count_query`` runs, the job's own source views are
+        re-registered: bare temp views are session-global, so another
+        query-mode job (or a published view of the same name) could
+        otherwise shadow the relation the count targets. With the run's
+        ``resolved`` memo the re-registration reuses the frames the extract
+        resolved.
         """
         if job.count_query:
             register_source_views(self.spark, self.spec.sources[job.source], resolved)
             row = self.spark.sql(job.count_query).collect()[0]
             return int(row[0])
+        if self.spec.sources[job.source].format == "parquet" and job.select_source()[0] == "table":
+            try:
+                return _footer_rows(df.inputFiles())
+            except FooterFallback as exc:
+                log.info("empty guard for %s counts with Spark: %s", job.job_id, exc)
         return df.count()
 
     def assert_non_empty(
         self, frames: dict[str, DataFrame], resolved: dict[str, DataFrame] | None = None
     ) -> dict[str, int]:
-        """Pre-load count of every source; abort the whole run on any empty
-        source unless that job allows it. The count doubles as the
-        progress/validation count."""
+        """Count every source before any load (:meth:`count_source`) and
+        abort the whole run on any empty source unless that job allows it:
+        nothing is loaded or published and no state is saved. The counts
+        are the unfiltered sources' (an incremental job's delta is cut
+        later) and double as the progress/validation count, and as the
+        JDBC sink's ``expected_count``."""
         counts: dict[str, int] = {}
         empty: list[str] = []
         for job_id, df in frames.items():
@@ -344,8 +383,11 @@ class CopyEngine:
             # incremental append (trigger-filtered delta + published snapshot):
             # only rows strictly newer than the persisted watermark are read
             # from the source — the filter pushes down to the source scan —
-            # and the new version is snapshot+delta (the reference re-copies
-            # the full table every run; this is the Spark-first upgrade).
+            # and the new version is snapshot+delta: the delta's files plus
+            # links to the published version's, or one rewrite of both when
+            # the tick must rewrite in full (module docstring). The
+            # reference re-copies the full table every run; this is the
+            # Spark-first upgrade.
             # Rows newer than this run's probe are left out as well: the
             # probe is the watermark saved on success, so the next tick
             # loads them — loading them now would load them twice. The
@@ -353,6 +395,7 @@ class CopyEngine:
             # bound is what keeps such rows out, for file and JDBC sources
             # alike.
             reads_current = False
+            carry_from = None
             if job.incremental:
                 trigger = F.col(job.trigger_column)
                 probe = probes.get(job_id)
@@ -360,9 +403,16 @@ class CopyEngine:
                     df = df.filter(trigger.isNull() | (trigger <= F.lit(probe.value)))
                 state = self.states[job_id]
                 if state is not None and current_df is not None:
-                    delta = df.filter(trigger > F.lit(state.value))
-                    df = current_df.unionByName(delta, allowMissingColumns=True)
+                    df = df.filter(trigger > F.lit(state.value))  # the delta
                     reads_current = True
+                    if (
+                        not (job.sort_by or job.zorder_by or job.partition_by)
+                        and set(df.columns) <= set(current_df.columns)
+                        and self.catalog.can_append(job.schema_name, current)
+                    ):
+                        carry_from = current  # evolving the delta adds no column
+                    else:
+                        df = current_df.unionByName(df, allowMissingColumns=True)
 
             # schema verify + evolve (op #14): widen the new version to the
             # union of the published schema and the incoming one so the view
@@ -371,8 +421,9 @@ class CopyEngine:
                 df = evolve_to_union(df, current_df.schema)
             if job.zorder_by:
                 df = self._zorder_cluster(df, job.zorder_by)
-            # A version whose plan lazily reads the published one must not
-            # overwrite it or sort below it (newest_version, switch_only):
+            # A version built from the published one (its plan reads it, or
+            # it carries its files) must not overwrite it or sort below it
+            # (newest_version, switch_only):
             # names have 1-second granularity, so it lands at least one
             # second after the newer of the published version and its
             # backup. An unpublished directory at that name is a crashed
@@ -388,6 +439,7 @@ class CopyEngine:
                 df, job.schema_name, job.to_table, eff_date,
                 sort_by=list(job.sort_by) if job.sort_by else None,
                 partition_by=list(job.partition_by) if job.partition_by else None,
+                carry_from=carry_from,
             )
             loaded[job_id] = physical
 
@@ -460,6 +512,27 @@ class CopyEngine:
 
 def _conf_on(conf, key: str) -> bool:
     return conf.get(key).strip().lower() == "true"
+
+
+def _footer_rows(files: list[str]) -> int:
+    """Rows in the parquet ``files`` (``DataFrame.inputFiles()`` URIs),
+    summed from their footers; raises :class:`FooterFallback` when a file
+    is not local, a footer is unreadable, or there is no file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if not files:
+        raise FooterFallback("no data file is listed")
+    rows = 0
+    for f in files:
+        uri = urlparse(f)
+        if uri.scheme != "file" or uri.netloc not in ("", "localhost"):
+            raise FooterFallback(f"{f} is not a local file")
+        try:
+            rows += pq.read_metadata(unquote(uri.path)).num_rows
+        except (OSError, pa.ArrowException) as exc:
+            raise FooterFallback(f"unreadable footer {f}: {exc}") from exc
+    return rows
 
 
 class _SinkCatalog:

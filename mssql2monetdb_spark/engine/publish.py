@@ -16,7 +16,13 @@ atomic single-object PUT (the manifest), with no table-lock during load.
 
 Schema sidecar: an unpartitioned ``write_version`` records the written
 frame's ``schema.json()`` as ``_SCHEMA.json`` at the version root, through
-``fs.write_atomic`` and after the parquet write has committed. When the
+``fs.write_atomic`` and after the parquet write (and an append's carry) has
+committed. An append (``write_version(carry_from=...)``) records the schema
+that writing the base version's rows plus the new ones would record, so
+appended and rewritten versions carry byte-equal sidecars. Written last, it
+also marks an unpartitioned version as finished: ``newest_version`` skips
+an unpublished one without it, such as an append that crashed mid-carry
+and holds only part of its base's files. When the
 file is present, ``read_version`` reads with that schema and runs no
 footer-reading inference job; when it is absent it infers as before. It is
 absent for partitioned writes (their partition-column types come from the
@@ -27,8 +33,15 @@ sidecar is never read as data. ``mode("overwrite")`` replaces a version
 directory whole, so a sidecar never outlives the data it describes.
 
 Every version is a self-contained directory: ``write_version`` rewrites the
-table, and ``write_version_incremental`` rewrites the touched partitions and
-carries the rest by hard link (byte copy where the store has no links).
+table or, as an append, writes only the new rows and carries every data
+file of the base version; ``write_version_incremental`` rewrites the
+touched partitions and carries the rest. Both carry through one helper,
+``_carry``: a hard link per file, so retention can reap the version that
+first wrote a file while every retained version that links it still reads
+it. Where the store has no hard links, the partition carry copies bytes,
+and an append rewrites its base instead: copying the whole table through
+the driver would cost more than Spark's parallel rewrite. Linked files are
+shared, so no code may modify a version's data files in place.
 Older releases could also carry partitions by reference, leaving a version
 that held only the partitions it rewrote plus a marker file naming the
 versions that held the rest. That format is gone: reading such a version,
@@ -40,6 +53,7 @@ from __future__ import annotations
 import json
 import os
 import re
+from collections import Counter
 from dataclasses import dataclass, field
 from datetime import datetime
 
@@ -54,6 +68,13 @@ VERSION_RE = re.compile(r"_(20\d{2}_\d{2}_\d{2}_\d{2}_\d{2}_\d{2})$")
 RETAIN_VERSIONS = 2  # current + 1 backup (CopyTool.java:575-580)
 #: the written schema of an unpartitioned version (module docstring)
 SCHEMA_FILE = "_SCHEMA.json"
+#: An append carries a version while fewer of its data files than this were
+#: appended since its last full write; then the tick rewrites it whole, which
+#: compacts it (``can_append``).
+APPEND_MAX_FILES = 32
+#: the write id Spark puts in every file name of one write:
+#: ``part-00000-<uuid>-c000.snappy.parquet``
+WRITE_ID_RE = re.compile(r"^part-\d+-([0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12})")
 
 
 def physical_name(table: str, load_date: datetime) -> str:
@@ -63,6 +84,12 @@ def physical_name(table: str, load_date: datetime) -> str:
 def version_of(physical: str) -> str | None:
     m = VERSION_RE.search(physical)
     return m.group(1) if m else None
+
+
+def _hidden(name: str) -> bool:
+    """True for names Spark's file listing skips: ``.`` prefixes, and ``_``
+    prefixes other than partition directories (``_kb=3``)."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
 
 
 @dataclass
@@ -140,6 +167,7 @@ class VersionedCatalog:
         sort_by: list[str] | None = None,
         partition_by: list[str] | None = None,
         distribute: bool = True,
+        carry_from: str | None = None,
     ) -> str:
         """PHASE 1+2 analog: materialize the load as a new physical version.
 
@@ -166,9 +194,29 @@ class VersionedCatalog:
 
         An unpartitioned write also records its schema in ``_SCHEMA.json``
         (module docstring), so reading the version back needs no inference.
+
+        ``carry_from`` makes the write an append: ``df`` holds only the new
+        rows, with the columns and types of version ``carry_from`` (one
+        :meth:`can_append` accepts; no ``sort_by`` or ``partition_by``).
+        Every data file of that version is hard-linked into the new one
+        first (:meth:`_carry`), and ``df`` is then written beside them, so
+        a crash leaves no ``_SCHEMA.json`` (module docstring). Where the
+        store has no hard links, the write rewrites ``carry_from``'s rows
+        plus ``df`` instead. Either way the recorded schema is the one that
+        rewrite records.
         """
         physical = physical_name(table, load_date)
         out_dir = self.version_dir(schema, physical)
+        if carry_from is not None:
+            base = self.read_version(df.sparkSession, schema, carry_from)
+            full = base.unionByName(df)  # analysis only, no job
+            self.fs.rmtree_quiet(out_dir)
+            self.fs.makedirs(out_dir)
+            if self._carry(self.version_dir(schema, carry_from), out_dir, or_copy=False):
+                df.write.mode("append").parquet(out_dir)
+                self.fs.write_atomic(os.path.join(out_dir, SCHEMA_FILE), full.schema.json())
+                return physical
+            df = full
         out = df
         if partition_by and distribute:
             out = out.hint("rebalance", *partition_by)
@@ -181,6 +229,24 @@ class VersionedCatalog:
         if not partition_by:
             self.fs.write_atomic(os.path.join(out_dir, SCHEMA_FILE), out.schema.json())
         return physical
+
+    def can_append(self, schema: str, physical: str) -> bool:
+        """True when ``write_version(carry_from=physical)`` may carry the
+        version: it recorded its schema, so it is an unpartitioned write
+        (module docstring), and fewer than :data:`APPEND_MAX_FILES` of its
+        data files were appended since its last full write. Those are the
+        files outside its largest write (:data:`WRITE_ID_RE`; a file
+        without a write id counts as a write of its own): a full write, of
+        any size, is one write, and each append adds one more. So a version
+        a full write left with many files still takes appends."""
+        names = self.fs.listdir(self.version_dir(schema, physical))
+        if SCHEMA_FILE not in names:
+            return False
+        writes = Counter(
+            (m.group(1) if (m := WRITE_ID_RE.match(n)) else n) for n in names if not _hidden(n)
+        )
+        appended = sum(writes.values()) - max(writes.values(), default=0)
+        return appended < APPEND_MAX_FILES
 
     def write_version_incremental(
         self,
@@ -197,20 +263,15 @@ class VersionedCatalog:
         ``df_touched`` holds the merged content of the partitions this load
         actually changed (hive-partitioned on ``partition_col``); every
         OTHER partition directory of ``base_physical`` is carried into the
-        new version by hard-linking its data files — zero rewrite I/O, and
-        the links keep the data alive after retention deletes the base
-        version's directory entry. This is the directory-catalog analog of
-        a manifest-based table format's file reuse (Delta/Iceberg): write
-        volume per load drops from O(table) to O(touched partitions) while
-        the version swap stays atomic (the new directory is complete
-        before ``publish`` repoints the manifest) and time travel keeps
-        working (every retained version remains a full self-describing
-        directory).
-
-        On a store without hard links (object-store FUSE mounts,
-        cross-device staging, every ``HadoopFS`` store) the first
-        ``OSError`` from ``fs.link`` switches the rest of the carry to byte
-        copies: the same content, at O(untouched bytes) carry I/O.
+        new version (:meth:`_carry`) — zero rewrite I/O where the store has
+        hard links, and the links keep the data alive after retention
+        deletes the base version's directory entry. This is the
+        directory-catalog analog of a manifest-based table format's file
+        reuse (Delta/Iceberg): write volume per load drops from O(table) to
+        O(touched partitions) while the version swap stays atomic (the new
+        directory is complete before ``publish`` repoints the manifest) and
+        time travel keeps working (every retained version remains a full
+        self-describing directory).
 
         Crash-retry safe the same way ``write_version`` is: the target
         directory is cleared first, so a replay that recomputes the same
@@ -223,27 +284,49 @@ class VersionedCatalog:
         out_dir = self.version_dir(schema, physical)
         self.fs.rmtree_quiet(out_dir)
         df_touched.write.mode("overwrite").partitionBy(partition_col).parquet(out_dir)
-        if not base_physical:
-            return physical
-        base_dir = self.version_dir(schema, base_physical)
-        use_copy = False
-        for entry in self.fs.listdir(base_dir):
-            src_dir, dst_dir = os.path.join(base_dir, entry), os.path.join(out_dir, entry)
-            if not entry.startswith(f"{partition_col}=") or self.fs.exists(dst_dir):
-                continue  # not a partition, or touched: freshly rewritten above
-            self.fs.makedirs(dst_dir)
-            for fname in self.fs.listdir(src_dir):
-                if fname.startswith(("_", ".")):
-                    continue  # write markers, not data
-                src, dst = os.path.join(src_dir, fname), os.path.join(dst_dir, fname)
-                if not use_copy:
-                    try:
-                        self.fs.link(src, dst)
-                        continue
-                    except OSError:
-                        use_copy = True  # store has no links: copy from here on
-                self.fs.copy(src, dst)
+        if base_physical:
+            self._carry(self.version_dir(schema, base_physical), out_dir)
         return physical
+
+    def _carry(self, base_dir: str, out_dir: str, *, or_copy: bool = True) -> bool:
+        """Carry every data file of ``base_dir`` into ``out_dir`` by hard
+        link: the files at its root, and those of each partition directory
+        that the write into ``out_dir`` did not rewrite. Names starting
+        with ``_`` or ``.`` (write markers, checksums, ``_SCHEMA.json``) are
+        not data and stay behind, except partition directories such as
+        ``_kb=3`` (Spark's listing rule). The first ``OSError`` from a link
+        switches the rest of the carry to byte copies: the same content, at
+        O(carried bytes) I/O. When that is the very first link
+        (a store without hard links: object-store FUSE mounts, cross-device
+        staging, every ``HadoopFS`` store) and ``or_copy`` is False, the
+        carry copies nothing and returns False; otherwise it returns True.
+        """
+        pairs = []
+        for entry in self.fs.listdir(base_dir):
+            if _hidden(entry):
+                continue
+            src, dst = os.path.join(base_dir, entry), os.path.join(out_dir, entry)
+            if not self.fs.isdir(src):
+                pairs.append((src, dst))
+            elif not self.fs.exists(dst):  # a partition the write left alone
+                self.fs.makedirs(dst)
+                pairs += [
+                    (os.path.join(src, f), os.path.join(dst, f))
+                    for f in self.fs.listdir(src)
+                    if not _hidden(f)
+                ]
+        use_copy = False
+        for i, (src, dst) in enumerate(pairs):
+            if not use_copy:
+                try:
+                    self.fs.link(src, dst)
+                    continue
+                except OSError:
+                    if i == 0 and not or_copy:
+                        return False
+                    use_copy = True  # store has no links: copy from here on
+            self.fs.copy(src, dst)
+        return True
 
     def _refuse_carried(self, schema: str, physical: str) -> None:
         """Fail loudly on a version in the carry-by-reference format older
@@ -370,8 +453,16 @@ class VersionedCatalog:
         return registered
 
     def newest_version(self, schema: str, table: str) -> str | None:
-        versions = self.table_versions(schema, table)
-        return versions[0] if versions else None
+        """The newest loaded version, which ``--switch-only`` publishes. An
+        unpublished version whose write did not finish is skipped: one
+        with neither ``_SCHEMA.json``, which an unpartitioned write records
+        last, nor a partition directory (module docstring)."""
+        current = self.current_version(schema, table)
+        for physical in self.table_versions(schema, table):
+            names = self.fs.listdir(self.version_dir(schema, physical))
+            if physical == current or SCHEMA_FILE in names or any("=" in n for n in names):
+                return physical
+        return None
 
     def cleanup(self, schema: str, table: str, *, retain: int = RETAIN_VERSIONS) -> list[str]:
         """PHASE 4 analog: drop versions beyond retention (op #21).

@@ -1325,3 +1325,553 @@ def test_idle_tick_probes_the_trigger_source(spark, tmp_path, fmt):
     assert engine.run(load_date=datetime(2024, 1, 1)) == EXIT_OK
     assert engine.store.load(engine.checksum, "j").value == 2
     assert engine.run(load_date=datetime(2024, 1, 2)) == EXIT_NO_NEW_DATA
+
+
+# -- append-only incremental versions ------------------------------------------
+
+
+def _rows(spark, cat, table, version=None):
+    """The rows of a retained version (default: the published one), sorted
+    with NULLs last."""
+    df = cat.table_at(spark, "default", table, version)
+    return sorted(df.collect(), key=lambda r: tuple((v is None, v) for v in r))
+
+
+def _data_nlinks(cat, table, physical=None):
+    """{path: st_nlink} of every data file of a version (default: the
+    published one), partition directories included."""
+    import os
+
+    physical = physical or cat.current_version("default", table)
+    d = cat.version_dir("default", physical)
+    return {
+        os.path.join(root, f): os.stat(os.path.join(root, f)).st_nlink
+        for root, _dirs, files in os.walk(d)
+        for f in files
+        if not f.startswith(("_", "."))
+    }
+
+
+def _schema_bytes(cat, table):
+    import os
+
+    from mssql2monetdb_spark.engine.publish import SCHEMA_FILE
+
+    d = cat.version_dir("default", cat.current_version("default", table))
+    with open(os.path.join(d, SCHEMA_FILE), "rb") as fh:
+        return fh.read()
+
+
+def _evolving_source(spark, path, upto, *, with_w=True, null_seq=()):
+    """The whole source rewritten: rows 0..upto-1 (``seq``, ``v``, and
+    ``w`` carrying field metadata while ``with_w``), with a NULL trigger on
+    the ids in ``null_seq``."""
+    import pyspark.sql.functions as F
+
+    seq = F.when(F.col("id").isin(list(null_seq)), None).otherwise(F.col("id"))
+    cols = [seq.alias("seq"), (F.col("id") * 2).alias("v")]
+    if with_w:
+        cols.append((F.col("id") + 1000).alias("w", metadata={"comment": "late"}))
+    spark.range(0, upto).select(*cols).write.mode("overwrite").parquet(path)
+
+
+def _incremental_sequence(spark, root):
+    """Five loads of one incremental table (an initial load, then four
+    ticks); per load, the published rows and ``_SCHEMA.json`` bytes, and
+    whether any published data file is a hard link."""
+    src = str(root / "src" / "ev.parquet")
+    engine = CopyEngine(
+        spark,
+        load_spec(
+            {
+                "warehouse_dir": str(root / "wh"),
+                "state_dir": str(root / "state"),
+                "sources": {"_default": {"format": "parquet", "path": str(root / "src")}},
+                "tables": {"ev": {"from_table": "ev", "trigger": {"column": "seq"}, "incremental": True}},
+            }
+        ),
+    )
+    steps = [
+        dict(upto=100),
+        dict(upto=120),
+        dict(upto=140, null_seq=(135,)),  # a delta row whose trigger is NULL
+        dict(upto=160, with_w=False),  # the delta lacks w: a typed NULL
+        dict(upto=180, with_w=False),
+    ]
+    out = []
+    for day, step in enumerate(steps, start=1):
+        _evolving_source(spark, src, **step)
+        assert engine.run(load_date=datetime(2024, 1, day)) == EXIT_OK
+        cat = engine.catalog
+        linked = any(n > 1 for n in _data_nlinks(cat, "ev").values())
+        out.append((_rows(spark, cat, "ev"), _schema_bytes(cat, "ev"), linked))
+    return out
+
+
+def test_appended_and_rewritten_versions_hold_the_same_rows_and_schema(spark, tmp_path, monkeypatch):
+    """The append path publishes, tick by tick, exactly what the full
+    snapshot+delta rewrite publishes: the same sorted rows and a
+    byte-equal ``_SCHEMA.json`` — through a NULL-trigger row and a delta
+    that lacks a published column carrying field metadata."""
+    from mssql2monetdb_spark.engine import publish
+
+    appended = _incremental_sequence(spark, tmp_path / "append")
+    monkeypatch.setattr(publish, "APPEND_MAX_FILES", 0)  # every tick rewrites
+    rewritten = _incremental_sequence(spark, tmp_path / "full")
+    assert [linked for *_, linked in appended] == [False, True, True, True, True]
+    assert not any(linked for *_, linked in rewritten)
+    for tick, ((rows_a, schema_a, _), (rows_f, schema_f, _)) in enumerate(zip(appended, rewritten)):
+        assert rows_a == rows_f, tick
+        assert schema_a == schema_f, tick
+    rows = appended[-1][0]
+    assert len(rows) == 179  # 100 initial + 4 x 20 delta rows; the NULL-seq row stays out
+    assert sum(r["w"] is not None for r in rows) == 139
+    assert '"comment":"late"' in appended[-1][1].decode()
+
+
+def test_appended_versions_survive_retention(spark, tmp_path):
+    """After three appended ticks, cleanup has reaped the version that
+    first wrote the linked files, and both retained versions still read
+    every row they published."""
+    import os
+
+    engine, src = _polled_engine(spark, tmp_path)
+    cat = engine.catalog
+    first = cat.current_version("default", "a")
+    first_inodes = {os.stat(p).st_ino for p in _data_nlinks(cat, "a", first)}
+    expected = {}
+    for tick, hi in enumerate((23, 26, 29), start=2):
+        _append_rows(spark, str(src / "a.parquet"), hi - 3, hi)
+        assert engine.run(load_date=datetime(2024, 1, tick)) == EXIT_OK
+        expected[cat.current_version("default", "a")] = hi
+    retained = cat.table_versions("default", "a")
+    assert first not in retained and len(retained) == 2
+    current = cat.current_version("default", "a")
+    assert first_inodes <= {os.stat(p).st_ino for p in _data_nlinks(cat, "a", current)}
+    for physical in retained:
+        n = expected[physical]
+        got = _rows(spark, cat, "a", version_of(physical))
+        assert [(r["seq"], r["v"]) for r in got] == [(i, 2 * i) for i in range(n)], physical
+
+
+def _write_ids(cat, table, physical=None):
+    """The Spark write id of every root data file of a version (default:
+    the published one)."""
+    import os
+
+    from mssql2monetdb_spark.engine.publish import WRITE_ID_RE
+
+    physical = physical or cat.current_version("default", table)
+    names = os.listdir(cat.version_dir("default", physical))
+    return [WRITE_ID_RE.match(n).group(1) for n in names if n.startswith("part-")]
+
+
+def test_append_rewrites_where_the_store_has_no_links(spark, tmp_path, monkeypatch):
+    """Where the first link fails (a store without hard links), the append
+    copies nothing through the driver: it rewrites the base and the delta
+    in one Spark write, and publishes the same rows."""
+    from mssql2monetdb_spark.engine.fs import LocalFS
+
+    engine, src = _polled_engine(spark, tmp_path)
+    attempts = []
+
+    def no_link(self, s, d):
+        attempts.append(s)
+        raise OSError("EXDEV: cross-device link (simulated object store)")
+
+    monkeypatch.setattr(LocalFS, "link", no_link)
+    copies = []
+    monkeypatch.setattr(LocalFS, "copy", lambda self, s, d: copies.append(s))
+    _append_rows(spark, str(src / "a.parquet"), 20, 25)
+    assert engine.run(load_date=datetime(2024, 1, 2)) == EXIT_OK
+    assert len(attempts) == 1 and copies == []
+    nlinks = _data_nlinks(engine.catalog, "a")
+    assert nlinks and set(nlinks.values()) == {1}
+    assert len(set(_write_ids(engine.catalog, "a"))) == 1  # one full write
+    got = _rows(spark, engine.catalog, "a")
+    assert [(r["seq"], r["v"]) for r in got] == [(i, 2 * i) for i in range(25)]
+
+
+def test_append_copies_the_rest_when_a_later_link_fails(spark, tmp_path, monkeypatch):
+    """A link that fails after the first one succeeded switches the rest
+    of the carry to byte copies, with the same rows."""
+    from mssql2monetdb_spark.engine.fs import LocalFS
+
+    engine, src = _polled_engine(spark, tmp_path)
+    cat = engine.catalog
+    base_files = len(_data_nlinks(cat, "a"))
+    assert base_files >= 2
+    real_link = LocalFS.link
+    attempts = []
+
+    def first_link_only(self, s, d):
+        attempts.append(s)
+        if len(attempts) > 1:
+            raise OSError("EMLINK: too many links")
+        real_link(self, s, d)
+
+    monkeypatch.setattr(LocalFS, "link", first_link_only)
+    _append_rows(spark, str(src / "a.parquet"), 20, 25)
+    assert engine.run(load_date=datetime(2024, 1, 2)) == EXIT_OK
+    assert len(attempts) == 2
+    nlinks = sorted(_data_nlinks(cat, "a").values())
+    assert nlinks.count(2) == 1 and len(nlinks) > base_files  # one link, the rest copies
+    got = _rows(spark, cat, "a")
+    assert [(r["seq"], r["v"]) for r in got] == [(i, 2 * i) for i in range(25)]
+
+
+def test_append_on_hadoop_fs_rewrites(spark, tmp_path):
+    """On a Hadoop store (no hard links) an append rewrites its base and
+    the new rows in one Spark write, records the schema through the store,
+    and the new version reads the base's rows plus the appended ones."""
+    from mssql2monetdb_spark.engine.fs import HadoopFS
+    from mssql2monetdb_spark.engine.publish import SCHEMA_FILE
+
+    wh_uri = f"file://{tmp_path}/hwh"
+    cat = VersionedCatalog(wh_uri, fs=HadoopFS(spark, wh_uri))
+    df1 = spark.createDataFrame([(1, "a"), (2, "b")], "k bigint, s string")
+    p1 = cat.write_version(df1, "default", "t", datetime(2024, 6, 1))
+    cat.publish(spark, "default", "t", p1)
+    assert cat.can_append("default", p1)
+    df2 = spark.createDataFrame([(3, None)], "k bigint, s string")
+    p2 = cat.write_version(df2, "default", "t", datetime(2024, 6, 2), carry_from=p1)
+    cat.publish(spark, "default", "t", p2)
+    got = {(r["k"], r["s"]) for r in cat.table_at(spark, "default", "t").collect()}
+    assert got == {(1, "a"), (2, "b"), (3, None)}
+    recorded = cat.fs.read_text(f"{cat.version_dir('default', p2)}/{SCHEMA_FILE}")
+    assert recorded == cat.read_version(spark, "default", p1).schema.json()
+    base_files = {f for f in cat.fs.listdir(cat.version_dir("default", p1)) if f.startswith("part-")}
+    new_files = {f for f in cat.fs.listdir(cat.version_dir("default", p2)) if f.startswith("part-")}
+    assert base_files and new_files and not base_files & new_files
+    cat.fs.rmtree(cat.version_dir("default", p1))
+    got = {(r["k"], r["s"]) for r in cat.table_at(spark, "default", "t").collect()}
+    assert got == {(1, "a"), (2, "b"), (3, None)}
+
+
+def _crash_on_second_link(monkeypatch):
+    """Make the second hard link of the run raise, as a crash would."""
+    from mssql2monetdb_spark.engine.fs import LocalFS
+
+    real_link = LocalFS.link
+    calls = []
+
+    def crash_on_second(self, s, d):
+        calls.append(s)
+        if len(calls) == 2:
+            raise RuntimeError("simulated crash mid-carry")
+        real_link(self, s, d)
+
+    monkeypatch.setattr(LocalFS, "link", crash_on_second)
+
+
+def test_append_crashing_mid_carry_retries_clean(spark, tmp_path, monkeypatch):
+    """An error midway through the carry's links fails the run with
+    nothing published, before the delta is written; the retry with the
+    same load_date publishes the right rows, and the version then holds
+    the base's files plus one write of the delta."""
+    import os
+
+    from mssql2monetdb_spark.engine.publish import SCHEMA_FILE
+
+    engine, src = _polled_engine(spark, tmp_path)
+    cat = engine.catalog
+    base = cat.current_version("default", "a")
+    base_names = {f for f in os.listdir(cat.version_dir("default", base)) if f.startswith("part-")}
+    assert len(base_names) >= 2
+    _crash_on_second_link(monkeypatch)
+    _append_rows(spark, str(src / "a.parquet"), 20, 25)
+    d = datetime(2024, 1, 2)
+    assert engine.run(load_date=d) == EXIT_ERROR
+    assert cat.current_version("default", "a") == base
+    failed = cat.table_versions("default", "a")[0]
+    failed_names = set(os.listdir(cat.version_dir("default", failed)))
+    assert failed != base and SCHEMA_FILE not in failed_names
+    assert {f for f in failed_names if f.startswith("part-")} < base_names  # part of the carry
+    monkeypatch.undo()
+
+    assert engine.run(load_date=d) == EXIT_OK
+    assert cat.current_version("default", "a") == failed
+    names = {f for f in os.listdir(cat.version_dir("default", failed)) if f.startswith("part-")}
+    assert base_names < names
+    assert len(set(_write_ids(cat, "a")) - set(_write_ids(cat, "a", base))) == 1
+    got = _rows(spark, cat, "a")
+    assert [(r["seq"], r["v"]) for r in got] == [(i, 2 * i) for i in range(25)]
+
+
+def test_switch_only_skips_a_crashed_append(spark, tmp_path, monkeypatch):
+    """An append that crashed mid-carry leaves an unpublished version with
+    part of its base's files and no ``_SCHEMA.json``. ``--switch-only``
+    never publishes it: before the retry it keeps the published version,
+    and after a retry at a later load_date it publishes the retry's."""
+    engine, src = _polled_engine(spark, tmp_path)
+    cat = engine.catalog
+    base = cat.current_version("default", "a")
+    _crash_on_second_link(monkeypatch)
+    _append_rows(spark, str(src / "a.parquet"), 20, 25)
+    assert engine.run(load_date=datetime(2024, 1, 2)) == EXIT_ERROR
+    monkeypatch.undo()
+    corpse = cat.table_versions("default", "a")[0]
+    assert corpse != base
+
+    assert engine.do_copy(switch_only=True)["a"] == base
+    got = _rows(spark, cat, "a")
+    assert [r["seq"] for r in got] == list(range(20))
+
+    loaded = engine.do_copy(no_switch=True, load_date=datetime(2024, 1, 3))["a"]
+    assert loaded > corpse
+    assert engine.do_copy(switch_only=True)["a"] == loaded
+    got = _rows(spark, cat, "a")
+    assert [(r["seq"], r["v"]) for r in got] == [(i, 2 * i) for i in range(25)]
+
+
+def test_can_append_counts_the_files_appended_since_the_full_write(spark, tmp_path, monkeypatch):
+    """The compaction bound counts the files appended since a version's
+    last full write, not all its files: a full write that left more than
+    ``APPEND_MAX_FILES`` files, as a big table's does, still takes
+    appends, and the bound is reached only by appended files."""
+    from mssql2monetdb_spark.engine import publish
+
+    cat = VersionedCatalog(str(tmp_path / "wh"))
+    wide = spark.range(0, 400, numPartitions=publish.APPEND_MAX_FILES + 8).selectExpr("id AS k")
+    p1 = cat.write_version(wide, "default", "t", datetime(2024, 6, 1))
+    assert len(_write_ids(cat, "t", p1)) == publish.APPEND_MAX_FILES + 8
+    assert cat.can_append("default", p1)
+    p2 = cat.write_version(
+        spark.range(400, 402, numPartitions=1).selectExpr("id AS k"),
+        "default", "t", datetime(2024, 6, 2), carry_from=p1,
+    )
+    assert cat.can_append("default", p2)
+    monkeypatch.setattr(publish, "APPEND_MAX_FILES", 1)
+    assert cat.can_append("default", p1) and not cat.can_append("default", p2)
+    assert sorted(r["k"] for r in cat.read_version(spark, "default", p2).collect()) == list(range(402))
+
+
+@pytest.mark.parametrize("why", ["new_column", "sort_by", "partition_by", "zorder_by", "file_bound"])
+def test_full_rewrite_triggers_write_self_contained_versions(spark, tmp_path, monkeypatch, why):
+    """A tick that must rewrite in full writes a version whose every data
+    file is its own (link count 1) and holds the right rows, while a plain
+    incremental table ``a`` in the same tick appends by hard link."""
+    import pyspark.sql.functions as F
+
+    from mssql2monetdb_spark.engine import publish
+
+    t_path = str(tmp_path / "src" / "t.parquet")
+    flags = {
+        "sort_by": {"sort_by": ["v"]},
+        "partition_by": {"partition_by": ["g"]},
+        "zorder_by": {"zorder_by": ["seq", "v"]},
+    }
+    t_job = {"from_table": "t", "trigger": {"column": "seq"}, "incremental": True}
+    extra = {"t": {**t_job, **flags.get(why, {})}}
+
+    def write_t(lo, hi, mode, *, with_w=False):
+        cols = ["id AS seq", "id * 2 AS v", "CAST(id % 3 AS INT) AS g"]
+        cols += ["id + 1000 AS w"] if with_w else []
+        spark.range(lo, hi).selectExpr(*cols).write.mode(mode).parquet(t_path)
+
+    write_t(0, 30, "append")
+    engine, src = _polled_engine(spark, tmp_path, extra)
+    cat = engine.catalog
+    if why == "new_column":
+        write_t(0, 36, "overwrite", with_w=True)
+    elif why == "file_bound":
+        write_t(30, 33, "append")
+        assert engine.run(load_date=datetime(2024, 1, 2)) == EXIT_OK
+        assert any(n > 1 for n in _data_nlinks(cat, "t").values())  # appended
+        monkeypatch.setattr(publish, "APPEND_MAX_FILES", 1)  # reached by that append
+        write_t(33, 36, "append")
+    else:
+        write_t(30, 36, "append")
+    _append_rows(spark, str(src / "a.parquet"), 20, 23)
+    assert engine.run(load_date=datetime(2024, 1, 3)) == EXIT_OK
+
+    assert any(n > 1 for n in _data_nlinks(cat, "a").values())
+    nlinks = _data_nlinks(cat, "t")
+    assert nlinks and set(nlinks.values()) == {1}
+    got = cat.table_at(spark, "default", "t")
+    row = got.agg(
+        F.count("*").alias("n"), F.countDistinct("seq").alias("k"), F.sum("v").alias("s")
+    ).first()
+    assert (row["n"], row["k"], row["s"]) == (36, 36, sum(2 * i for i in range(36)))
+    if why == "new_column":
+        assert got.where("w IS NOT NULL").count() == 6
+    if why == "file_bound":
+        assert len(set(_write_ids(cat, "t"))) == 1  # compacted: one full write
+
+
+# -- the empty guard counted from parquet footers ------------------------------
+
+
+def _spy_count(spark, monkeypatch):
+    """Record every ``DataFrame.count`` call; returns the list of calls."""
+    frame_class = type(spark.range(0))  # the session's concrete DataFrame
+    calls = []
+    real_count = frame_class.count
+
+    def spy(self):
+        calls.append(self)
+        return real_count(self)
+
+    monkeypatch.setattr(frame_class, "count", spy)
+    return calls
+
+
+def test_footer_count_equals_spark_count_without_a_job(spark, tmp_path):
+    """A table-mode parquet source is counted from its footers — plain and
+    hive-partitioned directories alike — with the answer ``df.count()``
+    gives, and no Spark job."""
+    import uuid
+
+    src = tmp_path / "src"
+    spark.range(0, 57, numPartitions=3).selectExpr("id AS k").write.parquet(str(src / "p.parquet"))
+    spark.range(0, 41).selectExpr("id AS k", "id % 4 AS d").write.partitionBy("d").parquet(
+        str(src / "h.parquet")
+    )
+    spark.range(0, 0).selectExpr("id AS k").write.parquet(str(src / "e.parquet"))
+    engine = CopyEngine(
+        spark,
+        load_spec(
+            {
+                "warehouse_dir": str(tmp_path / "wh"),
+                "sources": {"_default": {"format": "parquet", "path": str(src)}},
+                "tables": {t: {"from_table": t, "from_columns": ["k"]} for t in ("p", "h", "e")},
+            }
+        ),
+    )
+    resolved = {}
+    for job_id, job in engine.spec.jobs.items():
+        df = engine._extract(job, resolved)
+        got = []
+        count = lambda: got.append(engine.count_source(job, df, resolved))  # noqa: E731
+        jobs = _jobs_in_group(spark, f"footer-{uuid.uuid4()}", count)
+        assert jobs == [], job_id
+        assert got == [df.count()], job_id
+    assert got == [0]
+
+
+def test_empty_table_file_raises_from_its_footers(spark, tmp_path, monkeypatch):
+    """An empty table file still aborts the run with EmptyTablesError,
+    counted without a Spark count: nothing is published, no state saved."""
+    src = tmp_path / "src"
+    spark.range(0, 5).selectExpr("id AS seq").write.parquet(str(src / "full.parquet"))
+    spark.range(0, 0).selectExpr("id AS seq").write.parquet(str(src / "empty.parquet"))
+    engine = CopyEngine(
+        spark,
+        load_spec(
+            {
+                "warehouse_dir": str(tmp_path / "wh"),
+                "state_dir": str(tmp_path / "state"),
+                "sources": {"_default": {"format": "parquet", "path": str(src)}},
+                "tables": {t: {"from_table": t, "trigger": {"column": "seq"}} for t in ("full", "empty")},
+            }
+        ),
+    )
+    calls = _spy_count(spark, monkeypatch)
+    with pytest.raises(EmptyTablesError, match="empty"):
+        engine.do_copy(load_date=datetime(2024, 1, 1))
+    assert calls == []
+    for t in ("full", "empty"):
+        assert not engine.catalog.exists("default", t)
+        assert engine.store.load(engine.checksum, t) is None
+
+
+def test_file_landing_after_resolution_is_counted_by_neither(spark, tmp_path, monkeypatch):
+    """A file appended after the run resolved the source is in neither the
+    guard's footer count nor the extract: both read the pinned listing."""
+    engine, src = _polled_engine(spark, tmp_path)
+    calls = _spy_count(spark, monkeypatch)
+    real_extract = engine._extract
+    counts = []
+
+    def extract_then_append(job, resolved=None):
+        df = real_extract(job, resolved)
+        if job.job_id == "a":
+            _append_rows(spark, str(src / "a.parquet"), 20, 30)  # lands after resolution
+        return df
+
+    real_guard = engine.assert_non_empty
+
+    def guard(frames, resolved=None):
+        counts.append(real_guard(frames, resolved))
+        return counts[-1]
+
+    monkeypatch.setattr(engine, "_extract", extract_then_append)
+    monkeypatch.setattr(engine, "assert_non_empty", guard)
+    _append_rows(spark, str(src / "a.parquet"), 20, 25)  # the probe sees these...
+    engine.do_copy(load_date=datetime(2024, 1, 2))
+    assert counts == [{"a": 25}]  # ...and the guard counts them, not the late ones
+    assert calls == []
+    monkeypatch.undo()
+    got = _rows(spark, engine.catalog, "a")
+    assert [r["seq"] for r in got] == list(range(25))
+
+
+def test_csv_and_count_query_jobs_count_as_before(spark, tmp_path, monkeypatch):
+    """Only the table-mode parquet job counts from footers: a CSV job still
+    runs ``df.count()``, and a ``count_query`` job its declared count."""
+    from mssql2monetdb_spark.sources.readers import write_csv_compat
+
+    pq_dir, csv_dir = tmp_path / "pq", tmp_path / "csv"
+    spark.range(0, 12).selectExpr("id AS k").write.parquet(str(pq_dir / "t.parquet"))
+    write_csv_compat(spark.range(0, 7).selectExpr("id AS k"), str(csv_dir / "c.csv"))
+    engine = CopyEngine(
+        spark,
+        load_spec(
+            {
+                "warehouse_dir": str(tmp_path / "wh"),
+                "sources": {
+                    "pq": {"format": "parquet", "path": str(pq_dir)},
+                    "csv": {"format": "csv", "path": str(csv_dir)},
+                },
+                "tables": {
+                    "t": {"source": "pq", "from_table": "t"},
+                    "c": {"source": "csv", "from_table": "c"},
+                    "q": {
+                        "source": "pq",
+                        "from_table": None,
+                        "from_query": "SELECT k FROM t WHERE k < 5",
+                        "count_query": "SELECT 99",
+                        "to_table": "q",
+                    },
+                },
+            }
+        ),
+    )
+    calls = _spy_count(spark, monkeypatch)
+    resolved = {}
+    frames = {j: engine._extract(job, resolved) for j, job in engine.spec.jobs.items()}
+    assert engine.assert_non_empty(frames, resolved) == {"t": 12, "c": 7, "q": 99}
+    assert calls == [frames["c"]]
+
+
+def _output_records(spark, group):
+    """Summed ``outputRecords`` of every stage of job group ``group``, read
+    from the status store."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    tracker = sc.statusTracker()
+    stages = {s for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds}
+    empty = sc._jvm.java.util.ArrayList()
+    quantiles = sc._gateway.new_array(sc._jvm.double, 0)
+    total = 0
+    for sid in stages:
+        attempts = store.stageData(sid, False, empty, False, quantiles)
+        total += sum(int(attempts.apply(i).outputRecords()) for i in range(attempts.size()))
+    return total
+
+
+def test_fresh_tick_writes_only_the_delta(spark, tmp_path):
+    """Pins the saving as counts: a fresh tick's write reports as many
+    output records as the delta has rows, not snapshot plus delta."""
+    import uuid
+
+    engine, src = _polled_engine(spark, tmp_path)
+    _append_rows(spark, str(src / "a.parquet"), 20, 27)
+    group = f"fresh-{uuid.uuid4()}"
+    codes = []
+    _jobs_in_group(spark, group, lambda: codes.append(engine.run(load_date=datetime(2024, 1, 2))))
+    assert codes == [EXIT_OK]
+    assert _output_records(spark, group) == 7
+    got = _rows(spark, engine.catalog, "a")
+    assert [r["seq"] for r in got] == list(range(27))
