@@ -32,10 +32,6 @@ TABLE_NAMES = (
 BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "part"})
 
 
-def default_sf_dir() -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 

@@ -18,6 +18,26 @@ engine's versioned Parquet catalog, or a JDBC warehouse sink
 are chosen by sink — the load itself, and newest/exists/drop/publish/cleanup
 (``_SinkCatalog`` gives the sink the catalog's call shapes).
 
+Phase 2 loads a run's jobs concurrently. Each job's load is one task:
+drop, the create check, reading the published version, the delta filter,
+evolve, zorder, and the write or the sink's load. The tasks run on a pool
+of ``min(jobs, cores)`` driver threads, and Spark schedules the jobs those
+threads submit side by side, so one job's small write or warehouse import
+no longer waits for another's. Everything else stays sequential in spec
+order: the extract, the empty guard (its ``count_query`` re-registers
+session-global temp views) and the barrier after it, then publish, cleanup
+and the state save. A new sink schema is created once, before the pool
+starts.
+
+Publish stays all-or-nothing: nothing is published until every load has
+finished. On the first failed load the run cancels the other loads' Spark
+jobs (they carry one job tag of the run, and stay in the caller's job
+group), waits for every task to stop, and raises that first error. No
+manifest or view changes and no state is saved. The versions of the loads
+that finished stay unpublished; retention never lets them displace the
+published version or its backup, and reaps them once newer versions push
+them out of its window (``VersionedCatalog.cleanup``).
+
 Cross-cutting semantics kept on both: watermark trigger skip (exit code 2),
 empty-source guard aborting the whole run before any load, drop/create
 flags, state persisted only after full success. Every load writes its
@@ -74,13 +94,18 @@ Exit codes: 0 = loaded, 1 = error, 2 = no new data
 
 from __future__ import annotations
 
+import functools
 import logging
 import os
+import uuid
+from collections.abc import Callable
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 from datetime import datetime, timedelta, timezone
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..config.spec import CopyJob, JobSpec, spec_checksum
 from ..schema.evolve import evolve_to_union
@@ -300,6 +325,102 @@ class CopyEngine:
             raise EmptyTablesError(f"sources returned 0 rows: {', '.join(sorted(empty))}")
         return counts
 
+    # -- PHASE 2, one job ------------------------------------------------
+    def _load_job(
+        self,
+        job_id: str,
+        df: DataFrame,
+        sink,
+        probes: dict[str, object],
+        counts: dict[str, int],
+        load_date: datetime,
+    ) -> str:
+        """Load one job's new version and return its physical name; the
+        drop/create flags mirror reference ops #12/#15. ``do_copy`` runs
+        one of these per job on its pool, so this touches no state shared
+        with another job's load. ``sink`` is ``do_copy``'s store for the
+        storage steps: the JDBC sink's, or ``None`` for the catalog."""
+        job = self.spec.jobs[job_id]
+        catalog = sink or self.catalog
+        if job.drop:
+            catalog.drop_table(self.spark, job.schema_name, job.to_table)
+        if not job.create and not catalog.exists(job.schema_name, job.to_table):
+            raise FileNotFoundError(
+                f"target {job.schema_name}.{job.to_table} does not exist and create=False"
+            )
+        if sink is not None:
+            return sink.load_version(job, df, load_date, counts[job_id])
+        # the published version, read once: the incremental snapshot
+        # and the schema the new version evolves from
+        info = self.catalog.manifest_info(job.schema_name, job.to_table)
+        current = info.get("physical")
+        current_df = (
+            self.catalog.read_version(self.spark, job.schema_name, current)
+            if current is not None
+            else None
+        )
+        # incremental append (trigger-filtered delta + published snapshot):
+        # only rows strictly newer than the persisted watermark are read
+        # from the source — the filter pushes down to the source scan —
+        # and the new version is snapshot+delta: the delta's files plus
+        # links to the published version's, or one rewrite of both when
+        # the tick must rewrite in full (module docstring). The
+        # reference re-copies the full table every run; this is the
+        # Spark-first upgrade.
+        # Rows newer than this run's probe are left out as well: the
+        # probe is the watermark saved on success, so the next tick
+        # loads them — loading them now would load them twice. The
+        # probe may list the files before the extract does, so this
+        # bound is what keeps such rows out, for file and JDBC sources
+        # alike.
+        reads_current = False
+        carry_from = None
+        if job.incremental:
+            trigger = F.col(job.trigger_column)
+            probe = probes.get(job_id)
+            if probe is not None:
+                df = df.filter(trigger.isNull() | (trigger <= F.lit(probe.value)))
+            state = self.states[job_id]
+            if state is not None and current_df is not None:
+                df = df.filter(trigger > F.lit(state.value))  # the delta
+                reads_current = True
+                if (
+                    not (job.sort_by or job.zorder_by or job.partition_by)
+                    and set(df.columns) <= set(current_df.columns)
+                    and self.catalog.can_append(job.schema_name, current)
+                ):
+                    carry_from = current  # evolving the delta adds no column
+                else:
+                    df = current_df.unionByName(df, allowMissingColumns=True)
+
+        # schema verify + evolve (op #14): widen the new version to the
+        # union of the published schema and the incoming one so the view
+        # never loses columns; incompatible retyping fails loudly
+        if current_df is not None:
+            df = evolve_to_union(df, current_df.schema)
+        if job.zorder_by:
+            df = self._zorder_cluster(df, job.zorder_by)
+        # A version built from the published one (its plan reads it, or
+        # it carries its files) must not overwrite it or sort below it
+        # (newest_version, switch_only):
+        # names have 1-second granularity, so it lands at least one
+        # second after the newer of the published version and its
+        # backup. An unpublished directory at that name is a crashed
+        # attempt's leftover, and write_version's overwrite reclaims
+        # it. Full reloads keep the same-date overwrite (crash-retry
+        # idempotence).
+        eff_date = load_date
+        if reads_current:
+            newest = max(v for v in (current, info.get("previous")) if v)
+            after = datetime.strptime(version_of(newest), LOAD_DATE_FORMAT)
+            eff_date = max(load_date, after + timedelta(seconds=1))
+        return self.catalog.write_version(
+            df, job.schema_name, job.to_table, eff_date,
+            sort_by=list(job.sort_by) if job.sort_by else None,
+            partition_by=list(job.partition_by) if job.partition_by else None,
+            carry_from=carry_from,
+        )
+
     # -- the 4 phases ----------------------------------------------------
     def do_copy(
         self,
@@ -357,91 +478,23 @@ class CopyEngine:
         }
         counts = self.assert_non_empty(frames, resolved)
 
-        # PHASE 2: load all (each job writes a new version; the drop/create
-        # flags mirror reference ops #12/#15)
+        # PHASE 2: load all, one task per job on a bounded pool (module
+        # docstring); a new sink schema is created once, before any load
+        if sink is not None:
+            for schema in sorted({self.spec.jobs[j].schema_name for j in frames} - {"default"}):
+                self.warehouse.ensure_schema(schema)
         loaded: dict[str, str] = dict(unchanged)
-        for job_id, df in frames.items():
-            job = self.spec.jobs[job_id]
-            if job.drop:
-                catalog.drop_table(self.spark, job.schema_name, job.to_table)
-            if not job.create and not catalog.exists(job.schema_name, job.to_table):
-                raise FileNotFoundError(
-                    f"target {job.schema_name}.{job.to_table} does not exist and create=False"
-                )
-            if sink is not None:
-                loaded[job_id] = sink.load_version(job, df, load_date, counts[job_id])
-                continue
-            # the published version, read once: the incremental snapshot
-            # and the schema the new version evolves from
-            info = self.catalog.manifest_info(job.schema_name, job.to_table)
-            current = info.get("physical")
-            current_df = (
-                self.catalog.read_version(self.spark, job.schema_name, current)
-                if current is not None
-                else None
+        loaded.update(
+            _run_all(
+                self.spark,
+                {
+                    job_id: functools.partial(
+                        self._load_job, job_id, df, sink, probes, counts, load_date
+                    )
+                    for job_id, df in frames.items()
+                },
             )
-            # incremental append (trigger-filtered delta + published snapshot):
-            # only rows strictly newer than the persisted watermark are read
-            # from the source — the filter pushes down to the source scan —
-            # and the new version is snapshot+delta: the delta's files plus
-            # links to the published version's, or one rewrite of both when
-            # the tick must rewrite in full (module docstring). The
-            # reference re-copies the full table every run; this is the
-            # Spark-first upgrade.
-            # Rows newer than this run's probe are left out as well: the
-            # probe is the watermark saved on success, so the next tick
-            # loads them — loading them now would load them twice. The
-            # probe may list the files before the extract does, so this
-            # bound is what keeps such rows out, for file and JDBC sources
-            # alike.
-            reads_current = False
-            carry_from = None
-            if job.incremental:
-                trigger = F.col(job.trigger_column)
-                probe = probes.get(job_id)
-                if probe is not None:
-                    df = df.filter(trigger.isNull() | (trigger <= F.lit(probe.value)))
-                state = self.states[job_id]
-                if state is not None and current_df is not None:
-                    df = df.filter(trigger > F.lit(state.value))  # the delta
-                    reads_current = True
-                    if (
-                        not (job.sort_by or job.zorder_by or job.partition_by)
-                        and set(df.columns) <= set(current_df.columns)
-                        and self.catalog.can_append(job.schema_name, current)
-                    ):
-                        carry_from = current  # evolving the delta adds no column
-                    else:
-                        df = current_df.unionByName(df, allowMissingColumns=True)
-
-            # schema verify + evolve (op #14): widen the new version to the
-            # union of the published schema and the incoming one so the view
-            # never loses columns; incompatible retyping fails loudly
-            if current_df is not None:
-                df = evolve_to_union(df, current_df.schema)
-            if job.zorder_by:
-                df = self._zorder_cluster(df, job.zorder_by)
-            # A version built from the published one (its plan reads it, or
-            # it carries its files) must not overwrite it or sort below it
-            # (newest_version, switch_only):
-            # names have 1-second granularity, so it lands at least one
-            # second after the newer of the published version and its
-            # backup. An unpublished directory at that name is a crashed
-            # attempt's leftover, and write_version's overwrite reclaims
-            # it. Full reloads keep the same-date overwrite (crash-retry
-            # idempotence).
-            eff_date = load_date
-            if reads_current:
-                newest = max(v for v in (current, info.get("previous")) if v)
-                after = datetime.strptime(version_of(newest), LOAD_DATE_FORMAT)
-                eff_date = max(load_date, after + timedelta(seconds=1))
-            physical = self.catalog.write_version(
-                df, job.schema_name, job.to_table, eff_date,
-                sort_by=list(job.sort_by) if job.sort_by else None,
-                partition_by=list(job.partition_by) if job.partition_by else None,
-                carry_from=carry_from,
-            )
-            loaded[job_id] = physical
+        )
 
         if no_switch:
             return loaded
@@ -508,6 +561,44 @@ class CopyEngine:
         self.catalog.register_view(self.spark, schema, table)
         name = table if schema == "default" else f"{schema}_{table}"
         return self.spark.table(name)
+
+
+def _run_all(spark: SparkSession, tasks: dict[str, Callable[[], str]]) -> dict[str, str]:
+    """Run ``tasks`` on a pool of ``min(len(tasks), cores)`` driver threads
+    and return their results by key, in ``tasks`` order.
+
+    Spark schedules jobs submitted from separate threads concurrently. Each
+    task runs under its own clone of the caller's local properties, so its
+    Spark jobs stay in the caller's job group, and carries one job tag of
+    this call (a job group of its own would replace the caller's). On the
+    first failure, tasks not yet started never start, the tagged Spark jobs
+    are cancelled, every running task is waited for, and that first error
+    is raised, not the cancellations it caused. No pool thread outlives
+    the call."""
+    if not tasks:
+        return {}
+    sc = spark.sparkContext
+    tag = f"copy-load-{uuid.uuid4().hex}"
+
+    def tagged(fn: Callable[[], str]) -> Callable[[], str]:
+        def run() -> str:
+            sc.addJobTag(tag)
+            return fn()
+
+        # wrapped per task: each captures its own clone of the properties
+        return inheritable_thread_target(spark)(run)
+
+    with ThreadPoolExecutor(max_workers=min(len(tasks), os.cpu_count() or 1)) as pool:
+        futures = {key: pool.submit(tagged(fn)) for key, fn in tasks.items()}
+        done, _ = wait(futures.values(), return_when=FIRST_EXCEPTION)
+        failed = [f for f in futures.values() if f in done and f.exception() is not None]
+        if failed:
+            for f in futures.values():
+                f.cancel()
+            sc.cancelJobsWithTag(tag)
+            wait(futures.values())
+            raise failed[0].exception()
+    return {key: f.result() for key, f in futures.items()}
 
 
 def _conf_on(conf, key: str) -> bool:

@@ -30,7 +30,8 @@ from __future__ import annotations
 
 import logging
 import re
-from dataclasses import dataclass
+import threading
+from dataclasses import dataclass, field
 from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
@@ -188,6 +189,11 @@ class JdbcWarehouse:
     #: with ``os._exit`` in a child driver to prove readers never see a
     #: half-state and a rerun converges.
     fault_hook: object = None
+    #: held by each server-side bulk import into this warehouse, so the
+    #: concurrent loads of one run import one at a time (``jdbc_bulk_loader``)
+    _imports: threading.Lock = field(
+        default_factory=threading.Lock, init=False, repr=False, compare=False
+    )
 
     def _fault(self, point: str) -> None:
         if self.fault_hook is not None:
@@ -286,8 +292,11 @@ class JdbcWarehouse:
     def ensure_schema(self, schema: str) -> None:
         """Create the warehouse schema if absent (idempotent). The
         reference assumes its configured schemas pre-exist on MonetDB;
-        creating lazily keeps the first load of a new schema-qualified
-        target from failing on a missing namespace."""
+        creating it before the first load of a new schema-qualified target
+        keeps that load from failing on a missing namespace. The probe and
+        the CREATE are two statements, so callers run it once per schema
+        before any concurrent load into it (``CopyEngine.do_copy``,
+        :meth:`export`)."""
         if not self.schema_exists(schema):
             self._execute(f"CREATE SCHEMA {schema}")
 
@@ -332,7 +341,8 @@ class JdbcWarehouse:
         schema: str | None = None,
     ) -> str:
         """Land the frame in a NEW versioned physical table; returns the
-        physical name (bare — qualification is per-statement).
+        physical name (bare — qualification is per-statement). A declared
+        ``schema`` must exist already (:meth:`ensure_schema`).
         ``method="copy"`` is the staged-CSV server-side import with its
         own INSERT degradation (``jdbc_bulk_loader``); ``method="insert"``
         forces the distributed batched writer against a mapper-derived DDL.
@@ -350,8 +360,6 @@ class JdbcWarehouse:
         catalog, so the public view never loses a column."""
         from ..schema.mapper import spark_schema_to_derby_ddl
 
-        if schema:
-            self.ensure_schema(schema)
         current = self.current_version(table, schema=schema)
         if current is not None:
             from pyspark.sql import types as T
@@ -399,6 +407,7 @@ class JdbcWarehouse:
                 qualified,
                 staging_dir=staging_dir,
                 expected_count=expected_count,
+                import_lock=self._imports,
             )
         elif method == "insert":
             insert_load(self.spark, df, self.source, qualified, spark_schema_to_derby_ddl(df.schema))
@@ -475,6 +484,8 @@ class JdbcWarehouse:
     ) -> str:
         """PHASES 2-4 in one call: load a new version, switch the view,
         reap old versions. Returns the physical name published."""
+        if schema:
+            self.ensure_schema(schema)
         physical = self.load_version(
             df, table, load_date, method=method, staging_dir=staging_dir, schema=schema
         )

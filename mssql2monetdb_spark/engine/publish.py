@@ -467,15 +467,20 @@ class VersionedCatalog:
     def cleanup(self, schema: str, table: str, *, retain: int = RETAIN_VERSIONS) -> list[str]:
         """PHASE 4 analog: drop versions beyond retention (op #21).
 
-        Never drops the currently-published version even if it is old.
+        Never drops the published version or the manifest's ``previous``
+        backup, even when unpublished versions newer than them fill the
+        keep-``retain`` window: a failed run leaves the versions of the jobs
+        that finished, and they are reaped once newer versions push them
+        out of the window.
         Files a retained version carried by hard link stay readable: the
         link keeps the data alive when the version that wrote it is reaped.
         """
-        current = self.current_version(schema, table)
+        info = self.manifest_info(schema, table)
+        keep = {info.get("physical"), info.get("previous")}
         versions = self.table_versions(schema, table)
         dropped = []
         for physical in versions[retain:]:
-            if physical == current:
+            if physical in keep:
                 continue
             self.fs.rmtree(self.version_dir(schema, physical))
             dropped.append(physical)

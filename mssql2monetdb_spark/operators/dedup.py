@@ -99,15 +99,6 @@ def shingle_rows(
     return out.distinct() if distinct else out
 
 
-def minhash_signatures(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", *, shingle_n: int = 3) -> DataFrame:
-    """k=16 MinHash signature columns mh0..mh15 per document.
-
-    Signatures are 16 MIN aggregates over the exploded shingle rows — fully
-    codegen'd with map-side partial aggregation (one narrow shuffle on id).
-    """
-    return _signatures_from_rows(shingle_rows(docs, text_col, id_col, shingle_n))
-
-
 def _sig_agg_cols() -> list:
     return [
         F.min(
@@ -116,10 +107,6 @@ def _sig_agg_cols() -> list:
         ).alias(f"mh{i}")
         for i in range(hashing.MINHASH_K)
     ]
-
-
-def _signatures_from_rows(rows: DataFrame) -> DataFrame:
-    return rows.groupBy("id").agg(*_sig_agg_cols())
 
 
 def lsh_bands(sigs: DataFrame) -> DataFrame:

@@ -25,7 +25,7 @@ import logging
 import os
 import shutil
 import zipfile
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -430,6 +430,7 @@ def jdbc_bulk_loader(
     table_ddl: str | None = None,
     staging_dir: str | None = None,
     expected_count: int | None = None,
+    import_lock=None,
 ) -> str:
     """Staged-CSV bulk load — the reference's COPY INTO path
     (``CopyTool.java:1042-1071``), with the reference's own degradation
@@ -477,6 +478,14 @@ def jdbc_bulk_loader(
     ``expected_count`` lets callers that already counted the extract (the
     engine's pre-scan count, op #4) skip the extra count job here.
 
+    ``import_lock``, when given, is held around step 2 and the count check
+    (not the staging write), so loads that share it stage concurrently but
+    import one at a time, as the reference does on its one connection per
+    database. Two concurrent Derby imports can otherwise wait on each
+    other's locks on the stored statements the import procedure
+    recompiles, until one fails after Derby's 60 s lock timeout (SQLState
+    40XL1) and degrades to INSERT.
+
     BinaryType columns are hex-encoded at staging (Derby's documented
     import representation for BLOB data without LOB side-files).
     """
@@ -513,7 +522,7 @@ def jdbc_bulk_loader(
     csv_dir = os.path.join(base_dir, f"stage_{table}")
     try:
         stage_bulk_frame(staged, url, csv_dir)
-        with driver_statement(spark, source.options) as st:
+        with import_lock or nullcontext(), driver_statement(spark, source.options) as st:
             st.execute(f"CREATE TABLE {table} ({ddl})")
             failure: str | None = None
             parts = sorted(glob.glob(os.path.join(csv_dir, "part-*")))

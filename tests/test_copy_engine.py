@@ -1875,3 +1875,189 @@ def test_fresh_tick_writes_only_the_delta(spark, tmp_path):
     assert _output_records(spark, group) == 7
     got = _rows(spark, engine.catalog, "a")
     assert [r["seq"] for r in got] == list(range(27))
+
+
+# -- phase 2 on a pool: concurrent loads, all-or-nothing publish -------------
+
+
+def _pool_width(monkeypatch, width):
+    """Run ``do_copy``'s loads on ``width`` threads; returns the list of
+    widths the engine asked for."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from mssql2monetdb_spark.engine import copy as copy_mod
+
+    asked = []
+
+    def pool(max_workers):
+        asked.append(max_workers)
+        return ThreadPoolExecutor(max_workers=width)
+
+    monkeypatch.setattr(copy_mod, "ThreadPoolExecutor", pool)
+    return asked
+
+
+def test_failed_load_cancels_the_others_and_publishes_nothing(spark, tmp_path, monkeypatch):
+    """The second job raises while the first job's write runs: the run
+    raises that error, not the first job's cancellation; the first job's
+    Spark job is cancelled through the run's job tag; no manifest changes,
+    no state is saved and no pool thread is left running."""
+    import os
+    import threading
+    import time
+
+    from pyspark import SparkContext
+    from pyspark.sql import functions as F
+
+    from mssql2monetdb_spark.engine.watermark import WatermarkStore
+
+    engine, src = _polled_engine(spark, tmp_path)
+    cat = engine.catalog
+    _append_rows(spark, str(src / "a.parquet"), 20, 25)
+    _append_rows(spark, str(src / "b.parquet"), 10, 15)
+    manifests = {t: open(cat._manifest("default", t)).read() for t in "ab"}
+    states = {t: engine.store.load(engine.checksum, t) for t in "ab"}
+
+    sc = spark.sparkContext
+    real_write = VersionedCatalog.write_version
+    a_jobs = []
+
+    def write(self, df, schema, table, *args, **kwargs):
+        if table == "a":  # a write that only a cancellation ends early
+            stall = F.udf(lambda v: time.sleep(60) or v, "bigint")
+            return real_write(self, df.withColumn("v", stall("v")), schema, table, *args, **kwargs)
+        deadline = time.monotonic() + 60
+        while not a_jobs:
+            assert time.monotonic() < deadline, "job a's write never started"
+            time.sleep(0.05)
+            a_jobs.extend(sc.statusTracker().getActiveJobsIds())
+        raise RuntimeError("job b failed")
+
+    cancelled = []
+    real_cancel = SparkContext.cancelJobsWithTag
+
+    def cancel(self, tag):
+        cancelled.append(tag)
+        real_cancel(self, tag)
+
+    saves = []
+    monkeypatch.setattr(VersionedCatalog, "write_version", write)
+    monkeypatch.setattr(SparkContext, "cancelJobsWithTag", cancel)
+    monkeypatch.setattr(WatermarkStore, "save", lambda self, *a, **kw: saves.append(a))
+    asked = _pool_width(monkeypatch, 2)
+
+    baseline = threading.active_count()
+    started = time.monotonic()
+    with pytest.raises(RuntimeError, match="job b failed") as err:
+        engine.do_copy(load_date=datetime(2024, 1, 2))
+    assert err.type is RuntimeError
+    assert time.monotonic() - started < 45  # a's 60 s task did not run out
+    assert threading.active_count() == baseline
+    assert asked == [min(2, os.cpu_count())]
+
+    assert len(cancelled) == 1
+    store = sc._jsc.sc().statusStore()  # noqa: SLF001
+    for jid in a_jobs:
+        assert sc.statusTracker().getJobInfo(jid).status == "FAILED"
+        assert store.job(jid).jobTags().contains(cancelled[0])
+    assert cancelled[0] not in sc.getJobTags()  # the caller's thread carries no tag
+    assert {t: open(cat._manifest("default", t)).read() for t in "ab"} == manifests
+    assert saves == []
+    assert {t: engine.store.load(engine.checksum, t) for t in "ab"} == states
+    assert [r["seq"] for r in _rows(spark, cat, "a")] == list(range(20))
+
+
+def test_retry_after_a_failed_run_keeps_the_backup(spark, tmp_path, monkeypatch):
+    """Job ``b`` raises after job ``a`` wrote its version, so ``a``'s
+    version stays unpublished; the retry at a later load_date publishes a
+    newer one. Retention keeps the manifest's ``previous`` although the
+    leftover sits between it and the published version, and reaps the
+    leftover once newer versions push it out of keep-2."""
+    import threading
+
+    spec = make_spec(
+        tmp_path,
+        tables={
+            "a": {"from_table": "nation", "to_table": "a"},
+            "b": {"from_table": "region", "to_table": "b"},
+        },
+    )
+    engine = CopyEngine(spark, spec)
+    cat = engine.catalog
+    for day in (1, 2):
+        engine.do_copy(load_date=datetime(2024, 1, day))
+    backup = cat.current_version("default", "a")
+
+    real_write = VersionedCatalog.write_version
+    a_wrote = threading.Event()
+
+    def write(self, df, schema, table, *args, **kwargs):
+        if table == "a":
+            out = real_write(self, df, schema, table, *args, **kwargs)
+            a_wrote.set()
+            return out
+        assert a_wrote.wait(60)
+        raise RuntimeError("job b failed")
+
+    monkeypatch.setattr(VersionedCatalog, "write_version", write)
+    assert engine.run(load_date=datetime(2024, 1, 3)) == EXIT_ERROR
+    monkeypatch.undo()
+    leftover = physical_name("a", datetime(2024, 1, 3))
+    assert cat.current_version("default", "a") == backup
+    assert leftover in cat.table_versions("default", "a")
+
+    engine.do_copy(load_date=datetime(2024, 1, 4))
+    assert cat.manifest_info("default", "a")["previous"] == backup
+    assert cat.table_at(spark, "default", "a", version_of(backup)).count() == 25
+    assert leftover in cat.table_versions("default", "a")
+
+    engine.do_copy(load_date=datetime(2024, 1, 5))
+    assert cat.table_versions("default", "a") == [
+        physical_name("a", datetime(2024, 1, 5)),
+        physical_name("a", datetime(2024, 1, 4)),
+    ]
+
+
+FULL_REFRESH_TABLES = {
+    "orders_job": {"from_table": "orders"},
+    "customer_job": {"from_table": "customer"},
+    "revenue_job": {
+        "from_table": None,
+        "from_query": (
+            "SELECT c.c_nationkey AS nation, SUM(o.o_totalprice) AS revenue "
+            "FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey "
+            "GROUP BY c.c_nationkey"
+        ),
+        "count_query": (
+            "SELECT COUNT(DISTINCT c.c_nationkey) "
+            "FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey"
+        ),
+        "to_table": "nation_revenue",
+    },
+}
+
+
+def test_pooled_loads_equal_sequential_loads(spark, tmp_path, monkeypatch, caplog):
+    """Two table jobs and a query job with a ``count_query`` publish the
+    same rows on a pool of 1 and of 4, over two runs each, and the engine
+    asks for ``min(jobs, cores)`` threads."""
+    import logging
+    import os
+
+    caplog.set_level(logging.WARNING)
+    published = {}
+    for width in (1, 4):
+        asked = _pool_width(monkeypatch, width)
+        engine = CopyEngine(spark, make_spec(tmp_path / f"w{width}", tables=FULL_REFRESH_TABLES))
+        for day in (1, 2):
+            engine.do_copy(load_date=datetime(2024, 1, day))
+        assert asked == [min(3, os.cpu_count())] * 2
+        cat = engine.catalog
+        published[width] = {
+            t: (_rows(spark, cat, t), cat.table_versions("default", t))
+            for t in ("orders", "customer", "nation_revenue")
+        }
+        monkeypatch.undo()
+    assert published[1] == published[4]
+    assert len(published[4]["orders"][0]) == 1500
+    assert "degraded to INSERT" not in caplog.text

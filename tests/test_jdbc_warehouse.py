@@ -824,3 +824,107 @@ def test_probe_degradation_counter_survives_process_restart(spark, tmp_path):
     finally:
         wmmod.probe_max_jdbc = orig
     assert e3.store.load_degradations(e3.checksum, "nation_job") == 0
+
+
+# -- phase 2 on a pool: concurrent loads into one warehouse ------------------
+
+
+def _derby_sink_spec(tmp_path, db, tables, src_dir):
+    from mssql2monetdb_spark.config.spec import load_spec
+
+    return load_spec(
+        {
+            "warehouse_dir": str(tmp_path / "wh_unused"),
+            "state_dir": str(tmp_path / "state"),
+            "sources": {"src": {"format": "parquet", "path": str(src_dir)}},
+            "sink": {
+                "format": "jdbc",
+                "options": {
+                    "url": f"jdbc:derby:{tmp_path}/{db};create=true",
+                    "driver": DERBY_DRIVER,
+                },
+            },
+            "tables": tables,
+        }
+    )
+
+
+def test_two_loads_into_a_new_schema_create_it_once(spark, tmp_path, nation_src, monkeypatch):
+    """Two jobs into schema ``mart`` on their first run: the schema is
+    created once, before the concurrent loads, and both publish."""
+    from mssql2monetdb_spark.engine.copy import CopyEngine
+
+    tables = {
+        f"job_{t}": {"source": "src", "from_table": "nation", "to_table": t, "schema": "mart"}
+        for t in ("nation_a", "nation_b")
+    }
+    engine = CopyEngine(spark, _derby_sink_spec(tmp_path, "martdb", tables, nation_src))
+    statements = []
+    real_execute = JdbcWarehouse._execute
+
+    def execute(self, sql):
+        statements.append(sql)
+        real_execute(self, sql)
+
+    monkeypatch.setattr(JdbcWarehouse, "_execute", execute)
+    engine.do_copy(load_date=datetime(2024, 6, 1))
+    assert [s for s in statements if s.startswith("CREATE SCHEMA")] == ["CREATE SCHEMA mart"]
+    for t in ("nation_a", "nation_b"):
+        assert engine.table(t, schema="mart").count() == 25
+
+
+def test_pooled_sink_loads_equal_sequential_loads(spark, tmp_path, monkeypatch, caplog):
+    """The two-job Derby sink publishes the same rows on a pool of 1 and of
+    4, over two runs each; the loads import one at a time, and no load
+    falls back to INSERT (a Derby lock timeout between two concurrent
+    imports would surface there as a slow but correct load)."""
+    import logging
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from mssql2monetdb_spark.engine import copy as copy_mod
+    from mssql2monetdb_spark.engine.copy import CopyEngine
+    from mssql2monetdb_spark.sources import jdbc
+
+    caplog.set_level(logging.WARNING)
+    real_import = jdbc._import_one_part
+    running, overlaps = [], []
+
+    def import_one_part(*args):
+        running.append(1)
+        overlaps.append(len(running))
+        time.sleep(0.2)  # widen the window another import could enter
+        try:
+            real_import(*args)
+        finally:
+            running.pop()
+
+    src = tmp_path / "src"
+    orders = load_table(spark, SF, "orders")
+    orders.withColumn("o_orderdate", orders.o_orderdate.cast("date")).write.parquet(
+        str(src / "orders.parquet")
+    )
+    load_table(spark, SF, "customer").write.parquet(str(src / "customer.parquet"))
+    tables = {
+        "orders_job": {"source": "src", "from_table": "orders"},
+        "customer_job": {"source": "src", "from_table": "customer"},
+    }
+    rows = {}
+    for width in (1, 4):
+        monkeypatch.setattr(
+            copy_mod, "ThreadPoolExecutor", lambda max_workers, w=width: ThreadPoolExecutor(w)
+        )
+        monkeypatch.setattr(jdbc, "_import_one_part", import_one_part)
+        engine = CopyEngine(spark, _derby_sink_spec(tmp_path, f"pool{width}", tables, src))
+        for day in (1, 2):
+            engine.do_copy(load_date=datetime(2024, 6, day))
+        rows[width] = {
+            t: sorted(engine.table(t).collect(), key=lambda r: tuple(r)[0])
+            for t in ("orders", "customer")
+        }
+        assert len(engine.warehouse.table_versions("orders")) == 2
+        monkeypatch.undo()
+    assert rows[1] == rows[4]
+    assert len(rows[4]["orders"]) == 1500 and len(rows[4]["customer"]) == 150
+    assert overlaps and max(overlaps) == 1
+    assert "degraded to INSERT" not in caplog.text

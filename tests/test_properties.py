@@ -9,7 +9,6 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from mssql2monetdb_spark.config.spec import interpolate_env
-from mssql2monetdb_spark.engine.progress import ProgressReporter
 from mssql2monetdb_spark.engine.scheduler import parse_interval
 from mssql2monetdb_spark.engine.watermark import Watermark, has_new_data
 from mssql2monetdb_spark.schema.mapper import narrow_decimal, normalize_identifier
@@ -65,17 +64,6 @@ def test_env_interpolation_roundtrip(env):
         assert interpolate_env(f"pre ${{{var}}} post", env) == f"pre {val} post"
         assert interpolate_env(f"${{{var}:fallback}}", env) == val
     assert interpolate_env("${__UNSET__:dflt}", env) == "dflt"
-
-
-@settings(max_examples=25)
-@given(st.integers(min_value=1, max_value=10**9), st.integers(min_value=0, max_value=10**9))
-def test_progress_math(total, done):
-    done = min(done, total)
-    rep = ProgressReporter(total_rows=total, label="t")
-    msg = rep.report(done, force=True)
-    assert msg is not None and f"{done}/{total}" in msg
-    pct = float(msg.split("(")[1].split("%")[0])
-    assert abs(pct - 100.0 * done / total) < 0.051
 
 
 # --- codec-free decoders: write/parse roundtrips on random payloads --------
