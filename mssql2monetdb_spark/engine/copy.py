@@ -46,15 +46,18 @@ which is all the reference's temp-table copy (``CopyTool.java:1107-1124``)
 provides, so ``use_fast_view_switching=False`` loads the same way.
 
 One run resolves each file-source table once: ``do_copy`` keeps a per-run
-dict of resolved frames that the Spark trigger probe, the extract, query-mode
-view registration and the ``count_query`` all share, so a run pins each
-source's file listing at its first read and pays one schema inference per
-source instead of one per read. The next run resolves afresh. The trigger
-probe of a local parquet source reads only the files' footers
-(``engine/watermark.py``), so an idle tick starts no Spark job; that probe
-lists the files before the extract does, and an incremental job's bound
-``trigger IS NULL OR trigger <= probe`` leaves rows that land in between
-for the next tick, whose probe sees them.
+dict of resolved sources that the trigger probe, the extract, query-mode
+view registration, the empty guard and the ``count_query`` all share, and
+the next run resolves afresh. A local parquet table resolves from one
+footer pass (``sources/footers.py``): the probe takes its maximum from the
+footers' statistics, the extract reads with the footers' schema and the
+guard sums their row counts, so none of them starts a Spark job, and an
+idle tick starts none at all. A table the footers cannot answer for (the
+cases are listed there) takes its schema from Spark's inference, once per
+run, as other file formats do. The footer pass lists the files before the
+extract does, and an incremental job's bound ``trigger IS NULL OR trigger
+<= probe`` leaves rows that land in between for the next tick, whose probe
+sees them.
 
 A tick pays only for the tables that changed. An ``incremental`` job is
 skipped — no extract, empty-guard count, load, publish or cleanup — when
@@ -79,8 +82,8 @@ delta, when any of these holds:
   no published version;
 - the delta brings a column the published version lacks;
 - the job sets ``sort_by``, ``zorder_by`` or ``partition_by``;
-- the published version recorded no schema (partitioned, or written by
-  older code);
+- the published version recorded no schema (written by older code, or
+  by the partition-pruned streaming sync) or has partition directories;
 - ``publish.APPEND_MAX_FILES`` (32) or more of the published version's
   data files were appended since its last full write;
 - the store has no hard links (``VersionedCatalog.write_version``).
@@ -101,7 +104,6 @@ import uuid
 from collections.abc import Callable
 from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 from datetime import datetime, timedelta, timezone
-from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -110,9 +112,10 @@ from pyspark.util import inheritable_thread_target
 from ..config.spec import CopyJob, JobSpec, spec_checksum
 from ..schema.evolve import evolve_to_union
 from ..schema.mapper import normalized_dataframe
-from ..sources.readers import read_source, register_source_views
+from ..sources.footers import FooterFallback, ParquetTable
+from ..sources.readers import read_source, register_source_views, resolve_parquet
 from .publish import LOAD_DATE_FORMAT, VersionedCatalog, version_of
-from .watermark import FooterFallback, WatermarkStore, has_new_data, probe_max, probe_max_footer
+from .watermark import WatermarkStore, has_new_data, probe_max, probe_max_footer
 
 log = logging.getLogger(__name__)
 
@@ -150,7 +153,9 @@ class CopyEngine:
             self.warehouse = JdbcWarehouse(spark, spec.sink)
 
     # -- trigger (PHASE 0, CopyTool.java:332-477) ------------------------
-    def _probe_job(self, job: CopyJob, resolved: dict[str, DataFrame] | None = None):
+    def _probe_job(
+        self, job: CopyJob, resolved: dict[str, ParquetTable | DataFrame] | None = None
+    ):
         src = self.spec.sources[job.trigger_source or job.source]
         table = job.trigger_table or job.from_table
         if src.format == "jdbc" and table:
@@ -200,7 +205,7 @@ class CopyEngine:
                     raise FooterFallback(f"{src.format} files carry no column statistics")
                 conf = self.spark.conf
                 return probe_max_footer(
-                    os.path.join(src.path, f"{table}.parquet"),
+                    resolve_parquet(src, table, resolved),
                     job.trigger_column,
                     case_sensitive=_conf_on(conf, "spark.sql.caseSensitive"),
                     infer_ntz=_conf_on(conf, "spark.sql.parquet.inferTimestampNTZ.enabled"),
@@ -212,11 +217,11 @@ class CopyEngine:
         return probe_max(df, job.trigger_column)
 
     def check_for_new_data(
-        self, resolved: dict[str, DataFrame] | None = None
+        self, resolved: dict[str, ParquetTable | DataFrame] | None = None
     ) -> dict[str, object]:
         """Return {job_id: probe} for triggered jobs; raise NoNewDataError
         when every triggered job is unchanged (and at least one exists).
-        ``resolved`` is the run's memo of resolved source frames. Each
+        ``resolved`` is the run's memo of resolved sources. Each
         job's persisted state is read once here and kept in ``self.states``
         for the run's skip and delta filter."""
         probes: dict[str, object] = {}
@@ -242,7 +247,9 @@ class CopyEngine:
         return probes
 
     # -- empty guard (CopyTool.java:192-197) -----------------------------
-    def _extract(self, job: CopyJob, resolved: dict[str, DataFrame] | None = None) -> DataFrame:
+    def _extract(
+        self, job: CopyJob, resolved: dict[str, ParquetTable | DataFrame] | None = None
+    ) -> DataFrame:
         src = self.spec.sources[job.source]
         df = read_source(self.spark, src, job, resolved)
         return normalized_dataframe(df, auto_trim=job.auto_trim)
@@ -271,19 +278,24 @@ class CopyEngine:
         return cluster_by_zorder(df, specs, num_files=num_files)
 
     def count_source(
-        self, job: CopyJob, df: DataFrame, resolved: dict[str, DataFrame] | None = None
+        self,
+        job: CopyJob,
+        df: DataFrame,
+        resolved: dict[str, ParquetTable | DataFrame] | None = None,
     ) -> int:
         """Pre-scan count (op #4, ``CopyTool.java:643-649``), from the
         cheapest place that holds it:
 
         - the declared ``count_query``, evaluated natively (the reference
           ships it to the source DB, ``CopyTable.java:300-308``);
-        - for a table-mode parquet job, the sum of the footers' row counts
-          over ``df.inputFiles()``: the files of the frame the run resolved,
-          so the guard and the extract read one pinned listing, and no
-          Spark job runs. A file that is not a local ``file:`` path, an
-          unreadable footer or an empty listing falls back to ``df.count()``,
-          logging why;
+        - for a table-mode parquet job, the sum of its data files' footer
+          row counts (:meth:`ParquetTable.rows`) over the files the run's
+          record pinned when the extract read it, so the guard and the
+          extract read one listing, and no Spark job runs. Summary files
+          (``_metadata``, ``_common_metadata``) hold no rows and are not
+          counted. A file that is not a local ``file:`` path, an unreadable
+          footer or an empty listing falls back to ``df.count()``, logging
+          why;
         - otherwise (query mode, JDBC, CSV/JSON/ORC) ``df.count()``.
 
         Before the ``count_query`` runs, the job's own source views are
@@ -293,19 +305,25 @@ class CopyEngine:
         ``resolved`` memo the re-registration reuses the frames the extract
         resolved.
         """
+        source = self.spec.sources[job.source]
         if job.count_query:
-            register_source_views(self.spark, self.spec.sources[job.source], resolved)
+            register_source_views(self.spark, source, resolved)
             row = self.spark.sql(job.count_query).collect()[0]
             return int(row[0])
-        if self.spec.sources[job.source].format == "parquet" and job.select_source()[0] == "table":
+        mode, payload = job.select_source()
+        if source.format == "parquet" and mode == "table":
+            table = resolve_parquet(source, payload[0], resolved)
+            table.read(self.spark)  # pins the listing, when the extract has not
             try:
-                return _footer_rows(df.inputFiles())
+                return table.rows()
             except FooterFallback as exc:
                 log.info("empty guard for %s counts with Spark: %s", job.job_id, exc)
         return df.count()
 
     def assert_non_empty(
-        self, frames: dict[str, DataFrame], resolved: dict[str, DataFrame] | None = None
+        self,
+        frames: dict[str, DataFrame],
+        resolved: dict[str, ParquetTable | DataFrame] | None = None,
     ) -> dict[str, int]:
         """Count every source before any load (:meth:`count_source`) and
         abort the whole run on any empty source unless that job allows it:
@@ -456,7 +474,7 @@ class CopyEngine:
                 published[job.job_id] = physical
             return published
 
-        resolved: dict[str, DataFrame] = {}  # this run's source frames, by path
+        resolved: dict[str, ParquetTable | DataFrame] = {}  # this run's sources, by path
         probes = self.check_for_new_data(resolved)
         # an incremental job whose probe did not move has an empty delta:
         # its published version already holds what a reload would write
@@ -603,27 +621,6 @@ def _run_all(spark: SparkSession, tasks: dict[str, Callable[[], str]]) -> dict[s
 
 def _conf_on(conf, key: str) -> bool:
     return conf.get(key).strip().lower() == "true"
-
-
-def _footer_rows(files: list[str]) -> int:
-    """Rows in the parquet ``files`` (``DataFrame.inputFiles()`` URIs),
-    summed from their footers; raises :class:`FooterFallback` when a file
-    is not local, a footer is unreadable, or there is no file."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    if not files:
-        raise FooterFallback("no data file is listed")
-    rows = 0
-    for f in files:
-        uri = urlparse(f)
-        if uri.scheme != "file" or uri.netloc not in ("", "localhost"):
-            raise FooterFallback(f"{f} is not a local file")
-        try:
-            rows += pq.read_metadata(unquote(uri.path)).num_rows
-        except (OSError, pa.ArrowException) as exc:
-            raise FooterFallback(f"unreadable footer {f}: {exc}") from exc
-    return rows
 
 
 class _SinkCatalog:

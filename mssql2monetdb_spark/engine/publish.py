@@ -14,23 +14,25 @@ both single atomic operations, so readers always see a complete version.
 At cluster scale the same protocol works on any object store that gives
 atomic single-object PUT (the manifest), with no table-lock during load.
 
-Schema sidecar: an unpartitioned ``write_version`` records the written
-frame's ``schema.json()`` as ``_SCHEMA.json`` at the version root, through
+Schema sidecar: ``write_version`` records the written frame's
+``schema.json()`` as ``_SCHEMA.json`` at the version root, through
 ``fs.write_atomic`` and after the parquet write (and an append's carry) has
-committed. An append (``write_version(carry_from=...)``) records the schema
-that writing the base version's rows plus the new ones would record, so
-appended and rewritten versions carry byte-equal sidecars. Written last, it
-also marks an unpartitioned version as finished: ``newest_version`` skips
-an unpublished one without it, such as an append that crashed mid-carry
-and holds only part of its base's files. When the
-file is present, ``read_version`` reads with that schema and runs no
-footer-reading inference job; when it is absent it infers as before. It is
-absent for partitioned writes (their partition-column types come from the
-directory names), for ``write_version_incremental`` versions, for versions
-written by older code, and after a crash between the data write and the
-schema write. Spark's file listing skips names starting with ``_``, so the
-sidecar is never read as data. ``mode("overwrite")`` replaces a version
-directory whole, so a sidecar never outlives the data it describes.
+committed. A partitioned write records the schema its read returns: the
+data columns, then the partition columns typed as written, where partition
+discovery would type a small bigint value as int. An append
+(``write_version(carry_from=...)``) records the schema that writing the
+base version's rows plus the new ones would record, so appended and
+rewritten versions carry byte-equal sidecars. Written last, it also marks a
+version as finished: ``newest_version`` skips an unpublished unpartitioned
+one without it, such as an append that crashed mid-carry and holds only
+part of its base's files. When the file is present, ``read_version`` reads
+with that schema and runs no footer-reading inference job; when it is
+absent it infers as before. It is absent for ``write_version_incremental``
+versions, for versions written by older code, and after a crash between
+the data write and the schema write. Spark's file listing skips names
+starting with ``_``, so the sidecar is never read as data.
+``mode("overwrite")`` replaces a version directory whole, so a sidecar
+never outlives the data it describes.
 
 Every version is a self-contained directory: ``write_version`` rewrites the
 table or, as an append, writes only the new rows and carries every data
@@ -60,13 +62,14 @@ from datetime import datetime
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from ..sources.footers import hidden
 from .fs import LocalFS
 
 LOAD_DATE_FORMAT = "%Y_%m_%d_%H_%M_%S"  # yyyy_MM_dd_HH_mm_ss (CopyTool.java:216-218)
 #: version suffix regex — parity with CopyTool.java:64 (_20%...)
 VERSION_RE = re.compile(r"_(20\d{2}_\d{2}_\d{2}_\d{2}_\d{2}_\d{2})$")
 RETAIN_VERSIONS = 2  # current + 1 backup (CopyTool.java:575-580)
-#: the written schema of an unpartitioned version (module docstring)
+#: the written schema of a version (module docstring)
 SCHEMA_FILE = "_SCHEMA.json"
 #: An append carries a version while fewer of its data files than this were
 #: appended since its last full write; then the tick rewrites it whole, which
@@ -84,12 +87,6 @@ def physical_name(table: str, load_date: datetime) -> str:
 def version_of(physical: str) -> str | None:
     m = VERSION_RE.search(physical)
     return m.group(1) if m else None
-
-
-def _hidden(name: str) -> bool:
-    """True for names Spark's file listing skips: ``.`` prefixes, and ``_``
-    prefixes other than partition directories (``_kb=3``)."""
-    return name.startswith(".") or (name.startswith("_") and "=" not in name)
 
 
 @dataclass
@@ -192,8 +189,8 @@ class VersionedCatalog:
         distribution (``compact()``'s ``target_files`` repartition) pass
         ``distribute=False`` so the rebalance doesn't re-shuffle over it.
 
-        An unpartitioned write also records its schema in ``_SCHEMA.json``
-        (module docstring), so reading the version back needs no inference.
+        The write also records its schema in ``_SCHEMA.json`` (module
+        docstring), so reading the version back needs no inference.
 
         ``carry_from`` makes the write an append: ``df`` holds only the new
         rows, with the columns and types of version ``carry_from`` (one
@@ -226,24 +223,33 @@ class VersionedCatalog:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(out_dir)
-        if not partition_by:
-            self.fs.write_atomic(os.path.join(out_dir, SCHEMA_FILE), out.schema.json())
+        recorded = out.schema
+        if partition_by:
+            # the schema the read returns: data columns, then the partition
+            # columns typed as written (discovery would narrow a bigint)
+            ordered = StructType(
+                [f for f in recorded.fields if f.name not in partition_by]
+                + [recorded[c] for c in partition_by]
+            )
+            recorded = df.sparkSession.read.schema(ordered).parquet(out_dir).schema
+        self.fs.write_atomic(os.path.join(out_dir, SCHEMA_FILE), recorded.json())
         return physical
 
     def can_append(self, schema: str, physical: str) -> bool:
         """True when ``write_version(carry_from=physical)`` may carry the
-        version: it recorded its schema, so it is an unpartitioned write
-        (module docstring), and fewer than :data:`APPEND_MAX_FILES` of its
-        data files were appended since its last full write. Those are the
-        files outside its largest write (:data:`WRITE_ID_RE`; a file
-        without a write id counts as a write of its own): a full write, of
-        any size, is one write, and each append adds one more. So a version
-        a full write left with many files still takes appends."""
+        version: it recorded its schema (its write finished), it has no
+        partition directory (a partitioned write records one too), and
+        fewer than :data:`APPEND_MAX_FILES` of its data files were appended
+        since its last full write. Those are the files outside its largest
+        write (:data:`WRITE_ID_RE`; a file without a write id counts as a
+        write of its own): a full write, of any size, is one write, and each
+        append adds one more. So a version a full write left with many files
+        still takes appends."""
         names = self.fs.listdir(self.version_dir(schema, physical))
-        if SCHEMA_FILE not in names:
+        if SCHEMA_FILE not in names or any("=" in n for n in names):
             return False
         writes = Counter(
-            (m.group(1) if (m := WRITE_ID_RE.match(n)) else n) for n in names if not _hidden(n)
+            (m.group(1) if (m := WRITE_ID_RE.match(n)) else n) for n in names if not hidden(n)
         )
         appended = sum(writes.values()) - max(writes.values(), default=0)
         return appended < APPEND_MAX_FILES
@@ -303,7 +309,7 @@ class VersionedCatalog:
         """
         pairs = []
         for entry in self.fs.listdir(base_dir):
-            if _hidden(entry):
+            if hidden(entry):
                 continue
             src, dst = os.path.join(base_dir, entry), os.path.join(out_dir, entry)
             if not self.fs.isdir(src):
@@ -313,7 +319,7 @@ class VersionedCatalog:
                 pairs += [
                     (os.path.join(src, f), os.path.join(dst, f))
                     for f in self.fs.listdir(src)
-                    if not _hidden(f)
+                    if not hidden(f)
                 ]
         use_copy = False
         for i, (src, dst) in enumerate(pairs):
@@ -455,8 +461,9 @@ class VersionedCatalog:
     def newest_version(self, schema: str, table: str) -> str | None:
         """The newest loaded version, which ``--switch-only`` publishes. An
         unpublished version whose write did not finish is skipped: one
-        with neither ``_SCHEMA.json``, which an unpartitioned write records
-        last, nor a partition directory (module docstring)."""
+        with neither ``_SCHEMA.json``, which every write records last, nor
+        a partition directory (a partitioned version written by older code
+        has no sidecar; module docstring)."""
         current = self.current_version(schema, table)
         for physical in self.table_versions(schema, table):
             names = self.fs.listdir(self.version_dir(schema, physical))

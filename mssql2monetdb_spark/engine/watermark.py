@@ -25,16 +25,24 @@ job's ``trigger.source`` when set, else the job's own source):
 
 The footer probe answers from the row-group min/max the parquet writer
 recorded (Dremel's metadata-instead-of-scan, VLDB 2020), typed exactly as
-:func:`probe_max` types Spark's answer. The run takes the Spark probe
-instead, and logs why once per job (:class:`FooterFallback`'s message),
-when the source is CSV/JSON/ORC; the path has a URI scheme other than
-``file:``; the table directory has subdirectories (hive partitions); no
-data file is listed or a footer cannot be read; the column is missing,
-nested, quoted or dotted, or matches no or several names under Spark's name
-resolution; its parquet type differs between files; it is INT96, unsigned,
-NANOS or outside bigint/int/smallint/tinyint/date/timestamp; a date or
-timestamp lies before 1900 (where Spark may rebase legacy calendar values);
-or a non-empty row group lacks min/max and is not all-null.
+:func:`probe_max` types Spark's answer. It reads the footers of the run's
+one footer pass over the table (``sources/footers.py:ParquetTable``), which
+the extract's schema and the empty guard's count share, so the probe lists
+and reads no file of its own. The run takes the Spark probe instead, and
+logs why once per job (:class:`FooterFallback`'s message), when the source
+is CSV/JSON/ORC; the footer pass could not read the table: the path has a
+URI scheme other than ``file:``, the table directory has subdirectories
+(hive partitions), no data file is listed or a footer cannot be read (the
+pass's own fallbacks, which send the schema to Spark's inference too); the
+column is missing, nested, quoted or dotted, or matches no or several
+names under Spark's name resolution; its parquet type differs between
+files; it is INT96, unsigned, NANOS or outside
+bigint/int/smallint/tinyint/date/timestamp; a date or timestamp lies
+before 1900 (where Spark may rebase legacy calendar values); or a
+non-empty row group lacks min/max and is not all-null. A table whose
+schema alone falls back (a listed summary file, footers whose schemas
+differ, ``mergeSchema``) keeps the footer probe: it reads only the data
+files, and checks the column's type in each.
 
 State is persisted ONLY after a fully successful run
 (``CopyTool.java:305-309``) — a failed run re-processes.
@@ -47,12 +55,12 @@ import logging
 import os
 from dataclasses import dataclass
 from datetime import date, datetime
-from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DateType, TimestampNTZType, TimestampType
 
+from ..sources.footers import FooterFallback, ParquetTable
 from ..sources.jdbc import identifier_ladder, pushed_query
 from .fs import LocalFS
 
@@ -115,44 +123,10 @@ def probe_max(df: DataFrame, column: str) -> Watermark | None:
     return _typed_watermark(row["m"], column)
 
 
-class FooterFallback(Exception):
-    """The parquet footers cannot give :func:`probe_max`'s exact answer; the
-    message says why. The caller probes with Spark instead."""
-
-
 #: 1900-01-01 in days and in microseconds since the epoch: older values may
 #: be rebased from the legacy hybrid calendar on read, which footers don't see
 _OLDEST_DAY = -25567
 _OLDEST_MICROS = _OLDEST_DAY * 86_400_000_000
-
-
-def _hidden(name: str) -> bool:
-    """Spark's listing filter (``HadoopFSUtils.shouldFilterOutPathName``):
-    metadata, hidden and in-flight names are not data."""
-    return (
-        (name.startswith("_") and "=" not in name)
-        or name.startswith(".")
-        or name.endswith("._COPYING_")
-    )
-
-
-def _data_files(path: str) -> list[str]:
-    """The data files ``spark.read.parquet(path)`` would read."""
-    uri = urlparse(path)
-    if uri.scheme not in ("", "file") or uri.netloc not in ("", "localhost"):
-        raise FooterFallback(f"{path} is not a local path")
-    local = uri.path if uri.scheme else path
-    if os.path.isfile(local):
-        return [local]
-    try:
-        entries = [e for e in os.scandir(local) if not _hidden(e.name)]
-    except OSError as exc:
-        raise FooterFallback(f"cannot list {local}: {exc}") from exc
-    if any(e.is_dir() for e in entries):
-        raise FooterFallback(f"{local} has subdirectories (hive partitions)")
-    if not entries:
-        raise FooterFallback(f"{local} holds no data file")
-    return sorted(e.path for e in entries)
 
 
 def _footer_kind(col, infer_ntz: bool) -> tuple[str, int]:
@@ -180,10 +154,11 @@ def _footer_kind(col, infer_ntz: bool) -> tuple[str, int]:
 
 
 def probe_max_footer(
-    path: str, column: str, *, case_sensitive: bool = False, infer_ntz: bool = True
+    table: ParquetTable, column: str, *, case_sensitive: bool = False, infer_ntz: bool = True
 ) -> Watermark | None:
-    """:func:`probe_max` of ``spark.read.parquet(path)`` from the files'
-    row-group statistics — the files' footers, no data read and no Spark job.
+    """:func:`probe_max` of ``spark.read.parquet(table.path)`` from the
+    files' row-group statistics — the footers of the run's one footer pass
+    ``table``, no data read and no Spark job.
 
     ``case_sensitive`` and ``infer_ntz`` mirror the session's
     ``spark.sql.caseSensitive`` and
@@ -191,18 +166,16 @@ def probe_max_footer(
     :class:`FooterFallback` whenever the footers cannot give Spark's exact
     answer (the cases are listed in the module docstring)."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     if "." in column or "`" in column:
         raise FooterFallback(f"{column!r} is not a plain column name")
     key = column if case_sensitive else column.lower()
     signature = None
     lo = hi = None
-    for f in _data_files(path):
+    for f, md in table.probe_footers():
         try:
-            md = pq.read_metadata(f)
             names = md.schema.to_arrow_schema().names
-        except (OSError, pa.ArrowException) as exc:
+        except pa.ArrowException as exc:
             raise FooterFallback(f"unreadable footer {f}: {exc}") from exc
         matches = [n for n in names if (n if case_sensitive else n.lower()) == key]
         if len(matches) != 1:

@@ -182,6 +182,8 @@ _SPARK_TO_DERBY = {
     T.BinaryType(): "BLOB",
     T.DateType(): "DATE",
     T.TimestampType(): "TIMESTAMP",
+    # Derby's TIMESTAMP has no zone: it stores the staged wall-clock value
+    T.TimestampNTZType(): "TIMESTAMP",
 }
 
 
@@ -189,7 +191,8 @@ _SPARK_TO_DERBY = {
 #: column created with it. NOT the inverse of ``_SPARK_TO_DERBY``: Spark's
 #: JdbcUtils maps java.sql.Types.SMALLINT to IntegerType, so a ShortType /
 #: ByteType column written as SMALLINT reads back widened (verified live on
-#: embedded Derby). Schema verify/evolve must compare through this map or
+#: embedded Derby), and a TimestampNTZType column written as TIMESTAMP reads
+#: back as TimestampType. Schema verify/evolve must compare through this map or
 #: every post-publish export of a short/byte column false-positives as a
 #: retype (the reference never type-checks at all — MonetDBUtil.java:367-369
 #: declares it a TODO — so "equivalent modulo the sink round-trip" is the

@@ -213,6 +213,7 @@ BULK_CSV_OPTIONS = {
     "quote": '"',
     "escape": '"',
     "timestampFormat": "yyyy-MM-dd HH:mm:ss.SSSSSS",
+    "timestampNTZFormat": "yyyy-MM-dd HH:mm:ss.SSSSSS",
     "dateFormat": "yyyy-MM-dd",
 }
 
@@ -262,7 +263,7 @@ def monetdb_staged_frame(df: DataFrame) -> DataFrame:
         col = F.col(f.name)
         if isinstance(f.dataType, T.BinaryType):
             rendered = F.hex(col)
-        elif isinstance(f.dataType, T.TimestampType):
+        elif isinstance(f.dataType, (T.TimestampType, T.TimestampNTZType)):
             rendered = F.date_format(col, "yyyy-MM-dd HH:mm:ss.SSSSSS")
         elif isinstance(f.dataType, T.DateType):
             rendered = F.date_format(col, "yyyy-MM-dd")

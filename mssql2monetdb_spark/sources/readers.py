@@ -13,6 +13,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config.spec import CopyJob, SourceSpec
+from .footers import ParquetTable
 from .jdbc import jdbc_reader
 
 #: Reference CSV conventions (CopyTool.java:50 NULL sentinel; 716-722 escaping)
@@ -29,7 +30,7 @@ def read_source(
     spark: SparkSession,
     source: SourceSpec,
     job: CopyJob,
-    resolved: dict[str, DataFrame] | None = None,
+    resolved: dict[str, ParquetTable | DataFrame] | None = None,
 ) -> DataFrame:
     """Extract phase: produce the source DataFrame for a copy job.
 
@@ -40,7 +41,7 @@ def read_source(
     ``CopyToolConfig.java:856-867``; we ARE the query engine).
     JDBC sources: partitioned reads via the options builder in ``jdbc.py``.
 
-    ``resolved`` is a per-run memo of table-file path -> DataFrame (see
+    ``resolved`` is a per-run memo of table-file path -> resolution (see
     :func:`_read_table_file`); ``None`` resolves every path afresh.
     """
     mode, payload = job.select_source()
@@ -59,17 +60,40 @@ def read_source(
     return spark.sql(payload)
 
 
+def resolve_parquet(
+    source: SourceSpec,
+    table: str,
+    resolved: dict[str, ParquetTable | DataFrame] | None = None,
+) -> ParquetTable:
+    """The run's record of the parquet table file ``table``: one footer
+    pass (``sources/footers.py``), kept in ``resolved`` so the trigger
+    probe, the extract, view registration and the empty guard share it."""
+    path = os.path.join(source.path, f"{table}.parquet")
+    if resolved is not None and path in resolved:
+        return resolved[path]
+    record = ParquetTable(path)
+    if resolved is not None:
+        resolved[path] = record
+    return record
+
+
 def _read_table_file(
     spark: SparkSession,
     source: SourceSpec,
     table: str,
-    resolved: dict[str, DataFrame] | None = None,
+    resolved: dict[str, ParquetTable | DataFrame] | None = None,
 ) -> DataFrame:
-    """Resolve one table file. Resolving lists the files and infers the
-    schema — for parquet a footer-reading Spark job. With ``resolved`` the
-    first resolution of a path is kept and returned on every later call,
-    so one copy run lists and infers each source once and all of its reads
-    (trigger probe, extract, view registration) see the same files."""
+    """Resolve one table file. A parquet table reads through its
+    :func:`resolve_parquet` record: the schema from its footers, no Spark
+    job, unless the record falls back to Spark's inference. The other
+    formats list the files and infer the schema as they are read. With
+    ``resolved`` the first resolution of a path is kept and returned on
+    every later call, so one copy run lists and resolves each source once
+    and all of its reads (trigger probe, extract, view registration, empty
+    guard) see the same files: ``resolved`` maps a parquet path to its
+    record and any other path to its frame."""
+    if source.format == "parquet":
+        return resolve_parquet(source, table, resolved).read(spark)
     path = os.path.join(source.path, f"{table}.{source.format}")
     if resolved is not None and path in resolved:
         return resolved[path]
@@ -77,10 +101,8 @@ def _read_table_file(
         df = spark.read.options(**CSV_OPTIONS, inferSchema="true").csv(path)
     elif source.format == "json":
         df = spark.read.json(path)  # JSON-lines
-    elif source.format == "orc":
-        df = spark.read.orc(path)
     else:
-        df = spark.read.parquet(path)
+        df = spark.read.orc(path)
     if resolved is not None:
         resolved[path] = df
     return df
@@ -89,7 +111,7 @@ def _read_table_file(
 def register_source_views(
     spark: SparkSession,
     source: SourceSpec,
-    resolved: dict[str, DataFrame] | None = None,
+    resolved: dict[str, ParquetTable | DataFrame] | None = None,
 ) -> None:
     """(Re-)register every table file in a file source dir as a temp view.
 

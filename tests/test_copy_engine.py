@@ -974,8 +974,8 @@ def _typed_frame(spark):
 def test_recorded_schema_matches_inference(spark, tmp_path):
     """``read_version`` with the ``_SCHEMA.json`` sidecar must give exactly
     the schema (and rows) that footer inference gives, for plain, sorted and
-    z-ordered writes; a version without the sidecar still reads; partitioned
-    writes record none."""
+    z-ordered writes; a version without the sidecar still reads; a
+    partitioned write records the schema its read returns."""
     import os
 
     from mssql2monetdb_spark.engine.publish import SCHEMA_FILE
@@ -1008,8 +1008,11 @@ def test_recorded_schema_matches_inference(spark, tmp_path):
 
     part = cat.write_version(df, "default", "part", datetime(2024, 1, 1), partition_by=["grp"])
     d = cat.version_dir("default", part)
-    assert not os.path.exists(os.path.join(d, SCHEMA_FILE))
-    assert cat.read_version(spark, "default", part).count() == 40
+    got = cat.read_version(spark, "default", part)
+    with open(os.path.join(d, SCHEMA_FILE)) as fh:
+        assert fh.read() == got.schema.json()
+    assert got.columns == [c for c in df.columns if c != "grp"] + ["grp"]
+    assert got.count() == 40
 
 
 def _jobs_in_group(spark, group, fn):
@@ -2061,3 +2064,170 @@ def test_pooled_loads_equal_sequential_loads(spark, tmp_path, monkeypatch, caplo
     assert published[1] == published[4]
     assert len(published[4]["orders"][0]) == 1500
     assert "degraded to INSERT" not in caplog.text
+
+
+# -- sources resolved from one footer pass -------------------------------------
+
+
+def _summarised_table(path, n):
+    """A pyarrow-written table of ``n`` rows whose ``_metadata`` summary
+    repeats its data file's row groups, as ``pyarrow.parquet.write_metadata``
+    and older Hadoop writers leave it."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(path)
+    t = pa.table({"k": pa.array(range(n), pa.int64()), "v": pa.array([i * 2 for i in range(n)])})
+    collector = []
+    pq.write_table(t, os.path.join(path, "part-0.parquet"), metadata_collector=collector)
+    collector[0].set_file_path("part-0.parquet")
+    pq.write_metadata(t.schema, os.path.join(path, "_metadata"), metadata_collector=collector)
+
+
+def test_summary_file_rows_are_not_counted(spark, tmp_path):
+    """Spark lists a ``_metadata`` summary beside the data files, but reads
+    no rows from it: the empty guard counts the data files only, and the
+    run publishes every row once."""
+    src = tmp_path / "src"
+    _summarised_table(str(src / "t.parquet"), 100)
+    engine = CopyEngine(spark, make_spec(tmp_path, {"t": {"from_table": "t"}}, sources={
+        "_default": {"format": "parquet", "path": str(src)}}))
+    resolved = {}
+    job = engine.spec.jobs["t"]
+    df = engine._extract(job, resolved)
+    assert engine.count_source(job, df, resolved) == df.count() == 100
+    engine.do_copy(load_date=datetime(2024, 1, 1))
+    assert engine.sql("SELECT COUNT(*) AS n FROM t").collect()[0]["n"] == 100
+
+
+def test_fresh_tick_runs_one_spark_job(spark, tmp_path):
+    """A fresh incremental tick of a local parquet source runs one Spark
+    job, its write: the probe, the schema and the empty guard come from
+    the footers."""
+    import uuid
+
+    engine, src = _polled_engine(spark, tmp_path)
+    _append_rows(spark, str(src / "a.parquet"), 20, 25)
+    codes = []
+    jobs = _jobs_in_group(
+        spark, f"fresh-{uuid.uuid4()}", lambda: codes.append(engine.run(load_date=datetime(2024, 1, 2)))
+    )
+    assert codes == [EXIT_OK]
+    assert len(jobs) == 1
+    got = _rows(spark, engine.catalog, "a")
+    assert [r["seq"] for r in got] == list(range(25))
+
+
+def test_sources_are_read_with_their_footer_schema(spark, tmp_path, monkeypatch):
+    """Two table jobs and a query-mode job over the same directory: each
+    source is read once, with a schema handed to the reader, so no Spark
+    job infers one."""
+    src = tmp_path / "src"
+    spark.range(0, 30).selectExpr("id AS k", "id % 5 AS g").write.parquet(str(src / "t.parquet"))
+    spark.range(0, 5).selectExpr("id AS g", "CAST(id AS STRING) AS name").write.parquet(
+        str(src / "u.parquet")
+    )
+    spec = load_spec(
+        {
+            "warehouse_dir": str(tmp_path / "wh"),
+            "sources": {"_default": {"format": "parquet", "path": str(src)}},
+            "tables": {
+                "t_job": {"from_table": "t"},
+                "u_job": {"from_table": "u"},
+                "q_job": {
+                    "from_table": None,
+                    "from_query": "SELECT u.name, COUNT(*) AS n FROM t JOIN u ON t.g = u.g GROUP BY u.name",
+                    "count_query": "SELECT COUNT(DISTINCT g) FROM t",
+                    "to_table": "by_name",
+                },
+            },
+        }
+    )
+    from pyspark.sql.readwriter import DataFrameReader
+
+    real_schema, real_parquet = DataFrameReader.schema, DataFrameReader.parquet
+    reads = []
+
+    def schema(self, s):
+        self.given = True
+        return real_schema(self, s)
+
+    def parquet(self, *paths, **options):
+        reads.extend((p, getattr(self, "given", False)) for p in paths if p.startswith(str(src)))
+        return real_parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "schema", schema)
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    engine = CopyEngine(spark, spec)
+    engine.do_copy(load_date=datetime(2024, 1, 1))
+    monkeypatch.undo()
+    assert sorted(reads) == [(str(src / "t.parquet"), True), (str(src / "u.parquet"), True)]
+    assert engine.sql("SELECT SUM(n) AS s FROM by_name").collect()[0]["s"] == 30
+    assert engine.sql("SELECT COUNT(*) AS n FROM u").collect()[0]["n"] == 5
+
+
+def test_footer_resolution_loads_what_inference_loads(spark, tmp_path, monkeypatch):
+    """Old-vs-new: the append sequence's sources (a NULL trigger, a column
+    carrying field metadata, then a delta without it) publish the same
+    rows, schema bytes and appends whether each source takes its schema
+    from the footers or from Spark's inference."""
+    from mssql2monetdb_spark.sources.footers import ParquetTable
+
+    from_footers = _incremental_sequence(spark, tmp_path / "footers")
+    real_scan = ParquetTable._scan
+
+    def inferring_scan(self):
+        real_scan(self)
+        self.fallback = self.fallback or "inference, for comparison"
+
+    monkeypatch.setattr(ParquetTable, "_scan", inferring_scan)
+    inferred = _incremental_sequence(spark, tmp_path / "inferred")
+    assert from_footers == inferred
+
+
+def test_partition_by_bigint_column_takes_two_ticks(spark, tmp_path):
+    """A ``partition_by`` job on a bigint column: the partitioned version
+    records its schema, so its partition column reads back bigint, not the
+    int partition discovery gives small values, and the next ticks evolve
+    without a retype error."""
+    import os
+
+    from mssql2monetdb_spark.engine.publish import SCHEMA_FILE
+
+    path = str(tmp_path / "src" / "ev.parquet")
+
+    def write(lo, hi):
+        spark.range(lo, hi).selectExpr("id AS seq", "id % 3 AS g").write.mode("append").parquet(path)
+
+    write(0, 30)
+    engine = CopyEngine(
+        spark,
+        load_spec(
+            {
+                "warehouse_dir": str(tmp_path / "wh"),
+                "state_dir": str(tmp_path / "state"),
+                "sources": {"_default": {"format": "parquet", "path": str(tmp_path / "src")}},
+                "tables": {
+                    "ev": {
+                        "from_table": "ev",
+                        "trigger": {"column": "seq"},
+                        "incremental": True,
+                        "partition_by": ["g"],
+                    }
+                },
+            }
+        ),
+    )
+    assert engine.run(load_date=datetime(2024, 1, 1)) == EXIT_OK
+    for day, (lo, hi) in ((2, (30, 36)), (3, (36, 40))):
+        write(lo, hi)
+        assert engine.run(load_date=datetime(2024, 1, day)) == EXIT_OK
+    cat = engine.catalog
+    current = cat.current_version("default", "ev")
+    assert os.path.exists(os.path.join(cat.version_dir("default", current), SCHEMA_FILE))
+    assert not cat.can_append("default", current)
+    got = cat.table_at(spark, "default", "ev")
+    assert dict(got.dtypes)["g"] == "bigint"
+    assert sorted((r["seq"], r["g"]) for r in got.collect()) == [(i, i % 3) for i in range(40)]

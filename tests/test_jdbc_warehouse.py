@@ -928,3 +928,61 @@ def test_pooled_sink_loads_equal_sequential_loads(spark, tmp_path, monkeypatch, 
     assert len(rows[4]["orders"]) == 1500 and len(rows[4]["customer"]) == 150
     assert overlaps and max(overlaps) == 1
     assert "degraded to INSERT" not in caplog.text
+
+
+def test_summary_file_rows_are_not_counted_on_the_sink(spark, tmp_path, caplog):
+    """The empty guard's count is the bulk loader's ``expected_count``: a
+    ``_metadata`` summary beside the data files must not double it, or the
+    import's count check fails and the load degrades to INSERT."""
+    import logging
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mssql2monetdb_spark.engine.copy import CopyEngine
+
+    caplog.set_level(logging.WARNING)
+    path = tmp_path / "src" / "t.parquet"
+    os.makedirs(path)
+    t = pa.table({"k": pa.array(range(100), pa.int64())})
+    collector = []
+    pq.write_table(t, str(path / "part-0.parquet"), metadata_collector=collector)
+    collector[0].set_file_path("part-0.parquet")
+    pq.write_metadata(t.schema, str(path / "_metadata"), metadata_collector=collector)
+    tables = {"t_job": {"source": "src", "from_table": "t", "to_table": "t"}}
+    engine = CopyEngine(spark, _derby_sink_spec(tmp_path, "summary", tables, tmp_path / "src"))
+    engine.do_copy(load_date=datetime(2024, 6, 1))
+    assert engine.table("t").count() == 100
+    assert "degraded to INSERT" not in caplog.text
+
+
+def test_ntz_timestamps_round_trip_through_a_derby_sink(spark, tmp_path, caplog):
+    """A ``timestamp_ntz`` column lands in Derby's zoneless TIMESTAMP with
+    its wall-clock values, and the next load evolves against the
+    read-back TIMESTAMP without a retype error."""
+    import logging
+
+    from pyspark.sql import functions as F
+
+    from mssql2monetdb_spark.engine.copy import CopyEngine
+
+    caplog.set_level(logging.WARNING)
+    src = tmp_path / "src"
+    frame = spark.range(0, 6).select(
+        "id",
+        F.make_timestamp_ntz(
+            F.lit(2024), F.lit(3), F.lit(10), F.col("id") * 4, F.lit(30), F.col("id") + F.lit(0.123456)
+        ).alias("ts"),
+    )
+    frame.write.parquet(str(src / "ev.parquet"))
+    wall = lambda df: sorted(  # noqa: E731
+        df.select("id", F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("w")).collect()
+    )
+    tables = {"ev_job": {"source": "src", "from_table": "ev", "to_table": "ev"}}
+    engine = CopyEngine(spark, _derby_sink_spec(tmp_path, "ntz", tables, src))
+    for day in (1, 2):
+        engine.do_copy(load_date=datetime(2024, 6, day))
+        assert wall(engine.table("ev")) == wall(frame)
+    assert len(engine.warehouse.table_versions("ev")) == 2
+    assert "degraded to INSERT" not in caplog.text

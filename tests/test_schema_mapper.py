@@ -179,3 +179,18 @@ def test_derby_readback_lattice_and_equivalence():
     assert not equivalent_in_derby(T.IntegerType(), T.LongType())
     # unmappable incoming types are a rejection, not a crash
     assert not equivalent_in_derby(T.IntegerType(), T.ArrayType(T.LongType()))
+
+
+def test_derby_maps_timestamp_ntz():
+    """Derby's TIMESTAMP is zoneless: an NTZ column lands there and reads
+    back as the JDBC reader's TimestampType, which is no retype."""
+    from mssql2monetdb_spark.schema.mapper import (
+        derby_readback_type,
+        equivalent_in_derby,
+        spark_schema_to_derby_ddl,
+    )
+
+    ntz = T.StructType([T.StructField("ts", T.TimestampNTZType())])
+    assert spark_schema_to_derby_ddl(ntz) == '"ts" TIMESTAMP'
+    assert derby_readback_type(T.TimestampNTZType()) == T.TimestampType()
+    assert equivalent_in_derby(T.TimestampType(), T.TimestampNTZType())

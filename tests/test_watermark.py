@@ -19,6 +19,7 @@ from mssql2monetdb_spark.engine.watermark import (
     probe_max,
     probe_max_footer,
 )
+from mssql2monetdb_spark.sources.footers import ParquetTable
 
 
 def test_probe_types(spark):
@@ -223,7 +224,7 @@ def test_footer_probe_equals_spark_probe_or_falls_back(
         _KINDS[kind][2] and (has_value or kind != "old_date")
     )
     try:
-        got = probe_max_footer(str(d), table["probe"])
+        got = probe_max_footer(ParquetTable(str(d)), table["probe"])
     except FooterFallback:
         assert must_fall_back, table
         return
@@ -262,7 +263,9 @@ def test_footer_probe_falls_back_where_footers_cannot_answer(tmp_path):
     ]
     for path, column, reason in cases:
         with pytest.raises(FooterFallback, match=reason):
-            probe_max_footer(path, column)
+            probe_max_footer(ParquetTable(path), column)
     # a case-sensitive session tells SEQ from seq; file: URIs are local
-    assert probe_max_footer(twice, "SEQ", case_sensitive=True) == Watermark(2, "bigint")
-    assert probe_max_footer(f"file://{mixed}/part-0.parquet", "seq") == Watermark(1, "bigint")
+    got = probe_max_footer(ParquetTable(twice), "SEQ", case_sensitive=True)
+    assert got == Watermark(2, "bigint")
+    got = probe_max_footer(ParquetTable(f"file://{mixed}/part-0.parquet"), "seq")
+    assert got == Watermark(1, "bigint")
